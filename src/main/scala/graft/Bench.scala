@@ -89,35 +89,19 @@ object Bench {
     // TWO reps (rep_times in the artifact show it), and a median of 3
     // lands on a warming rep.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // queries that persist intermediates (singleScan postings, ML
-      // frames) would otherwise accumulate cache across 85 queries × N
-      // reps and inflate later entries with GC pressure; eviction is
-      // untimed — each rep recomputes from parquet anyway
-      Caches.release()
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      dt
-    }
     // optional args = subset of query names (iteration aid; the
     // harness passes none)
     val only = args.toSet
     val catalog = if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(only).toMap
     val gc0 = gcSec(); val jit0 = jitSec()
-    // untimed burn-in rep per query: heavyweight-codegen queries'
-    // first rep is dominated by compile/JIT warm-up (r5 artifact:
-    // q110 reps declined 7.4s -> 1.3s), so a median over reps that
-    // INCLUDE rep 1 still sits on warm-up. Rep 0 runs and is
-    // discarded; the N timed reps start warm.
-    val allReps = catalog.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        time(fn) // burn-in, discarded
-        name -> (1 to reps).map(_ => time(fn))
-    }
+    val outcomes = catalog.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> timeReps(spark, sfDir, fn, reps) }
+    // a query that throws is FAILED: listed by name, never timed, and
+    // kept out of the totals
+    val failed = outcomes.collect { case (n, Left(e)) =>
+      System.err.println(s"[bench] $n FAILED: $e"); n }
+    val allReps = outcomes.collect { case (n, Right(ts)) => n -> ts }
     val results = allReps.map { case (n, ts) =>
       n -> ts.sorted.apply(ts.length / 2) }
     val gcRun = gcSec() - gc0; val jitRun = jitSec() - jit0
@@ -175,15 +159,16 @@ object Bench {
         "\"" + k + "\":[" + ts.map(f3).mkString(",") + "]" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","reps":$reps,"conditions":$cond,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","reps":$reps,"conditions":$cond,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     // subset runs (iteration aid) must not clobber the full-catalog
     // artifact the driver ingests
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (only.isEmpty) "/root/repo/BENCH_FULL.json"
       else "/tmp/bench_subset.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"conditions":$cond,"queries":$qsFull,"rep_times":$repsFull,"sf":"$sfDir"}""" + "\n")
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"conditions":$cond,"queries":$qsFull,"rep_times":$repsFull,"failed":$failedJson,"sf":"$sfDir"}""" + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outFile: $e") }
     // stop BEFORE printing: Spark shutdown logs after a println would
@@ -211,8 +196,39 @@ object Bench {
     // compact FINAL line: everything except the per-query map (which
     // cannot fit — 395 entries is ~4.5 KB against a 2000-char window).
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec",""" +
-      s""""reps":$reps,"n_queries":${results.size},""" +
+      s""""reps":$reps,"n_queries":${results.size},"failed":$failedJson,""" +
       s""""conditions":$cond,"per_query_parts":${parts.size},""" +
       s""""per_query_file":"$outFile","sf":"$sfDir"}""")
   }
+
+  /** One run of a catalog query: Right(seconds), or Left(the error)
+    * when it throws — a query that fails is reported as failed, never
+    * timed as a (fast) success. Pins and cached frames are released
+    * either way, untimed: queries that persist intermediates would
+    * otherwise accumulate cache across the catalog × reps and inflate
+    * later entries with GC pressure, and each rep recomputes from
+    * parquet anyway.
+    */
+  def time(spark: SparkSession, sfDir: String, fn: QH.QFn)
+      : Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    val r = try Right(fn(spark, sfDir).count())
+      catch { case e: Throwable => Left(e) }
+    val dt = (System.nanoTime() - t0) / 1e9
+    Caches.release()
+    try spark.catalog.clearCache() catch { case _: Throwable => }
+    r.map(_ => dt)
+  }
+
+  /** An untimed burn-in run, then `reps` timed runs of one query; the
+    * first failure ends it (Left). Heavyweight-codegen queries' first
+    * rep is dominated by compile/JIT warm-up (r5 artifact: q110 reps
+    * declined 7.4s -> 1.3s), so a median over reps that INCLUDE rep 1
+    * would still sit on warm-up.
+    */
+  def timeReps(spark: SparkSession, sfDir: String, fn: QH.QFn,
+      reps: Int): Either[Throwable, Seq[Double]] =
+    (0 to reps).foldLeft[Either[Throwable, Seq[Double]]](Right(Nil)) {
+      (acc, _) => acc.flatMap(ts => time(spark, sfDir, fn).map(ts :+ _))
+    }.map(_.tail)
 }

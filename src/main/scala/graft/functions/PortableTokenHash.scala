@@ -14,22 +14,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * splits, CDC chunk boundaries) and that DuckDB oracles recompute as
   * `list_reduce(list_prepend(0, codes), ...)`.
   *
-  * Third rung of the kernel's ladder, same math at every step
-  * ([[graft.llmdata.Dedup.portableTokenHash]] Column form = the
-  * cross-engine definition of record;
-  * [[graft.llmdata.Dedup.portableTokenHashFast]] tight-loop UDF
-  * killed the per-character interpreter round-trip of the
-  * higher-order expression — measured 16-40x): an Expression operates
-  * on UTF8String BYTES directly (no String materialization, no UDF
-  * conversion wrapper) and participates in WHOLE-STAGE CODEGEN via
-  * doGenCode, so the fold inlines into the surrounding operator
-  * instead of breaking the codegen span the way a UDF call does.
-  * SURVEY §4.2 preference order (b).
+  * Same math as [[graft.llmdata.Dedup.portableTokenHash]], the
+  * Column form that stays the cross-engine definition of record but
+  * pays an interpreter round-trip per CHARACTER (a compiled loop
+  * measured 16-40x faster). This Expression operates on UTF8String
+  * BYTES directly (no String materialization, no UDF conversion
+  * wrapper) and participates in WHOLE-STAGE CODEGEN via doGenCode, so
+  * the fold inlines into the surrounding operator instead of breaking
+  * the codegen span the way a UDF call does. SURVEY §4.2 preference
+  * order (b).
   *
   * The byte walk decodes UTF-8 to Unicode code points inline
   * (1-4 byte sequences; Spark strings are always valid UTF-8), which
   * is exactly `String.codePointAt` including supplementary planes —
-  * parity with both earlier rungs is spec-pinned over adversarial
+  * parity with the Column form is spec-pinned over adversarial
   * strings. acc < 1e9+7 and code points < 2^21, so the fold never
   * overflows int64.
   */

@@ -1023,36 +1023,6 @@ object Dedup {
     aggregate(split(tok, ""), lit(0L),
       (acc, ch) => pmod(acc * 31L + ascii(ch), lit(1000000007L)))
 
-  /** Tight-loop twin of [[portableTokenHash]] — the DEFINITION stays
-    * the Column form above (it documents the cross-engine contract
-    * and the oracle SQL mirrors it); this UDF computes the identical
-    * fold as one code-point loop. Spark evaluates higher-order-
-    * function lambdas by interpreting the expression tree once per
-    * element, so the Column form costs an interpreter round-trip per
-    * CHARACTER of the corpus — the same measured 16-40x pathology as
-    * [[shingles]]. `split(tok, "")` splits on code-point boundaries
-    * and `ascii` yields the full code point (not the first byte), so
-    * the loop walks code points; acc stays < 1e9+7 and code points
-    * < 2^21, so the fold never overflows int64 and % == pmod.
-    * Parity with the Column form is pinned by a spec over
-    * adversarial strings. Null -> null, like the expression.
-    */
-  val portableTokenHashFast:
-      org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (s: String) =>
-      if (s == null) null.asInstanceOf[java.lang.Long]
-      else {
-        var acc = 0L
-        var i = 0
-        while (i < s.length) {
-          val cp = s.codePointAt(i)
-          acc = (acc * 31L + cp) % 1000000007L
-          i += Character.charCount(cp)
-        }
-        java.lang.Long.valueOf(acc)
-      }
-    }
-
   /** Content-defined chunking (the Rabin/CDC idea on token streams):
     * a token whose [[portableTokenHash]] is 0 mod `modulus` ENDS a
     * chunk, so chunk boundaries are a pure function of content —

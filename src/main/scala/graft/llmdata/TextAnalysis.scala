@@ -1093,57 +1093,36 @@ object TextAnalysis {
 
   /** Winnowing SIMILARITY report — the MOSS use of the fingerprints:
     * document pairs sharing >= `minShared` selected fingerprints
-    * (same hash value, any position). Fingerprint values group,
-    * per-value doc lists pair (a < b) — candidate fan-out quadratic
-    * only in docs-per-fingerprint, census-guarded by `maxPerFp`
-    * before the join runs (the LSH-band rule; a fingerprint shared
-    * by half the corpus is boilerplate, not evidence). Exact integer
-    * counts.
+    * (same hash value, any position), through the
+    * [[graft.ops.PairCensus]] kernel keyed by fingerprint value —
+    * candidate fan-out quadratic only in docs-per-fingerprint,
+    * census-guarded by `maxPerFp` before the join runs (the LSH-band
+    * rule; a fingerprint shared by half the corpus is boilerplate,
+    * not evidence). Exact integer counts.
+    *
+    * BOILERPLATE STRIP (what MOSS calls the common-code filter): with
+    * `maxDocPermille` > 0, a fingerprint present in more than
+    * maxDocPermille/1000 of the docs is a shared template phrase, not
+    * copying evidence — and it is exactly what makes the pair stage
+    * quadratic. It is a key filter on the census degree, applied
+    * before the guard; the integer cross-multiplied threshold makes
+    * the kept set replay exactly.
     */
   def winnowSimilarity(df: DataFrame, docId: String, text: String,
       k: Int, w: Int, minShared: Long, maxPerFp: Int = 1000,
       maxDocPermille: Int = 0): DataFrame = {
-    require(minShared >= 1, s"winnowSimilarity: minShared $minShared")
     require(maxDocPermille >= 0 && maxDocPermille <= 1000,
       s"winnowSimilarity: maxDocPermille $maxDocPermille")
     val all = graft.Caches.pin(
       winnowFingerprints(df, docId, text, k, w)
-        .select(col(docId), col("fp")).distinct())
-    // ONE pinned fp-frequency census serves the boilerplate strip
-    // AND the hub guard (r15): the guard used to re-run the
-    // anti-join + a second full frequency aggregate as a separate
-    // action. Census is distinct-fp-bounded.
-    val census = graft.Caches.pin(all.groupBy(col("fp"))
-      .agg(count(lit(1)).as("__df")))
-    // BOILERPLATE STRIP (what MOSS calls the common-code filter): a
-    // fingerprint present in more than maxDocPermille/1000 of the
-    // docs is a shared template phrase, not copying evidence — and
-    // it is exactly what makes the pair stage quadratic. Integer
-    // cross-multiplied threshold so the kept set replays exactly.
-    val keptCensus = if (maxDocPermille == 0) census else {
-      val nDocs = all.select(col(docId)).distinct().count()
-      census.where(col("__df") * 1000 <= lit(maxDocPermille) * lit(nDocs))
+        .select(col(docId).as("member"), col("fp").as("key")).distinct())
+    val strip = if (maxDocPermille == 0) None else {
+      val nDocs = all.select(col("member")).distinct().count()
+      Some((d: Column) => d * 1000 <= lit(maxDocPermille) * lit(nDocs))
     }
-    if (maxPerFp > 0) {
-      val worst = keptCensus.agg(coalesce(max(col("__df")), lit(0L)))
-        .first().getLong(0)
-      require(worst <= maxPerFp,
-        s"winnowSimilarity: a fingerprint occurs in $worst docs " +
-          s"(> $maxPerFp) — boilerplate; strip it or raise the cap")
-    }
-    val fps = if (maxDocPermille == 0) all
-      else all.join(keptCensus.select(col("fp")), Seq("fp"),
-        "left_semi")
-    val a = fps.select(col("fp"), col(docId).as("doc_a"))
-    val b = fps.select(col("fp"), col(docId).as("doc_b"))
-    a.join(b, Seq("fp"))
-      .where(col("doc_a") < col("doc_b"))
-      // rebalance off the fp-skewed join partitioning before the
-      // near-unique-key pair count (the q251 lesson, guide §2.5)
-      .repartition(col("doc_a"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .where(col("n_shared") >= minShared)
+    graft.ops.PairCensus("winnowSimilarity", all, minShared, maxPerFp,
+        remedy = "strip boilerplate (maxDocPermille)", keep = strip)
+      .toDF("doc_a", "doc_b", "n_shared")
   }
 
   /** Rolling polynomial hash (Rabin-Karp style) of the normalized

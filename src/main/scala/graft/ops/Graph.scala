@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics on DataFrames — the Pregel shape
@@ -314,95 +314,48 @@ object Graph {
   /** COMMON-NEIGHBORS link prediction over an adjacency list
     * (node, nbr): candidate pairs sharing >= `minCommon` neighbors
     * that are NOT already adjacent, scored by the shared count —
-    * the baseline every link-prediction paper starts from. Wedge
-    * join through the neighbor (fan-out quadratic ONLY in per-
-    * neighbor degree), pair count, anti-join against the existing
-    * adjacency. Exact integers throughout.
+    * the baseline every link-prediction paper starts from. The
+    * [[PairCensus]] wedge join through the neighbor (fan-out
+    * quadratic ONLY in per-neighbor degree), then an anti-join
+    * against the existing adjacency. Exact integers throughout.
     *
-    * Hub policy (`maxDegree` + `hubPolicy`):
+    * Hub policy (`maxDegree` + `hubPolicy`, the [[PairCensus]]
+    * policies):
     *   - "refuse" (default): a neighbor whose degree exceeds the
     *     cap REFUSES the query before the wedge join runs (the
     *     fuzzyMatch census rule).
-    *   - "drop": hubs past the cap are DROPPED — the Adamic-Adar /
-    *     resource-allocation hub-discount taken to its limit (a
-    *     neighbor shared by everyone certifies a link by ~1/ln(deg)
-    *     ≈ nothing). Degree filter co-partitioned with the wedge
-    *     join (same `nbr` key — no driver census action).
-    *   - "sample": every neighbor keeps its `maxDegree` lowest
-    *     nodes by the portable node hash (row_number ≤ cap —
-    *     WindowGroupLimit, no full per-hub sort) — COORDINATED
-    *     sampling: all hubs keep the same low-hash nodes, so pairs
-    *     of surviving nodes retain ALL their shared hubs (the
-    *     MinHash coordination idea), where independent per-hub
-    *     draws would shred pair structure. Wedge cost becomes
-    *     SCALE-INVARIANT: Σ min(deg, cap)² ≤ #neighbors · cap² no
-    *     matter the corpus size — the run-at-100TB shape, and the
-    *     r12 sf1 capture is why (the drop policy still paid 2.4e9
-    *     wedges through 8k-degree attribute tokens).
+    *   - "drop": hubs past the cap are DROPPED — a neighbor shared by
+    *     everyone certifies a link by ~1/ln(deg) ≈ nothing.
+    *   - "sample": every neighbor keeps its `maxDegree` lowest nodes
+    *     by the portable node hash (coordinated sampling). The r12
+    *     sf1 capture is why: the drop policy still paid 2.4e9 wedges
+    *     through 8k-degree attribute tokens.
     * Under "drop"/"sample" the answer is a SUBSET relation to the
-    * exact one: adjacency rows are only ever REMOVED, so every
-    * retained pair's n_common <= exact and no pair is added; pairs
-    * whose support fell below `minCommon` drop. The existing-link
-    * anti-join always uses the UNPRUNED adjacency.
+    * exact one (every retained pair's n_common <= exact, no pair
+    * added). The existing-link anti-join always uses the UNPRUNED
+    * adjacency.
     */
   def commonNeighbors(adj: DataFrame, minCommon: Long,
       maxDegree: Int = 10000, hubPolicy: String = "refuse")
       : DataFrame = {
-    require(minCommon >= 1, s"commonNeighbors: minCommon $minCommon")
-    require(Set("refuse", "drop", "sample")(hubPolicy),
-      s"commonNeighbors: hubPolicy $hubPolicy")
-    val e0 = graft.Caches.pin(adj
+    val e = adjacency(adj)
+    PairCensus("commonNeighbors", e.select(col("nbr").as("key"),
+        col("node").as("member")), minCommon, maxDegree, hubPolicy,
+        "prune hubs (hubPolicy drop/sample)")
+      .toDF("node_a", "node_b", "n_common")
+      .join(e.toDF("node_a", "node_b"), Seq("node_a", "node_b"),
+        "left_anti")
+  }
+
+  /** Distinct, non-null (node, nbr) long adjacency, pinned: the pair
+    * census and the existing-link anti-join both read it.
+    */
+  private def adjacency(adj: DataFrame): DataFrame =
+    graft.Caches.pin(adj
       .select(col("node").cast("long").as("node"),
         col("nbr").cast("long").as("nbr"))
       .where(col("node").isNotNull && col("nbr").isNotNull)
       .distinct())
-    val e =
-      if (maxDegree > 0 && hubPolicy == "drop") {
-        val keep = e0.groupBy(col("nbr"))
-          .agg(count(lit(1)).as("__d"))
-          .where(col("__d") <= maxDegree)
-          .select(col("nbr"))
-        e0.join(keep, Seq("nbr"))
-      } else if (maxDegree > 0 && hubPolicy == "sample") {
-        val h = pmod(pmod(col("node"), lit(1000000007L)) *
-          lit(2654435761L) + lit(42L), lit(1000000007L))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("nbr")).orderBy(h, col("node"))
-        e0.withColumn("__hr", row_number().over(w))
-          .where(col("__hr") <= maxDegree)
-          .select(col("node"), col("nbr"))
-      } else {
-        if (maxDegree > 0) {
-          val worst = e0.groupBy(col("nbr")).count()
-            .agg(coalesce(max(col("count")), lit(0L))).first()
-            .getLong(0)
-          require(worst <= maxDegree,
-            s"commonNeighbors: a neighbor touches $worst nodes " +
-              s"(> $maxDegree) — prune hubs (hubPolicy drop/sample) " +
-              "or raise the cap")
-        }
-        e0
-      }
-    val a = e.select(col("nbr"), col("node").as("node_a"))
-    val b = e.select(col("nbr"), col("node").as("node_b"))
-    a.join(b, Seq("nbr"))
-      .where(col("node_a") < col("node_b"))
-      // explicit pair-key repartition between the wedge join and the
-      // count: the join stage is partitioned by nbr (few, skewed
-      // keys), so a partial aggregate riding it builds near-unique-
-      // key hash maps inside a handful of straggler tasks and spills
-      // (profiled r12: 13.4s -> 6.7s at sf0.1 with the exchange);
-      // single-column node_a hash (r15, the linkScores probe) is
-      // balanced the same way and hashes one column fewer; subset
-      // clustering still satisfies the groupBy — one exchange
-      .repartition(col("node_a"))
-      .groupBy(col("node_a"), col("node_b"))
-      .agg(count(lit(1)).as("n_common"))
-      .where(col("n_common") >= minCommon)
-      .join(e0.select(col("node").as("node_a"),
-        col("nbr").as("node_b")), Seq("node_a", "node_b"),
-        "left_anti")
-  }
 
   /** ADAMIC-ADAR and RESOURCE-ALLOCATION link scores (Adamic & Adar
     * 2003; Zhou et al. 2007) — the weighted refinements of
@@ -411,67 +364,28 @@ object Graph {
     * than selective neighbors. Scores are QUANTIZED per neighbor
     * BEFORE the sum — ra_q = raScale div deg(z) is pure integer
     * division, aa_q = floor(aaScale / ln(deg z)) computed once per
-    * DISTINCT degree value — so each pair's score is an order-free
-    * SUM OF LONGS, exact under any shuffle order and replayable by
-    * any engine (a float Σ1/ln(d) would drift in the last ulp per
-    * fold order). aaScale stays at 1e6: the cross-engine ln ulp
-    * (~1e-16 relative) then moves floor's argument by ~1e-10, far
-    * from any flip; at 1e12 it would be ~1e-4 — a real tie risk.
-    * Same wedge machinery and hub census as [[commonNeighbors]]
-    * (fan-out quadratic only in per-neighbor degree, guard refuses
-    * past `maxDegree`), same anti-join against existing adjacency.
-    * Returns (node_a, node_b, n_common, aa_q, ra_q).
+    * neighbor from the pinned degree census — so each pair's score is
+    * an order-free SUM OF LONGS, exact under any shuffle order and
+    * replayable by any engine (a float Σ1/ln(d) would drift in the
+    * last ulp per fold order). aaScale stays at 1e6: the cross-engine
+    * ln ulp (~1e-16 relative) then moves floor's argument by ~1e-10,
+    * far from any flip; at 1e12 it would be ~1e-4 — a real tie risk.
+    * Same [[PairCensus]] wedges and hub guard as [[commonNeighbors]]
+    * (refuses past `maxDegree`), same anti-join against existing
+    * adjacency. Returns (node_a, node_b, n_common, aa_q, ra_q).
     */
   def linkScores(adj: DataFrame, minCommon: Long,
       maxDegree: Int = 10000, aaScale: Long = 1000000L,
       raScale: Long = 1000000000000L): DataFrame = {
-    require(minCommon >= 1, s"linkScores: minCommon $minCommon")
-    val e = graft.Caches.pin(adj
-      .select(col("node").cast("long").as("node"),
-        col("nbr").cast("long").as("nbr"))
-      .where(col("node").isNotNull && col("nbr").isNotNull)
-      .distinct())
-    val deg = e.groupBy(col("nbr")).agg(count(lit(1)).as("d"))
-    if (maxDegree > 0) {
-      val worst = deg.agg(coalesce(max(col("d")), lit(0L)))
-        .first().getLong(0)
-      require(worst <= maxDegree,
-        s"linkScores: a neighbor touches $worst nodes " +
-          s"(> $maxDegree) — prune hubs or raise the cap")
-    }
-    // per-neighbor quantized weights; deg >= 2 always holds for
-    // wedge-forming neighbors (a degree-1 neighbor touches one node)
-    val w = deg.where(col("d") >= 2).select(col("nbr"),
-      floor(lit(aaScale.toDouble) / log(col("d").cast("double")))
-        .cast("long").as("aa_w"),
-      expr(s"${raScale}L div d").as("ra_w"))
-    val a = e.select(col("nbr"), col("node").as("node_a"))
-    val b = e.select(col("nbr"), col("node").as("node_b"))
-    val wedge = a.join(b, Seq("nbr"))
-      .where(col("node_a") < col("node_b"))
-      .join(w, Seq("nbr"))
-    // ALWAYS rebalance before the pair count (r15; replaces the r14
-    // opt-in pairRepartition): the wedge stream leaves the join
-    // partitioned by nbr — a few hundred skewed keys — so the
-    // default map-side partial aggregate built multi-million-entry
-    // near-unique-key hash maps inside a handful of straggler tasks
-    // (solo bench reps 9–41s, GC-state-sensitive). A single-column
-    // node_a hash repartition balances the reduce side (subset
-    // clustering satisfies the groupBy, so it stays ONE exchange);
-    // partial aggregation then runs on balanced ~13M/32 tasks.
-    // Interleaved probe (Scratch5): plain 4.2–6.9s, repartition(a)
-    // 3.1–4.5s, and the erratic tail is gone. An explode-based
-    // in-row fan-out (the q287 shape) was ALSO probed and REJECTED:
-    // generate parallelism is bounded by the few hundred token ROWS
-    // (one task serially emits a hub's millions of pairs) — wedge
-    // production 4.6–8.3s heavy-GC vs 1.0–1.8s for this join.
-    wedge.repartition(col("node_a"))
-      .groupBy(col("node_a"), col("node_b"))
-      .agg(count(lit(1)).as("n_common"), sum(col("aa_w")).as("aa_q"),
-        sum(col("ra_w")).as("ra_q"))
-      .where(col("n_common") >= minCommon)
-      .join(e.select(col("node").as("node_a"),
-        col("nbr").as("node_b")), Seq("node_a", "node_b"),
+    val e = adjacency(adj)
+    PairCensus("linkScores", e.select(col("nbr").as("key"),
+        col("node").as("member")), minCommon, maxDegree,
+        weights = Seq(
+          "aa_q" -> ((d: Column) => floor(lit(aaScale.toDouble) /
+            log(d.cast("double"))).cast("long")),
+          "ra_q" -> ((d: Column) => call_function("div", lit(raScale), d))))
+      .toDF("node_a", "node_b", "n_common", "aa_q", "ra_q")
+      .join(e.toDF("node_a", "node_b"), Seq("node_a", "node_b"),
         "left_anti")
   }
 

@@ -1470,40 +1470,20 @@ class LlmDataSpec extends SparkSuite {
     "tok  double  space", "trailing space ", " leading", "0a1b2c",
     "İstanbul", "ALL CAPS SENTENCE WITH 99 NUMBERS 00")
 
-  test("portableTokenHashFast computes the identical fold as the " +
-      "Column definition over adversarial strings") {
-    val df = adversarial.zipWithIndex.map { case (s, i) => (i.toLong, s) }
-      .toDF("i", "s")
-    val both = df.select(col("i"),
-      Dedup.portableTokenHash(col("s")).as("col_form"),
-      Dedup.portableTokenHashFast(col("s")).as("udf_form"))
-    val rows = both.collect()
-    rows.foreach { r =>
-      assert(r.getLong(1) == r.getLong(2),
-        s"hash parity broke on '${adversarial(r.getLong(0).toInt)}': " +
-          s"column=${r.getLong(1)} udf=${r.getLong(2)}")
-    }
-    // null -> null like the expression form
-    val n = Seq((0L, null: String)).toDF("i", "s")
-      .select(Dedup.portableTokenHashFast(col("s"))).head()
-    assert(n.isNullAt(0))
-  }
-
-  test("PortableTokenHash codegen Expression matches both earlier " +
-      "rungs (Column fold, tight-loop UDF) over adversarial strings, " +
-      "in codegen AND interpreted eval, and as a SQL function") {
+  test("PortableTokenHash codegen Expression matches the Column " +
+      "fold definition over adversarial strings, in codegen AND " +
+      "interpreted eval, and as a SQL function") {
     import graft.functions.PortableTokenHash
     val df = adversarial.zipWithIndex.map { case (s, i) => (i.toLong, s) }
       .toDF("i", "s")
     val rows = df.select(col("i"),
       Dedup.portableTokenHash(col("s")).as("col_form"),
-      Dedup.portableTokenHashFast(col("s")).as("udf_form"),
       PortableTokenHash(col("s")).as("expr_form"))
       .collect()
     rows.foreach { r =>
-      assert(r.getLong(1) == r.getLong(3) && r.getLong(2) == r.getLong(3),
+      assert(r.getLong(1) == r.getLong(2),
         s"expr parity broke on '${adversarial(r.getLong(0).toInt)}': " +
-          s"column=${r.getLong(1)} udf=${r.getLong(2)} expr=${r.getLong(3)}")
+          s"column=${r.getLong(1)} expr=${r.getLong(2)}")
     }
     // interpreted path (nullSafeEval) — evaluate outside codegen
     adversarial.foreach { s =>
@@ -1523,7 +1503,7 @@ class LlmDataSpec extends SparkSuite {
     val sqlRows = spark.sql(
       "SELECT i, portable_token_hash(s) AS h FROM t_pth").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    rows.foreach(r => assert(sqlRows(r.getLong(0)) == r.getLong(3)))
+    rows.foreach(r => assert(sqlRows(r.getLong(0)) == r.getLong(2)))
   }
 
   test("normalizeTokens matches filter(split(normalize(text)), != '') " +
