@@ -14,7 +14,7 @@ import scala.jdk.CollectionConverters._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCpus
     val mgmt = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     def load(): Double = mgmt.getSystemLoadAverage
     def gcSec(): Double = java.lang.management.ManagementFactory
@@ -53,35 +53,14 @@ object Bench {
       Thread.sleep(5000); waited += 5
     }
     val loadAtRun = load()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long + convert
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // JVM-wide codegen class cache (static conf): the 100-entry
-      // default LRU-thrashes — ONE superstep entry's working set is
-      // ~90 generated classes, so identical sources recompiled every
-      // rep (JitProbe r14: q169 22-24 Janino compiles/rep at 100,
-      // ZERO at 5000; solo medians -19%/-23% on q169/q322). 5000
-      // holds the whole catalog's classes for the bench run.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     // ERROR, not WARN: benign WARN spam (BlockManager "already
     // exists" across cached reps, shutdown chatter) lands in the
     // driver's bounded stdout/stderr tail and can push the one JSON
     // line out of its capture window — the round-6 artifact of record
     // was lost exactly this way ("parsed": null, tail full of WARNs)
     spark.sparkContext.setLogLevel("ERROR")
-    // warm-up: JIT + codegen + parquet reader/footer init for EVERY
-    // table, so the first timed query per table doesn't absorb
-    // session startup
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => }
-    }
+    GraftSession.warmUp(spark, sfDir)
     // Per-query time varies ±30% between identical runs in one JVM
     // (GC + JIT churn); report the median of N runs so only structural
     // deltas move the number. Five reps, not three: with a 113-query
@@ -128,7 +107,7 @@ object Bench {
       warns += f"load_at_run $loadAtRun%.2f within 10%% of idle " +
         f"threshold $idleThr%.1f - ambient contention likely"
     val condOk = warns.isEmpty
-    val warnJson = warns.map(w => "\"" + w + "\"").mkString("[", ",", "]")
+    val warnJson = jsonArray(warns.toSeq)
     val cond = s"""{"load_initial":${f3(loadInitial)},""" +
       s""""load_at_run":${f3(loadAtRun)},"load_end":${f3(loadEnd)},""" +
       s""""idle_wait_sec":$waited,"idle_thr":$idleThr,""" +
@@ -159,16 +138,17 @@ object Bench {
         "\"" + k + "\":[" + ts.map(f3).mkString(",") + "]" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
+    val failedJson = jsonArray(failed)
+    val sfJson = QH.jsonString(sfDir)
     val line =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","reps":$reps,"conditions":$cond,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","reps":$reps,"conditions":$cond,"queries":$qs,"failed":$failedJson,"sf":$sfJson}"""
     // subset runs (iteration aid) must not clobber the full-catalog
     // artifact the driver ingests
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (only.isEmpty) "/root/repo/BENCH_FULL.json"
       else "/tmp/bench_subset.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"conditions":$cond,"queries":$qsFull,"rep_times":$repsFull,"failed":$failedJson,"sf":"$sfDir"}""" + "\n")
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"conditions":$cond,"queries":$qsFull,"rep_times":$repsFull,"failed":$failedJson,"sf":$sfJson}""" + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outFile: $e") }
     // stop BEFORE printing: Spark shutdown logs after a println would
@@ -198,8 +178,14 @@ object Bench {
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec",""" +
       s""""reps":$reps,"n_queries":${results.size},"failed":$failedJson,""" +
       s""""conditions":$cond,"per_query_parts":${parts.size},""" +
-      s""""per_query_file":"$outFile","sf":"$sfDir"}""")
+      s""""per_query_file":${QH.jsonString(outFile)},"sf":$sfJson}""")
   }
+
+  /** A JSON array of escaped strings (run-condition warnings, failed
+    * query names).
+    */
+  def jsonArray(xs: Seq[String]): String =
+    xs.map(QH.jsonString).mkString("[", ",", "]")
 
   /** One run of a catalog query: Right(seconds), or Left(the error)
     * when it throws — a query that fails is reported as failed, never

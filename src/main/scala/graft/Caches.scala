@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Registry for persisted intermediates pinned by `singleScan`-style
-  * operators (spanDedup, tfidfTopK, lmPerplexity): the persist must
+/** Registry for persisted intermediates pinned by single-scan
+  * operators (spanDedup, lmPerplexity, heavyHitters): the persist must
   * outlive the call (the returned plan is lazy), so the operator can't
   * unpersist it itself — without a handle each call would leak a
   * MEMORY_AND_DISK block for the session's lifetime.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.metrics.source.CodegenMetrics
 import scala.jdk.CollectionConverters._
 
@@ -10,9 +9,10 @@ import scala.jdk.CollectionConverters._
   *
   *   - Janino (Spark whole-stage-codegen source -> bytecode):
   *     `CodegenMetrics.METRIC_COMPILATION_TIME` count deltas are the
-  *     generated-class CACHE MISSES (Spark's 100-entry codegen cache
-  *     is keyed on the comment-stripped source text, so an identical
-  *     per-round plan shape hits it and the count stays flat);
+  *     generated-class CACHE MISSES (the codegen cache — 5000 entries
+  *     in a [[GraftSession]] — is keyed on the comment-stripped
+  *     source text, so an identical per-round plan shape hits it and
+  *     the count stays flat);
   *   - the JVM JIT (C1/C2 compiling Spark itself + the generated
   *     classes): CompilationMXBean total time, which can exceed wall
   *     clock (multiple compiler threads);
@@ -27,7 +27,6 @@ object JitProbe {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
     val names =
       if (args.nonEmpty) args.toSeq else Seq("q169_pagerank")
@@ -39,29 +38,9 @@ object JitProbe {
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def janinoMeanMs(): Double =
       CodegenMetrics.METRIC_COMPILATION_TIME.getSnapshot.getMean
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // A/B knob: SPARK_GRAFT_AQE=false isolates whether steady-state
-      // Janino misses come from AQE's per-materialization replanning
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // A/B knob: the JVM-wide codegen class cache (static conf,
-      // default 100 entries) — one superstep entry's working set is
-      // ~90 classes, so the default LRU sits at the eviction
-      // boundary and identical sources recompile every rep
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "100"))
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => }
-    }
+    GraftSession.warmUp(spark, sfDir)
     // SPARK_GRAFT_DUMP_DIR: per-rep dump of the codegen-cache keys
     // ADDED by that rep (i.e. the sources that MISSED) — lets a
     // steady-state miss be diffed rep-to-rep instead of guessed at.

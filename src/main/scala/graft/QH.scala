@@ -35,6 +35,21 @@ object QH {
       case _ => df
     }
 
+  /** A JSON string literal: escapes backslash, quote and ALL control
+    * chars (< 0x20) — a tab or CR in builder-authored SQL or a run
+    * condition would otherwise make a JSON reader reject the whole
+    * artifact.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Table reader (ts-normalizing, see [[normalizeTs]]). */
   def read(s: SparkSession, dir: String, table: String): DataFrame =
     normalizeTs(s.read.parquet(s"$dir/$table.parquet"))

@@ -574,8 +574,7 @@ object QueriesLLM {
     */
   private val q86_lm_perplexity: Q = (
     (s, dir) => TextAnalysis.lmPerplexity(
-      spread(read(s, dir, "documents")), "doc_id", "text", addK = 0.5,
-      singleScan = true)
+      spread(read(s, dir, "documents")), "doc_id", "text", addK = 0.5)
       .select(col("doc_id"), col("n_bigrams"),
         round(col("perplexity"), 6).as("perplexity"))
       .orderBy(col("doc_id")),

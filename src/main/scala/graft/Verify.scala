@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,22 +7,9 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd+ args: only run the named queries (local iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long + convert
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // JVM-wide codegen class cache (static conf): the 100-entry
-      // default LRU-thrashes — ONE superstep entry's working set is
-      // ~90 generated classes, so identical sources recompiled every
-      // rep (JitProbe r14: q169 22-24 Janino compiles/rep at 100,
-      // ZERO at 5000; solo medians -19%/-23% on q169/q322). 5000
-      // holds the whole catalog's classes for the bench run.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.local()
+    // WARN, so an engine warning lands in the log next to the
+    // progress marker of the entry that emitted it
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -39,25 +25,14 @@ object Verify {
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        // singleScan-style entries pin MEMORY_AND_DISK intermediates
+        // single-scan operators pin MEMORY_AND_DISK intermediates
         // for the duration of the query; drop them between entries so
         // 100+ queries don't accumulate evicting blocks
         Caches.release()
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${QH.jsonString(k)}: ${QH.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -878,27 +878,24 @@ object Dedup {
     * count, how many were scrubbed, and the surviving text.
     */
   def spanDedup(df: DataFrame, docId: String, text: String,
-      spanTokens: Int, minDocs: Int = 2,
-      singleScan: Boolean = true): DataFrame = {
+      spanTokens: Int, minDocs: Int = 2): DataFrame = {
     require(spanTokens >= 1, s"spanTokens must be >= 1, got $spanTokens")
     val toks = df.where(col(text).isNotNull)
       .select(col(docId),
         filter(split(col(text), " "), t => t =!= "").as("__t"))
       .where(size(col("__t")) >= 1)
     val k = spanTokens
-    val spans0 = toks.select(col(docId),
+    // the span stream feeds both the duplicate census and the
+    // join-back; the pin runs tokenize+explode once (costs
+    // span-corpus-sized storage; it wins at both measured scales,
+    // BENCH_NOTES). Release via the scoped handle / release() after
+    // materializing, else the block outlives the query.
+    val spans = graft.Caches.pin(toks.select(col(docId),
         posexplode(transform(
           sequence(lit(0),
             ceil(size(col("__t")) / lit(k.toDouble)).cast("int") - 1),
           i => array_join(slice(col("__t"), i * k + 1, lit(k)), " "))))
-      .select(col(docId), col("pos"), col("col").as("span"))
-    // the span stream feeds both the duplicate census and the
-    // join-back; singleScan persists it so tokenize+explode runs once
-    // (costs span-corpus-sized storage — the tfidfTopK trade; default
-    // ON, it wins at both measured scales, BENCH_NOTES). Pinned via
-    // graft.Caches — release via the scoped handle / release() after
-    // materializing, else the block outlives the query.
-    val spans = if (singleScan) graft.Caches.pin(spans0) else spans0
+      .select(col(docId), col("pos"), col("col").as("span")))
     scrubUnits(spans, docId, "pos", "span", minDocs)
       .groupBy(col(docId))
       .agg(count(lit(1)).as("n_spans"),
@@ -980,23 +977,21 @@ object Dedup {
   }
 
   def repeatedSubstringSpans(df: DataFrame, docId: String, text: String,
-      l: Int, minDocs: Int = 2, singleScan: Boolean = true): DataFrame = {
+      l: Int, minDocs: Int = 2): DataFrame = {
     require(l >= 1, s"window length must be >= 1, got $l")
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     val toks = df.where(col(text).isNotNull)
       .select(col(docId),
         filter(split(col(text), " "), t => t =!= "").as("__t"))
       .where(size(col("__t")) >= l)
-    val wins0 = toks.select(col(docId),
-        posexplode(windowHashes(col("__t"), lit(l))))
-      .select(col(docId), col("pos"), col("col").as("__w"))
     // the window stream feeds both the census and the join-back; the
     // DERIVED unit stream (tokenize + rolling hash + explode) is the
-    // expensive part, so the default pins it for one scan (the
-    // measured trade at sf0.01 and sf0.1 is in BENCH_NOTES). Pinned
-    // via graft.Caches — release via the scoped handle / release()
-    // once materialized.
-    val wins = if (singleScan) graft.Caches.pin(wins0) else wins0
+    // expensive part, so it is pinned for one scan (the measured
+    // trade at sf0.01 and sf0.1 is in BENCH_NOTES). Release via the
+    // scoped handle / release() once materialized.
+    val wins = graft.Caches.pin(toks.select(col(docId),
+        posexplode(windowHashes(col("__t"), lit(l))))
+      .select(col(docId), col("pos"), col("col").as("__w")))
     val dup = wins.groupBy(col("__w"))
       .agg(countDistinct(col(docId)).as("__nd"))
       .where(col("__nd") >= minDocs)
@@ -1041,7 +1036,7 @@ object Dedup {
     * broadcast-joined back when small. No pairwise stage.
     */
   def chunkByContent(df: DataFrame, docId: String, text: String,
-      modulus: Int = 64, singleScan: Boolean = false): DataFrame = {
+      modulus: Int = 64): DataFrame = {
     require(modulus >= 2, s"modulus must be >= 2, got $modulus")
     val toks = df.where(col(text).isNotNull)
       .select(col(docId),
@@ -1056,20 +1051,16 @@ object Dedup {
     val chunked = toks.withColumn("chunk_id",
       coalesce(sum(col("__b"))
         .over(byDoc.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val chunks0 = chunked.groupBy(col(docId), col("chunk_id"))
+    // chunks feed both the census and the join-back. Pinning them
+    // measured a WASH at both scales once the boundary hash became a
+    // tight-loop UDF (BENCH_NOTES), so they are recomputed: no storage
+    // cost for no win.
+    val chunks = chunked.groupBy(col(docId), col("chunk_id"))
       .agg(min(col("pos")).as("chunk_start"),
         count(lit(1)).as("n_tokens"),
         md5(array_join(transform(
           array_sort(collect_list(struct(col("pos"), col("__tok")))),
           s => s("__tok")), " ")).as("chunk_md5"))
-    // chunks feed both the census and the join-back; singleScan pins
-    // the chunk stream so the two-shuffle derivation (tokenize +
-    // explode + per-doc window + grouped md5) runs once. Measured a
-    // WASH at both scales once the boundary hash became a tight-loop
-    // UDF (BENCH_NOTES), so the default stays off — no storage cost
-    // for no win; flip on when the text column is itself expensive to
-    // derive.
-    val chunks = if (singleScan) graft.Caches.pin(chunks0) else chunks0
     val census = chunks.groupBy(col("chunk_md5"))
       .agg(countDistinct(col(docId)).as("n_docs"))
     chunks.join(census, Seq("chunk_md5"))

@@ -510,12 +510,12 @@ object Sampling {
     * (nBuckets rows each — tiny), the lambda table broadcasts, and
     * scoring is one per-doc aggregate over the feature stream. The
     * feature stream feeds both the source counts and the scoring
-    * join; `singleScan` (default on) pins it — (docId, int) rows,
-    * the compact frame — so normalize+explode runs once.
+    * join, so it is pinned — (docId, int) rows, the compact frame —
+    * and normalize+explode runs once.
     */
   def dsirLogWeights(source: DataFrame, target: DataFrame,
       docId: String, text: String, nBuckets: Int = 4096,
-      addK: Double = 0.5, singleScan: Boolean = true): DataFrame = {
+      addK: Double = 0.5): DataFrame = {
     require(nBuckets >= 2, s"nBuckets must be >= 2, got $nBuckets")
     require(addK > 0, s"additive smoothing needs k > 0, got $addK")
     def feats(df: DataFrame) = df.where(col(text).isNotNull)
@@ -523,15 +523,13 @@ object Sampling {
       .where(size(col("__t")) >= 2)
       .select(col(docId),
         explode(bigramBuckets(col("__t"), lit(nBuckets))).as("__bkt"))
-    val sf0 = feats(source)
-    val sf = if (singleScan) graft.Caches.pin(sf0) else sf0
+    val sf = graft.Caches.pin(feats(source))
     // pin the TARGET counts too: tCnt feeds both the lam join and
     // tTot as separate plans, and without the pin the target corpus
     // would be scanned+bigrammed twice. Post-agg it is nBuckets rows,
     // so the pinned block is tiny regardless of corpus size.
-    val tCnt0 = feats(target).groupBy(col("__bkt"))
-      .agg(count(lit(1)).as("__ct"))
-    val tCnt = if (singleScan) graft.Caches.pin(tCnt0) else tCnt0
+    val tCnt = graft.Caches.pin(feats(target).groupBy(col("__bkt"))
+      .agg(count(lit(1)).as("__ct")))
     val sCnt = sf.groupBy(col("__bkt")).agg(count(lit(1)).as("__cs"))
     val tTot = tCnt.agg(sum(col("__ct")).as("__tt"))
     val sTot = sCnt.agg(sum(col("__cs")).as("__ts"))
@@ -664,16 +662,15 @@ object Sampling {
     */
   def dsirLogWeightsWithin(corpus: DataFrame, targetPred: Column,
       docId: String, text: String, nBuckets: Int = 4096,
-      addK: Double = 0.5, singleScan: Boolean = true): DataFrame = {
+      addK: Double = 0.5): DataFrame = {
     require(nBuckets >= 2, s"nBuckets must be >= 2, got $nBuckets")
     require(addK > 0, s"additive smoothing needs k > 0, got $addK")
-    val sf0 = corpus.where(col(text).isNotNull)
+    val sf = graft.Caches.pin(corpus.where(col(text).isNotNull)
       .select(col(docId), targetPred.as("__isT"),
         Dedup.normalizeTokens(col(text)).as("__t"))
       .where(size(col("__t")) >= 2)
       .select(col(docId), col("__isT"),
-        explode(bigramBuckets(col("__t"), lit(nBuckets))).as("__bkt"))
-    val sf = if (singleScan) graft.Caches.pin(sf0) else sf0
+        explode(bigramBuckets(col("__t"), lit(nBuckets))).as("__bkt")))
     val cnts = sf.groupBy(col("__bkt"))
       .agg(count(lit(1)).as("__cs"),
         count(when(col("__isT"), lit(1))).as("__ct"))

@@ -33,20 +33,17 @@ object Sketches {
     * at corpus scale.
     *
     * The unit stream is usually derived (tokenize+explode), and both
-    * passes consume it; `singleScan` (default on) pins it via
-    * [[graft.Caches]] — release via the scoped handle / release()
-    * after materializing.
+    * passes consume it, so it is pinned via [[graft.Caches]] — release
+    * via the scoped handle / release() after materializing.
     *
     * Output: (unit-named column, cnt), exact.
     */
-  def heavyHitters(units: DataFrame, unit: String, k: Int,
-      singleScan: Boolean = true): DataFrame = {
+  def heavyHitters(units: DataFrame, unit: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = units.sparkSession
     import spark.implicits._
-    val u0 = units.select(col(unit).cast("string").as("__u"))
-      .where(col("__u").isNotNull)
-    val u = if (singleScan) graft.Caches.pin(u0) else u0
+    val u = graft.Caches.pin(units.select(col(unit).cast("string").as("__u"))
+      .where(col("__u").isNotNull))
     // (candidates, partition row count) per partition; the driver
     // sees <= k strings + one long per partition — bounded by
     // construction, not by data size

@@ -346,22 +346,14 @@ object TextAnalysis {
     * shuffle (asserted in PlanGuardSpec).
     */
   def tfidfTopK(df: DataFrame, docId: String, text: String,
-      k: Int = 3, singleScan: Boolean = false): DataFrame = {
+      k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = df.where(col(text).isNotNull)
     val toks = docs.select(col(docId),
         explode(split(lower(col(text)), " ")).as("term"))
       .where(col("term") =!= "")
-    val tf0 = toks.groupBy(col(docId), col("term"))
+    val tf = toks.groupBy(col(docId), col("term"))
       .agg(count(lit(1)).as("tf"))
-    // singleScan: persist the (doc, term, tf) postings so the
-    // doc-frequency branch reads them back instead of re-tokenizing
-    // the corpus (column pruning otherwise splits the subtree and the
-    // exchange is not reused). Costs shuffle-sized disk-backed
-    // storage; wins when tokenize/decode dominates. Pinned via
-    // graft.Caches — call Caches.release() once results are
-    // materialized, else the block outlives the query.
-    val tf = if (singleScan) graft.Caches.pin(tf0) else tf0
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("dfreq"))
     val n = docs.agg(count(lit(1)).as("__n"))
     val scored = tf.join(dfreq, "term").crossJoin(broadcast(n))
@@ -781,21 +773,20 @@ object TextAnalysis {
     * vocabularies broadcast automatically, web-scale ones sort-merge
     * with skew-split. No windows, no driver-side data.
     *
-    * `singleScan` persists the per-doc token ARRAYS (doc-count rows,
-    * the cheapest frame in the pipeline) so the count branch and the
-    * scoring branch both read cached tokens instead of re-running the
-    * normalize regex over the corpus — the win when text is large or
-    * upstream is decode-heavy. Costs token-corpus-sized storage; the
-    * same trade [[tfidfTopK]]'s flag documents.
+    * The per-doc token ARRAYS (doc-count rows, the cheapest frame in
+    * the pipeline) are pinned via [[graft.Caches]], so the count
+    * branch and the scoring branch both read cached tokens instead of
+    * re-running the normalize regex over the corpus. Costs
+    * token-corpus-sized storage; release via the scoped handle /
+    * release() after materializing.
     */
   def lmPerplexity(df: DataFrame, docId: String, text: String,
-      addK: Double = 0.5, singleScan: Boolean = false): DataFrame = {
+      addK: Double = 0.5): DataFrame = {
     require(addK > 0, s"additive smoothing needs k > 0, got $addK")
-    val toks0 = df.where(col(text).isNotNull)
+    val toks = graft.Caches.pin(df.where(col(text).isNotNull)
       .select(col(docId),
         Dedup.normalizeTokens(col(text)).as("__t"))
-      .where(size(col("__t")) >= 2)
-    val toks = if (singleScan) graft.Caches.pin(toks0) else toks0
+      .where(size(col("__t")) >= 2))
     val bi = toks.select(col(docId),
         explode(transform(sequence(lit(1), size(col("__t")) - 1),
           i => struct(element_at(col("__t"), i).as("w1"),
@@ -1184,20 +1175,19 @@ object TextAnalysis {
     *
     * Shape: one tokenize+explode stream feeds both the vocabulary
     * census (groupBy token — the only vocabulary-keyed shuffle) and
-    * the per-doc scoring join; `singleScan` (default on) pins the
-    * compact (id, token) stream so the corpus is scanned once. The
+    * the per-doc scoring join; the compact (id, token) stream is
+    * pinned so the corpus is scanned once. The
     * top-K vocab (count desc, token asc — total order, deterministic
     * on any engine) is K rows and broadcasts; scoring is a broadcast
     * left join plus a per-doc partial aggregate. No corpus-sized
     * shuffle anywhere.
     */
   def vocabCoverage(df: DataFrame, id: String, text: String,
-      vocabSize: Int, singleScan: Boolean = true): DataFrame = {
+      vocabSize: Int): DataFrame = {
     require(vocabSize >= 1, s"vocabSize must be >= 1, got $vocabSize")
-    val toks0 = df.where(col(text).isNotNull)
+    val toks = graft.Caches.pin(df.where(col(text).isNotNull)
       .select(col(id), explode(Dedup.normalizeTokens(col(text)))
-        .as("__tok"))
-    val toks = if (singleScan) graft.Caches.pin(toks0) else toks0
+        .as("__tok")))
     val vocab = toks.groupBy(col("__tok"))
       .agg(count(lit(1)).as("__c"))
       .orderBy(desc("__c"), asc("__tok"))

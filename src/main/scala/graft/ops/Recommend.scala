@@ -17,11 +17,12 @@ import org.apache.spark.sql.functions._
 object Recommend {
 
   /** Top-`k` nearest neighbors per item by quantized co-occurrence
-    * cosine. Same shape and guards as [[Association.basketRules]]:
-    * DISTINCT presence table, per-basket self-join quadratic only in
-    * basket size (censused via `maxPerBasket` before the join runs),
-    * `minSupport` cut straight after the pair count, item margins
-    * broadcast. Pairs then emit BOTH directions and a per-item
+    * cosine. Same pair count and guards as
+    * [[Association.basketRules]] ([[Association.basketPairCounts]]:
+    * in-row pair fan-out quadratic only in basket size, censused via
+    * `maxPerBasket` before it runs, `minSupport` cut straight after
+    * the pair count, item margins broadcast). Pairs then emit BOTH
+    * directions and a per-item
     * WindowGroupLimit takes the k best by (cos_q desc, neighbor) —
     * the result is a dictionary-sized (items x k) table that
     * broadcasts into [[recommend]] at any corpus scale.
@@ -31,50 +32,8 @@ object Recommend {
       k: Int, minSupport: Long = 2L, maxPerBasket: Int = 10000)
       : DataFrame = {
     require(k >= 1, s"itemNeighbors: k $k")
-    require(minSupport >= 1, s"itemNeighbors: minSupport $minSupport")
-    // r14 reshape (q253 structural ask): the DISTINCT presence table
-    // and the per-basket self-join collapse into ONE basket-keyed
-    // collect_set exchange (partial aggregation dedups map-side
-    // exactly like distinct's), with the quadratic pair fan-out
-    // generated IN-ROW from the sorted per-basket set — 2 data-sized
-    // exchanges total (grouped, counts) where the join shape had 4.
-    // The quadratic stage is still bounded by basket width (censused
-    // below, same guard, now a max over set sizes), and the emitted
-    // (item_a < item_b, support) pairs are identical: array_sort
-    // orders by the item type's ordering, the same `<` the join
-    // used.
-    // pinned (r15): the census guard is a separate action — unpinned,
-    // the basket-keyed exchange ran once for the guard and again for
-    // the main query (see Association.basketRules for the identical
-    // fix). The guard's .first() materializes the pin.
-    val grouped = graft.Caches.pin(df
-      .where(col(basketCol).isNotNull && col(itemCol).isNotNull)
-      .select(col(basketCol).as("__b"), col(itemCol).as("__i"))
-      .groupBy(col("__b"))
-      .agg(array_sort(collect_set(col("__i"))).as("__is")))
-    if (maxPerBasket > 0) {
-      val worst = grouped
-        .agg(coalesce(max(size(col("__is"))), lit(0)))
-        .first().getInt(0)
-      require(worst <= maxPerBasket,
-        s"itemNeighbors: largest basket has $worst distinct items " +
-          s"(> $maxPerBasket) — coarsen the item key")
-    }
-    val counts = grouped.select(explode(col("__is")).as("__i"))
-      .groupBy(col("__i")).agg(count(lit(1)).as("__c"))
-    val pairs = grouped.select(explode(flatten(transform(col("__is"),
-        (x, i) => transform(
-          slice(col("__is"), i + lit(2),
-            size(col("__is")) - i - lit(1)),
-          y => struct(x.as("a"), y.as("b")))))).as("__p"))
-      .select(col("__p.a").as("item_a"), col("__p.b").as("item_b"))
-      .groupBy(col("item_a"), col("item_b"))
-      .agg(count(lit(1)).as("support"))
-      .where(col("support") >= minSupport)
-      .join(broadcast(counts.select(col("__i").as("item_a"),
-        col("__c").as("count_a"))), Seq("item_a"))
-      .join(broadcast(counts.select(col("__i").as("item_b"),
-        col("__c").as("count_b"))), Seq("item_b"))
+    val pairs = Association.basketPairCounts(df, basketCol, itemCol,
+        minSupport, maxPerBasket, "itemNeighbors")._2
       .withColumn("cos_q",
         round(lit(1000000.0) * col("support").cast("double") /
           sqrt(col("count_a").cast("double") *

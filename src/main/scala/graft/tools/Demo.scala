@@ -1,15 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Usage demo: a session built with GraftExtensions, driving the SQL
-  * surface and the join operators the way a library user would.
+/** Usage demo: a session with GraftExtensions registered, driving the
+  * SQL surface and the join operators the way a library user would.
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(4)
+    graft.GraftExtensions.register(spark)
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .createOrReplaceTempView("emb")

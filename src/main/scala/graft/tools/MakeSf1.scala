@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Build an sf1-scale dataset (10x sf0.1) for the scale capture
@@ -35,11 +35,7 @@ object MakeSf1 {
     val dst = if (args.length > 1) args(1) else "/root/repo/testdata_sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
     val OFF = 100000000L // > any key at sf1; disjoint per-copy spaces
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")

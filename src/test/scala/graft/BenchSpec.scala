@@ -26,4 +26,15 @@ class BenchSpec extends SparkSuite {
     assert(reps.exists(ts => ts.length == 3 && ts.forall(_ >= 0.0)),
       s"got $reps")
   }
+
+  test("run-condition warnings and failed names come out of the JSON " +
+      "escaper as strings a JSON parser reads back unchanged") {
+    val warning = "heap \"16g\" at C:\\tmp\tload 4.0"
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(mapper.readValue(QH.jsonString(warning), classOf[String]) ==
+      warning)
+    val arr = mapper.readTree(Bench.jsonArray(Seq(warning, "q1_x")))
+    assert(arr.size == 2 && arr.get(0).asText == warning &&
+      arr.get(1).asText == "q1_x")
+  }
 }

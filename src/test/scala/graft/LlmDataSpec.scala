@@ -557,41 +557,62 @@ class LlmDataSpec extends SparkSuite {
     assert(k2.length == 2)
   }
 
-  test("tfidf singleScan (persisted postings) returns the same rows " +
-      "as the two-scan plan") {
+  test("tfidf top-2 rows match a hand computation; equal scores " +
+      "break on term") {
     import spark.implicits._
     val df = Seq((1L, "common zebra zebra"), (2L, "common filler"),
       (3L, "common filler text here")).toDF("doc_id", "text")
-    def rows(single: Boolean) =
-      TextAnalysis.tfidfTopK(df, "doc_id", "text", k = 2,
-        singleScan = single)
-        .collect().map(r => (r.getLong(0), r.getString(1),
-          math.round(r.getDouble(2) * 1e9))).toSet
-    assert(rows(single = true) == rows(single = false))
+    val rows = TextAnalysis.tfidfTopK(df, "doc_id", "text", k = 2)
+      .collect().map(r => (r.getLong(0), r.getString(1),
+        math.round(r.getDouble(2) * 1e9))).toSet
+    // N = 3; idf = ln((N+1)/(df+1)) + 1: common (df 3) -> 1, filler
+    // (df 2) -> ln(4/3)+1, zebra/text/here (df 1) -> ln 2 + 1. Doc 3
+    // ties text and here at tf 1; the term order keeps here, text.
+    val (one, rare) = (1.0, math.log(2.0) + 1.0)
+    val filler = math.log(4.0 / 3.0) + 1.0
+    val want = Set((1L, "zebra", 2 * rare), (1L, "common", one),
+        (2L, "filler", filler), (2L, "common", one),
+        (3L, "here", rare), (3L, "text", rare))
+      .map { case (d, t, v) => (d, t, math.round(v * 1e9)) }
+    assert(rows == want)
   }
 
-  test("repeatedSubstringSpans / chunkByContent: singleScan pin " +
-      "returns identical rows to the recompute plan") {
+  test("repeatedSubstringSpans / chunkByContent: rows match a hand " +
+      "and a brute-force reference") {
     import spark.implicits._
     val df = Seq(
       (1L, "a b c d e f g h i j k l m n o p"),
       (2L, "z z a b c d e f g h i j q r s t"),
       (3L, "unrelated words only in this one document right here now"))
       .toDF("doc_id", "text")
-    def spans(single: Boolean) =
-      Dedup.repeatedSubstringSpans(df, "doc_id", "text", l = 4,
-          minDocs = 2, singleScan = single)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    def chunks(single: Boolean) =
-      Dedup.chunkByContent(df, "doc_id", "text", modulus = 4,
-          singleScan = single)
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getAs[String]("chunk_md5"), r.getLong(5))).toSet
-    val (s1, s0) = (spans(true), spans(false))
-    val (c1, c0) = (chunks(true), chunks(false))
+    val spans = Dedup.repeatedSubstringSpans(df, "doc_id", "text", l = 4,
+        minDocs = 2)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
+    val chunks = Dedup.chunkByContent(df, "doc_id", "text", modulus = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1),
+        r.getAs[String]("chunk_md5"), r.getLong(5))).toSet
     Caches.release()
-    assert(s1 == s0 && s1.nonEmpty)
-    assert(c1 == c0 && c1.nonEmpty)
+    // "a b c d e f g h i j" is shared: token 0..9 of doc 1, 2..11 of
+    // doc 2 (start, inclusive end)
+    assert(spans == Set((1L, 0, 9), (2L, 2, 11)))
+    // brute force: a token whose portable hash is 0 mod 4 ends its
+    // chunk; n_docs counts the documents carrying an identical chunk
+    def hash(t: String) =
+      t.foldLeft(0L)((a, ch) => (a * 31 + ch) % 1000000007L)
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val perDoc = df.collect().toSeq.map { r =>
+      val toks = r.getString(1).split(" ").filter(_.nonEmpty).toSeq
+      val ids = toks.scanLeft(0L)((c, t) =>
+        c + (if (hash(t) % 4 == 0) 1 else 0))
+      r.getLong(0) -> toks.zip(ids).groupBy(_._2).toSeq.map {
+        case (c, ts) => c -> md5(ts.map(_._1).mkString(" ")) }
+    }
+    val nDocs = perDoc.flatMap { case (d, cs) => cs.map(_._2 -> d) }
+      .distinct.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+    val want = perDoc.flatMap { case (d, cs) =>
+      cs.map { case (c, m) => (d, c, m, nDocs(m)) } }.toSet
+    assert(chunks == want && chunks.nonEmpty)
   }
 
   test("hammingPairs maxPerBucket: oversized buckets drop from " +
@@ -615,7 +636,7 @@ class LlmDataSpec extends SparkSuite {
   }
 
   test("dsirLogWeights: target-like docs outscore off-target docs; " +
-      "singleScan parity; short docs dropped") {
+      "short docs dropped") {
     import spark.implicits._
     val source = Seq(
       (1L, "alpha beta alpha beta alpha beta"),
@@ -624,14 +645,10 @@ class LlmDataSpec extends SparkSuite {
       (4L, "solo")).toDF("doc_id", "text")
     val target = Seq((100L, "alpha beta alpha beta alpha"))
       .toDF("doc_id", "text")
-    def weights(single: Boolean) =
-      Sampling.dsirLogWeights(source, target, "doc_id", "text",
-          nBuckets = 256, singleScan = single)
-        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val w = weights(true)
-    val w2 = weights(false)
+    val w = Sampling.dsirLogWeights(source, target, "doc_id", "text",
+        nBuckets = 256)
+      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     Caches.release()
-    assert(w == w2)
     assert(!w.contains(4L)) // < 2 tokens: no bigram features
     // doc 1 is all target bigrams, doc 2 shares none with the target,
     // doc 3 mixes: strict ordering by target affinity
@@ -973,6 +990,7 @@ class LlmDataSpec extends SparkSuite {
       (4L, "solo")).toDF("doc_id", "text")
     val out = TextAnalysis.lmPerplexity(docs, "doc_id", "text", addK = 0.5)
       .orderBy("doc_id").collect()
+    Caches.release()
     assert(out.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L)) // doc 4: 1 token
     val pAB = 3.5 / 4.5; val pBA = 1.5 / 2.5; val pCC = 1.5 / 2.5
     val exp1 = math.exp(-(2 * math.log(pAB) + math.log(pBA)) / 3)
@@ -1026,6 +1044,7 @@ class LlmDataSpec extends SparkSuite {
         .orderBy("doc_id").collect().map(_.getDouble(2))
       val oneShot = TextAnalysis.lmPerplexity(corpus, "doc_id", "text")
         .orderBy("doc_id").collect().map(_.getDouble(2))
+      Caches.release()
       self.zip(oneShot).foreach { case (a, b) =>
         assert(math.abs(a - b) < 1e-9) }
 

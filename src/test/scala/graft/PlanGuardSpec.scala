@@ -87,6 +87,7 @@ class PlanGuardSpec extends SparkSuite {
   test("lmPerplexity: partial-aggregated counts, broadcast vocab, " +
       "no window (q86)") {
     val p = planOf(q("q86_lm_perplexity"))
+    graft.Caches.release()
     // hot bigrams are aggregate/join keys, never a window funnel
     assert(!p.contains("Window"), p)
     // count aggregates combine map-side before the shuffle
@@ -107,15 +108,37 @@ class PlanGuardSpec extends SparkSuite {
     assert(!p.contains("Window"), p)
   }
 
-  test("lmPerplexity singleScan equals the multi-scan default") {
+  test("lmPerplexity: both branches read the pinned token stream; " +
+      "rows match a brute-force bigram LM") {
     import spark.implicits._
-    val docs = Seq((1L, "a b a b c"), (2L, "b c b"), (3L, "x y"),
-      (4L, "a c a")).toDF("doc_id", "text")
-    def res(single: Boolean) = graft.llmdata.TextAnalysis
-      .lmPerplexity(docs, "doc_id", "text", singleScan = single)
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(res(true).toSeq == res(false).toSeq)
+    val texts = Seq(1L -> "a b a b c", 2L -> "b c b", 3L -> "x y",
+      4L -> "a c a")
+    val out = graft.llmdata.TextAnalysis
+      .lmPerplexity(texts.toDF("doc_id", "text"), "doc_id", "text")
+      .orderBy("doc_id")
+    val p = planOf(out)
+    val got = out.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    graft.Caches.release()
+    // the count branch and the scoring branch both scan the cache
+    assert("InMemoryTableScan".r.findAllIn(p).size >= 2, p)
+    // add-0.5 bigram LM over the corpus's bigram types
+    val toks = texts.map { case (d, t) => d -> t.split(" ").toSeq }
+    val bigrams = toks.flatMap { case (d, ts) =>
+      ts.sliding(2).map(w => d -> (w(0), w(1))) }
+    val bc = bigrams.groupBy(_._2).view.mapValues(_.size.toDouble).toMap
+    val hc = bc.groupBy(_._1._1).view.mapValues(_.values.sum).toMap
+    val v = bc.keys.flatMap { case (a, b) => Seq(a, b) }.toSet.size
+    val want = toks.map { case (d, ts) =>
+      val ws = ts.sliding(2).toSeq
+      val nll = ws.map(w => -math.log((bc((w(0), w(1))) + 0.5) /
+        (hc(w(0)) + 0.5 * v))).sum
+      (d, ws.size.toLong, math.exp(nll / ws.size))
+    }
+    assert(got.map(_._1) == want.map(_._1))
+    got.zip(want).foreach { case (g, w) =>
+      assert(g._2 == w._2 && math.abs(g._3 - w._3) < 1e-9, s"$g vs $w")
+    }
   }
 
   test("AQE splits a skewed join at runtime (the planner-level skew " +

@@ -23,8 +23,9 @@ class SketchesSpec extends SparkSuite {
         scala.util.Random.shuffle(occurrences)).toDF("token")
       .repartition(7) // MG summaries must merge across partitions
     val k = 10
-    val got = Sketches.heavyHitters(df, "token", k, singleScan = false)
+    val got = Sketches.heavyHitters(df, "token", k)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    Caches.release()
     val truth = occurrences.groupBy(identity).view
       .mapValues(_.size.toLong).toMap
       .filter { case (_, c) => c * (k + 1) > n }
@@ -40,9 +41,9 @@ class SketchesSpec extends SparkSuite {
       (0 until 2000).map(i => s"noise$i")
     val df = spark.createDataset(scala.util.Random.shuffle(occ))
       .toDF("token").repartition(5)
-    val got = Sketches.heavyHitters(df, "token", k = 4,
-        singleScan = false)
+    val got = Sketches.heavyHitters(df, "token", k = 4)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    Caches.release()
     // n = 2700; 700 * (k+1) = 3500 > 2700, and no noise token can
     // reach the strictly-greater threshold
     assert(got == Map("dominant" -> 700L))
