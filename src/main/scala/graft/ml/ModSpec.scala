@@ -23,9 +23,11 @@ import org.apache.spark.sql.DataFrame
   *   - [[fitNative]]: exact activation/dropout parity via [[Net]]
   *     (relu / leakyRelu(α) / sigmoid / linear / K-1-logit softmax,
   *     real dropout masks, Adam + linear LR decay, validation early
-  *     stop). Feature prep distributed, net fit driver-local over a
-  *     row-capped collect (the reference's own memory envelope),
-  *     scoring distributed.
+  *     stop). Feature prep and scoring distributed; the net fit is
+  *     the reference's mini-batch loop driver-local over a row-capped
+  *     collect (the reference's own memory envelope) by default, or
+  *     with `distributed = true` synchronous full-batch Adam over the
+  *     whole frame (no row cap).
   * Input -> StringIndexer/OneHotEncoder/VectorAssembler either way.
   */
 object ModSpec {
@@ -194,9 +196,14 @@ object ModSpec {
     * relu / leakyRelu(α) / sigmoid / linear hidden layers, DropOut
     * between layers, K-1-logit softmax head — everything MLlib's
     * sigmoid-only MLP approximates away. Feature prep (indexers,
-    * one-hot, assembler) runs distributed; the net trains driver-local
-    * (row-capped — the reference's own memory envelope; sample first
-    * at scale) and scores distributed.
+    * one-hot, assembler) runs distributed, and so does scoring. The
+    * net trains through one of [[Net]]'s two fits:
+    * `distributed = false` (default) runs [[Net.fit]], the reference's
+    * mini-batch loop driver-local over a row-capped collect (its own
+    * memory envelope; sample first at scale); `distributed = true`
+    * runs [[Net.fitDistributed]], one broadcast + treeAggregate
+    * gradient pass and a driver Adam step per epoch over the full
+    * frame (no row cap, no driver matrix; `cfg.batchSize` unused).
     *
     * Classification targets must be class indices 0..K-1 (the
     * reference requires a one-hot target for softmax, modspec
@@ -206,8 +213,7 @@ object ModSpec {
   def fitNative(layers: Seq[Layer], df: DataFrame,
       classification: Boolean, nClasses: Int = 2,
       cfg: Net.Config = Net.Config(), valid: Option[DataFrame] = None,
-      distributed: Boolean = false,
-      localSgd: Boolean = false): NativeModel = {
+      distributed: Boolean = false): NativeModel = {
     val input = inputOf(layers)
     val target = layers.collectFirst { case t: Target => t }.getOrElse(
       throw new IllegalArgumentException("modspec: no Target layer"))
@@ -245,15 +251,7 @@ object ModSpec {
       case _ =>
     }
     require(specs.nonEmpty, "modspec: no FC layers")
-    // distributed = synchronous large-batch Adam over the full frame
-    // (no row cap, no driver matrix); localSgd = per-partition
-    // mini-batch loops with periodic weight averaging (more steps per
-    // pass, averaging bias); default keeps the reference's mini-batch
-    // loop on a capped collect
-    val fitFn =
-      if (localSgd) Net.fitDistributedLocalSgd _
-      else if (distributed) Net.fitDistributed _
-      else Net.fit _
+    val fitFn = if (distributed) Net.fitDistributed _ else Net.fit _
     val net = fitFn(prep.transform(df), specs.toSeq,
       if (classification) nClasses else 0, cfg, "__features",
       target.field, valid.map(prep.transform), embeds.toSeq)

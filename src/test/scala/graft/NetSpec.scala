@@ -348,74 +348,64 @@ class NetSpec extends SparkSuite {
       shuffleEachEpoch = false, seed = 11)
     val specs = Seq(Net.LayerSpec(4, Net.Relu),
       Net.LayerSpec(2, Net.SoftMax))
+    def assertSame(local: Net.NetModel, dist: Net.NetModel): Unit = {
+      local.layers.zip(dist.layers).foreach { case (a, b) =>
+        a.w.zip(b.w).foreach { case (ra, rb) =>
+          ra.zip(rb).foreach { case (va, vb) =>
+            assert(math.abs(va - vb) < 1e-9, s"weight drift $va vs $vb") }
+        }
+        a.b.zip(b.b).foreach { case (va, vb) =>
+          assert(math.abs(va - vb) < 1e-9) }
+      }
+      Seq(local.trainCost -> dist.trainCost,
+        local.validCost -> dist.validCost).foreach { case (ca, cb) =>
+        assert(ca.length == cb.length, s"${ca.toSeq} vs ${cb.toSeq}")
+        ca.zip(cb).foreach { case (va, vb) =>
+          assert(math.abs(va - vb) < 1e-9, s"cost drift $va vs $vb") }
+      }
+    }
     val local = Net.fitLocal(x, y, specs, nClasses = 2, cfg)
     val dist = Net.fitDistributed(featFrame(x, y), specs, nClasses = 2,
       cfg)
-    local.layers.zip(dist.layers).foreach { case (a, b) =>
-      a.w.zip(b.w).foreach { case (ra, rb) =>
-        ra.zip(rb).foreach { case (va, vb) =>
-          assert(math.abs(va - vb) < 1e-9, s"weight drift $va vs $vb") }
-      }
-      a.b.zip(b.b).foreach { case (va, vb) =>
-        assert(math.abs(va - vb) < 1e-9) }
-    }
-    assert(math.abs(local.trainCost.last - dist.trainCost.last) < 1e-9)
+    assertSame(local, dist)
+    assert(local.trainCost.length == 1)
+
+    // twelve steps with a label-flipped validation set: the LR
+    // schedule, the cost histories, the early stop and the best
+    // snapshot it returns all agree
+    val vy = y.map(1.0 - _)
+    val cfg12 = cfg.copy(epochs = 12, lrStart = 0.1, lrEnd = 0.02,
+      patience = 2)
+    val local12 = Net.fitLocal(x, y, specs, nClasses = 2, cfg12,
+      validX = x, validY = vy)
+    val dist12 = Net.fitDistributed(featFrame(x, y), specs,
+      nClasses = 2, cfg12, valid = Some(featFrame(x, vy)))
+    assert(local12.validCost.length < 12, "should stop early")
+    assertSame(local12, dist12)
   }
 
-  test("fitDistributedLocalSgd: single partition, one round equals " +
-      "fitLocal (same batch boundaries, tail-unused, fresh Adam)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val x = Array.tabulate(240)(_ =>
-      Array(rnd.nextGaussian(), rnd.nextGaussian()))
-    val y = x.map(v => if (v(0) - v(1) > 0) 1.0 else 0.0)
-    val cfg = Net.Config(batchSize = 100, epochs = 1, lrStart = 1e-2,
-      shuffleEachEpoch = false, seed = 11)
-    val specs = Seq(Net.LayerSpec(4, Net.Relu),
-      Net.LayerSpec(2, Net.SoftMax))
-    val local = Net.fitLocal(x, y, specs, nClasses = 2, cfg)
-    // coalesce(1) preserves the local collection's order, so the
-    // stream sees the exact fitLocal batches (incl. the unused tail)
-    val toVec = udf { a: Seq[Double] =>
-      org.apache.spark.ml.linalg.Vectors.dense(a.toArray)
+  test("fitDistributed: an empty frame throws and releases what it " +
+      "persisted") {
+    val sc = spark.sparkContext
+    val empty = featFrame(Array.empty, Array.empty)
+    val before = sc.getPersistentRDDs.size
+    intercept[IllegalArgumentException] {
+      Net.fitDistributed(empty, Seq(Net.LayerSpec(1, Net.Linear)),
+        nClasses = 0)
     }
-    val df = x.zip(y).map { case (xi, yi) => (xi.toSeq, yi) }.toSeq
-      .toDF("__raw", "label").coalesce(1)
-      .withColumn("__features", toVec(col("__raw")))
-    val sgd = Net.fitDistributedLocalSgd(df, specs, nClasses = 2, cfg)
-    local.layers.zip(sgd.layers).foreach { case (a, b) =>
-      a.w.zip(b.w).foreach { case (ra, rb) =>
-        ra.zip(rb).foreach { case (va, vb) =>
-          assert(math.abs(va - vb) < 1e-12,
-            s"local-sgd drift $va vs $vb") }
-      }
-      a.b.zip(b.b).foreach { case (va, vb) =>
-        assert(math.abs(va - vb) < 1e-12) }
-    }
+    assert(sc.getPersistentRDDs.size == before)
   }
 
-  test("fitDistributedLocalSgd learns XOR across partitions with " +
-      "weight averaging") {
-    val x = Array(Array(0.0, 0.0), Array(0.0, 1.0),
-      Array(1.0, 0.0), Array(1.0, 1.0))
-    val xs = Array.tabulate(240)(i => x(i % 4))
-    val ys = Array.tabulate(240)(i => if (i % 4 == 1 || i % 4 == 2) 1.0
-      else 0.0)
-    val df = featFrame(xs, ys).cache()
-    val specs = Seq(Net.LayerSpec(8, Net.Relu),
-      Net.LayerSpec(2, Net.SoftMax))
-    // 40 averaging rounds x (80/20) local steps per partition; the
-    // sync large-batch loop above needs 150 full passes for the same
-    // task — local stepping buys convergence per pass
-    val cfg = Net.Config(batchSize = 20, epochs = 40, lrStart = 5e-2,
-      lrEnd = 1e-2)
-    val m = Net.fitDistributedLocalSgd(df, specs, nClasses = 2, cfg)
-    x.zipWithIndex.foreach { case (v, i) =>
-      val want = if (i == 1 || i == 2) 1 else 0
-      val p = m.predictOne(v)
-      assert(p.indexOf(p.max) == want, s"XOR local-sgd: ${p.toSeq}")
+  test("fit: the row cap refuses a larger frame and names the " +
+      "uncapped distributed fit") {
+    val x = Array.tabulate(20)(i => Array(i.toDouble))
+    val e = intercept[IllegalArgumentException] {
+      Net.fit(featFrame(x, x.map(_(0))), Seq(Net.LayerSpec(1, Net.Linear)),
+        nClasses = 0, Net.Config(maxRows = 10))
     }
-    df.unpersist(blocking = false)
+    assert(e.getMessage.contains("exceeds 10 rows"))
+    assert(e.getMessage.contains("ModSpec.fitNative(distributed = true)"))
+    assert(e.getMessage.contains("Net.fitDistributed"))
   }
 
   test("fitDistributed learns XOR across partitions and is " +
