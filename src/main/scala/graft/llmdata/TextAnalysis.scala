@@ -989,69 +989,80 @@ object TextAnalysis {
 
   def fingerprint(text: Column): Column = md5(Dedup.normalize(text))
 
-  /** Per-position modular k-gram hashes of a cleaned string, one
-    * tight rolling loop per document (the [[Dedup]] windowHashes
-    * venue rule — no interpreted lambda per k-gram): each hash is
-    * the char-code polynomial fold (a*31 + c) mod 1e9+7 over k
-    * consecutive chars, EXACTLY the portable fold DuckDB replays
-    * with list_reduce, rolled in O(1) per step by subtracting the
-    * leading term (no modular inverse needed — only division by the
-    * base would need one).
+  /** The winnowing kernel: one tight loop per cleaned string (the
+    * [[Dedup]] windowHashes venue rule — no interpreted lambda per
+    * k-gram, no boxed element, no tuple) that
+    *   1. rolls the k-gram hashes into a primitive `long[]`: each is
+    *      the char-code polynomial fold (a*31 + c) mod 1e9+7 over k
+    *      consecutive chars, EXACTLY the portable fold DuckDB replays
+    *      with list_reduce, rolled in O(1) per step by subtracting
+    *      the leading term (only division by the base would need a
+    *      modular inverse);
+    *   2. for every window end e in [min(w,nk)-1, nk-1] over the nk
+    *      hashes picks the minimum of positions max(0, e-w+1)..e,
+    *      ties to the RIGHTMOST. The pick of window e+1 is the pick
+    *      of window e or e itself unless the old pick slid out, so
+    *      only then is the window rescanned;
+    *   3. emits each picked position once, packed `pos << 32 | fp`
+    *      (fp < 1e9+7 < 2^30). Picks never move left, so a repeat
+    *      can only follow itself.
+    * A string with fewer than w k-grams has its single all-covering
+    * window; one shorter than k (or null) has none.
     */
-  private val kgramHashes = udf { (s: String, k: Int) =>
-    val n = if (s == null) 0 else s.length
-    if (n < k) Seq.empty[Long]
+  private val winnowPicks = udf { (s: String, k: Int, w: Int) =>
+    val nk = (if (s == null) 0 else s.length) - k + 1
+    if (nk < 1) Array.emptyLongArray
     else {
       val P = 1000000007L
       var pw = 1L // 31^(k-1) mod P
       var i = 0
       while (i < k - 1) { pw = pw * 31 % P; i += 1 }
-      val out = new Array[Long](n - k + 1)
+      val hs = new Array[Long](nk)
       var h = 0L
       i = 0
       while (i < k) { h = (h * 31 + s.charAt(i)) % P; i += 1 }
-      out(0) = h
+      hs(0) = h
       i = 1
-      while (i <= n - k) {
+      while (i < nk) {
         h = ((h + P - s.charAt(i - 1) * pw % P) * 31 +
           s.charAt(i + k - 1)) % P
-        out(i) = h
+        hs(i) = h
         i += 1
       }
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+      val out = new Array[Long](nk)
+      var m = 0
+      var best, last = -1
+      var e = math.min(w, nk) - 1
+      while (e < nk) {
+        val lo = math.max(0, e - w + 1)
+        if (best < lo) {
+          best = lo
+          var j = lo + 1
+          while (j <= e) { if (hs(j) <= hs(best)) best = j; j += 1 }
+        } else if (hs(e) <= hs(best)) best = e
+        if (best != last) {
+          out(m) = best.toLong << 32 | hs(best)
+          m += 1
+          last = best
+        }
+        e += 1
+      }
+      java.util.Arrays.copyOf(out, m)
     }
   }
 
-  /** Per-document winnow selection over the k-gram hash array, one
-    * tight O(n·w) loop per doc (same venue rule as [[kgramHashes]]):
-    * for every window end e in [min(w,n)-1, n-1] pick the minimum
-    * hash over positions max(0, e-w+1)..e, ties to the RIGHTMOST
-    * position (`<=` while scanning ascending keeps the last equal
-    * minimum). Returns the deduped (pos, fp) selections. Replaces
-    * the r14 shape — posexplode of every k-gram, a doc-keyed
-    * exchange of the full k-gram stream, sort, sliding window min —
-    * with zero exchanges (r15; the window semantics, including the
-    * short-document single-window case, are bit-identical and the
-    * q259 oracle replays them in SQL).
+  /** One `(docId, pos, fp)` row per input row and pick of
+    * [[winnowPicks]] over the [a-z0-9]-cleaned text.
     */
-  private val winnowSelect = udf { (hs: Seq[Long], w: Int) =>
-    val n = hs.length
-    if (n == 0) Seq.empty[(Int, Long)]
-    else {
-      val out = scala.collection.mutable.LinkedHashSet.empty[(Int, Long)]
-      var e = math.min(w - 1, n - 1)
-      while (e < n) {
-        var best = math.max(0, e - w + 1)
-        var j = best + 1
-        while (j <= e) {
-          if (hs(j) <= hs(best)) best = j
-          j += 1
-        }
-        out += ((best, hs(best)))
-        e += 1
-      }
-      out.toSeq
-    }
+  private def winnowRows(df: DataFrame, docId: String, text: String,
+      k: Int, w: Int): DataFrame = {
+    require(k >= 2 && w >= 2, s"winnow: k $k w $w")
+    val cleaned = regexp_replace(lower(col(text)), "[^a-z0-9]", "")
+    df.select(col(docId),
+        explode(winnowPicks(cleaned, lit(k), lit(w))).as("__pick"))
+      .select(col(docId),
+        shiftrightunsigned(col("__pick"), 32).cast("int").as("pos"),
+        col("__pick").bitwiseAND(0xffffffffL).as("fp"))
   }
 
   /** WINNOWING document fingerprints (Schleimer, Wilkerson & Aiken
@@ -1061,26 +1072,16 @@ object TextAnalysis {
     * shared substring of length >= w + k - 1 yields at least one
     * SHARED fingerprint, which grep-style sampling can't promise.
     * Text is cleaned to [a-z0-9] first (case/punct/whitespace
-    * invariance). The per-window min is one bounded window frame per
-    * document (doc-length bound, the q110 rule); selection dedups to
-    * (doc, pos, fp). Short documents with fewer than w k-grams
-    * contribute their single all-covering window. Pure modular
-    * integer arithmetic end to end — the oracle replays every
+    * invariance). Hashing and selection are one per-row kernel
+    * ([[winnowPicks]], zero exchanges); one distinct merges duplicate
+    * doc rows into (doc, pos, fp). Short documents with fewer than w
+    * k-grams contribute their single all-covering window. Pure
+    * modular integer arithmetic end to end — the oracle replays every
     * fingerprint.
     */
   def winnowFingerprints(df: DataFrame, docId: String, text: String,
-      k: Int, w: Int): DataFrame = {
-    require(k >= 2 && w >= 2, s"winnowFingerprints: k $k w $w")
-    val cleaned = regexp_replace(lower(col(text)), "[^a-z0-9]", "")
-    df.where(col(text).isNotNull)
-      .select(col(docId), kgramHashes(cleaned, lit(k)).as("__hs"))
-      .where(size(col("__hs")) >= 1)
-      .select(col(docId),
-        explode(winnowSelect(col("__hs"), lit(w))).as("__s"))
-      .select(col(docId), col("__s._1").as("pos"),
-        col("__s._2").as("fp"))
-      .distinct()
-  }
+      k: Int, w: Int): DataFrame =
+    winnowRows(df, docId, text, k, w).distinct()
 
   /** Winnowing SIMILARITY report — the MOSS use of the fingerprints:
     * document pairs sharing >= `minShared` selected fingerprints
@@ -1104,9 +1105,8 @@ object TextAnalysis {
       maxDocPermille: Int = 0): DataFrame = {
     require(maxDocPermille >= 0 && maxDocPermille <= 1000,
       s"winnowSimilarity: maxDocPermille $maxDocPermille")
-    val all = graft.Caches.pin(
-      winnowFingerprints(df, docId, text, k, w)
-        .select(col(docId).as("member"), col("fp").as("key")).distinct())
+    val all = graft.Caches.pin(winnowRows(df, docId, text, k, w)
+      .select(col(docId).as("member"), col("fp").as("key")).distinct())
     val strip = if (maxDocPermille == 0) None else {
       val nDocs = all.select(col("member")).distinct().count()
       Some((d: Column) => d * 1000 <= lit(maxDocPermille) * lit(nDocs))

@@ -93,7 +93,15 @@ private[graft] object PairCensus {
     // explode-based in-row fan-out was probed and rejected: generate
     // parallelism is bounded by the key rows (one task serially emits
     // a hub's millions of pairs).
-    wedge.repartition(col("a"))
+    // The partition count is EXPLICIT, the session's shuffle width:
+    // AQE coalesces a by-column exchange by its BYTES, but this
+    // stage's cost is its hash-map ENTRIES, one per distinct (a, b),
+    // and a wedge is a few bytes: the pair-census benchmark's few MB
+    // of wedges were coalesced onto 2 of 4 tasks, which spilled. AQE
+    // never coalesces a by-number exchange, so the count keeps one
+    // task per shuffle partition.
+    val width = km.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    wedge.repartition(width.toInt, col("a"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n"),
         weights.map { case (name, _) => sum(col(name)).as(name) }: _*)

@@ -2002,6 +2002,58 @@ class LlmDataSpec extends SparkSuite {
     assert(stripped.length < unstripped.length)
   }
 
+  test("winnowFingerprints: exact rows of the q259 oracle's definition " +
+      "(k-gram fold, window ends, rightmost minimum) on tie-heavy " +
+      "random text and edge cases") {
+    // the oracle's definition, replayed by brute force: each k-gram
+    // hash is its own (a*31 + c) mod 1e9+7 fold over the cleaned
+    // string; window ends e run over [min(w, nk)-1, nk-1]; each picks
+    // the minimum of positions max(0, e-w+1)..e, ties to the rightmost
+    def oracle(rows: Seq[(Long, String)], k: Int, w: Int)
+        : Seq[(Long, Int, Long)] = rows.flatMap {
+      case (_, null) => Nil
+      case (doc, t) =>
+        val s = t.toLowerCase(java.util.Locale.ROOT)
+          .replaceAll("[^a-z0-9]", "")
+        val nk = s.length - k + 1
+        val h = (0 until nk).map(p =>
+          s.substring(p, p + k).foldLeft(0L)((a, c) =>
+            (a * 31 + c) % 1000000007L))
+        if (nk < 1) Nil else (math.min(w, nk) - 1 until nk).map { e =>
+          val lo = math.max(0, e - w + 1)
+          val p = (lo to e).reduce((x, y) => if (h(y) <= h(x)) y else x)
+          (doc, p, h(p))
+        }
+    }.distinct.sorted
+    val rnd = new scala.util.Random(20261018L)
+    val random = (1L to 40L).map(d =>
+      d -> Seq.fill(5 + rnd.nextInt(120))("abc"(rnd.nextInt(3)))
+        .mkString)
+    val edges = Seq(
+      100L -> null,                        // null text
+      101L -> "a-B c",                     // cleaned length 3 < k
+      102L -> "abcdefghij",                // k <= n < w+k-1: one window
+      103L -> "Q!q?QqQQqqqqQqqQ",          // one repeated character
+      104L -> "dup dup dup dup row",       // duplicate doc rows
+      104L -> "dup dup dup dup row",
+      105L -> "Ünïcödé — 東京 straße ÀBC déjà vu çà et là 123",
+      106L -> "")
+    val rows = random ++ edges
+    val df = rows.toDF("doc_id", "text")
+    for ((k, w) <- Seq((3, 4), (4, 4), (2, 7), (5, 2), (4, 8), (8, 8))) {
+      val got = TextAnalysis.winnowFingerprints(df, "doc_id", "text",
+          k, w).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
+      val want = oracle(rows, k, w)
+      assert(got == want, s"k=$k w=$w")
+    }
+    // the edge cases are live: the single-window and repeated-char
+    // docs select, the short and null ones do not
+    val fp44 = oracle(edges, 4, 4).map(_._1).toSet
+    assert(fp44 == Set(102L, 103L, 104L, 105L), fp44)
+    assert(oracle(edges, 4, 8).count(_._1 == 102L) == 1)
+  }
+
   test("canonicalizeUrlSorted: param order collapses, tracking keys " +
       "drop wherever they sit, an emptied query loses its ?") {
     val cases = Seq(

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+  AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 
 /** Plan-shape regression guards: the optimizations the engine's scale
   * story depends on must stay visible in the physical plan.
@@ -471,5 +474,48 @@ class PlanGuardSpec extends SparkSuite {
     val p = planOf(q("q217_int8_quant"))
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("SortMergeJoin"), p)
+  }
+
+  test("pair census: under AQE the pair count's exchange keeps every " +
+      "shuffle partition — no coalescing read (commonNeighbors)") {
+    import spark.implicits._
+    // every node of a ring of 60 links to its 3 successors: a few KB
+    // of wedges, which AQE would coalesce into one partition by bytes
+    val adj = (for { v <- 0L until 60L; d <- 1L to 3L }
+      yield (v, (v + d) % 60L)).toDF("node", "nbr")
+    val conf = spark.conf
+    val keys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> conf.getOption(k))
+    try {
+      keys.foreach(conf.set(_, "true"))
+      val df = graft.ops.Graph.commonNeighbors(adj, minCommon = 1L)
+      df.queryExecution.toRdd.count() // finalize the adaptive plan
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case s: QueryStageExec => nodes(s.plan)
+        case _ => p.children.flatMap(nodes)
+      })
+      def feed(p: SparkPlan): SparkPlan = p match {
+        case _: ShuffleQueryStageExec | _: AQEShuffleReadExec => p
+        case _ => feed(p.children.head)
+      }
+      val root = df.queryExecution.executedPlan
+      val counts = nodes(root).collect {
+        case a: BaseAggregateExec
+            if a.groupingExpressions.map(_.name) == Seq("a", "b") => a
+      }
+      assert(counts.nonEmpty, s"no (a, b) pair count in:\n$root")
+      val width = conf.get("spark.sql.shuffle.partitions").toInt
+      assert(width > 1)
+      counts.map(feed).foreach {
+        case s: ShuffleQueryStageExec =>
+          assert(s.shuffle.numPartitions == width, s"$s")
+        case r => fail(s"the pair count reads through $r:\n$root")
+      }
+    } finally {
+      saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+      graft.Caches.release()
+    }
   }
 }
