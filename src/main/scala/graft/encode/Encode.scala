@@ -194,11 +194,11 @@ object Encode {
 
   /** ReInit / UpdateFts: re-encode raw columns under a (new) schema —
     * the whole-table refit-or-apply (gdata.go:555-608, 1078-1120).
-    * Columns listed in the schema are encoded by role; columns absent
-    * from the schema are dropped when `keepOnly`.
+    * Columns listed in the schema are encoded by role; every other
+    * column passes through unchanged.
     */
-  def reInit(df: DataFrame, schema: FeatureSchema,
-      keepOnly: Boolean = false): (DataFrame, FeatureSchema) = {
+  def reInit(df: DataFrame,
+      schema: FeatureSchema): (DataFrame, FeatureSchema) = {
     var cur = df
     var out = FeatureSchema.empty
     schema.metas.foreach { m =>
@@ -218,12 +218,6 @@ object Encode {
         case FeatureRole.Embed => // embedding matrices live in the model layer
           out = out.updated(m)
       }
-    }
-    if (keepOnly) {
-      val keep = cur.columns.filter(c =>
-        schema.has(c) || schema.metas.exists(m =>
-          m.role == FeatureRole.OneHot && c.startsWith(m.name + "_")))
-      cur = cur.select(keep.toIndexedSeq.map(cur(_)): _*)
     }
     (cur, out)
   }

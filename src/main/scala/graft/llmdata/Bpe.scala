@@ -11,28 +11,16 @@ import org.apache.spark.sql.functions._
   * whitespace/BPE-ish regex tokens; this LEARNS the subword merges
   * from the corpus).
   *
-  * Scale shape — the reason this is cheap at 100 TB:
+  * Learning runs on the shared [[MergeLearner]] (one corpus scan into
+  * the word-type table, driver loop under a type budget, distributed
+  * rounds past it); BPE supplies only its [[rule]]: the character
+  * split, the merged symbol `l + r`, and the argmax by weighted pair
+  * count.
   *
-  *   - The corpus is scanned ONCE, into the word-TYPE table
-  *     `(token, cnt)` (one tokenize+explode+groupBy shuffle over a
-  *     short string key — the same census shape as every dedup
-  *     operator here). Classic BPE learning is defined over word
-  *     types weighted by frequency, so every subsequent merge round
-  *     touches only the type table (|vocabulary| rows, millions at
-  *     worst), never the corpus again.
-  *   - Each merge round is two small jobs over the type table:
-  *     a weighted pair census (explode adjacent symbol pairs,
-  *     sum(cnt)) and a one-row argmax to the driver; then the merge
-  *     is applied with a tight-loop UDF. Rounds are bounded by
-  *     `nMerges` (the vocabulary budget), so the driver loop is
-  *     O(nMerges) jobs by construction — the
-  *     [[Dedup.duplicateClusters]] lifecycle pattern (persist next,
-  *     materialize, unpersist previous) keeps the plan flat.
-  *   - Serving ([[encodeCounts]]) never re-encodes repeated tokens:
-  *     the distinct tokens of the frame are encoded once (a
-  *     vocabulary-sized job) and joined back to the occurrence
-  *     stream — the dictionary trick that turns per-occurrence
-  *     subword work into per-TYPE work.
+  * Serving ([[encodeCounts]]) never re-encodes repeated tokens: the
+  * distinct tokens of the frame are encoded once and joined back to
+  * the occurrence stream ([[Subword.encodeDistinct]]) — the dictionary
+  * trick that turns per-occurrence subword work into per-TYPE work.
   *
   * Symbols are the characters of [[Dedup.normalizeTokens]] output;
   * merges never cross token boundaries (GPT-2-style pre-split by
@@ -155,10 +143,7 @@ object Bpe {
     val nSub = udf { (tok: String, s: Long) =>
       encodeTokenDropout(tok, ranksB.value, p, s).length
     }
-    df.where(col(text).isNotNull)
-      .select(col(id), posexplode(Dedup.normalizeTokens(col(text)))
-        .as(Seq("__pos", "__tok")))
-      .withColumn("__seed", xxhash64(col(id), col("__pos"), lit(seed)))
+    Subword.seededOccurrences(df, id, text, seed)
       .groupBy(col(id))
       .agg(count(lit(1)).as("n_words"),
         sum(nSub(col("__tok"), col("__seed")).cast("long")).as("n_bpe"))
@@ -184,37 +169,27 @@ object Bpe {
     out.toArray
   }
 
-  /** Word-type table `(token, cnt)` — the single corpus scan. */
-  private def typeTable(df: DataFrame, text: String): DataFrame =
-    df.where(col(text).isNotNull)
-      .select(explode(Dedup.normalizeTokens(col(text))).as("__tok"))
-      .groupBy(col("__tok")).agg(count(lit(1)).as("__cnt"))
-
-  /** Weighted adjacent-pair census over a symbol-sequence table
-    * `(syms: array<string>, cnt)`: one row per (sym_l, sym_r) with the
-    * total number of adjacent occurrences across all token
-    * occurrences (overlapping positions count, as in the reference
-    * algorithm: "aaa" contributes (a,a) twice).
+  /** BPE's merge rule: the character split, the merged symbol
+    * `l + r`, and the argmax by weighted pair count, ties by
+    * (sym_l, sym_r) ascending. That order is static, so the driver loop
+    * reads the head of an ordered index — O(log |pairs|) per round, not
+    * a census scan — and a distributed round is one
+    * `orderBy(...).head(1)`.
     */
-  private val pairsUdf = udf { (syms: Seq[String]) =>
-    if (syms == null || syms.length < 2) Seq.empty[Seq[String]]
-    else {
-      val out = new Array[Seq[String]](syms.length - 1)
-      var i = 0
-      while (i < syms.length - 1) {
-        out(i) = Seq(syms(i), syms(i + 1))
-        i += 1
-      }
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
-    }
+  private[graft] val rule: MergeLearner.Rule = new MergeLearner.Rule {
+    def split(tok: String): Array[String] = tok.map(_.toString).toArray
+    def merged(l: String, r: String): String = l + r
+    val scoresUnits = false
+    def compareScore(c1: Long, l1: Long, r1: Long,
+        c2: Long, l2: Long, r2: Long): Int = java.lang.Long.compare(c1, c2)
+    def pick(census: DataFrame,
+        minPairCount: Long): Option[MergeLearner.Merge] =
+      census.orderBy(desc("pair_count"), asc("sym_l"), asc("sym_r"))
+        .head(1).headOption
+        .map(r => MergeLearner.Merge(r.getAs[String]("sym_l"),
+          r.getAs[String]("sym_r"), r.getAs[Long]("pair_count"), 0L, 0L))
+        .filter(_.count >= minPairCount)
   }
-
-  private def pairCensus(types: DataFrame): DataFrame =
-    types.select(col("__cnt"),
-        explode(pairsUdf(col("__syms"))).as("__p"))
-      .groupBy(col("__p").getItem(0).as("sym_l"),
-        col("__p").getItem(1).as("sym_r"))
-      .agg(sum(col("__cnt")).as("pair_count"))
 
   /** Round-1 adjacent-pair statistics over the corpus — the
     * oracle-checkable stage of BPE learning (exact counts, exact
@@ -223,292 +198,34 @@ object Bpe {
     *
     * Output: (sym_l, sym_r, pair_count).
     */
-  def pairStats(df: DataFrame, text: String): DataFrame = {
-    val chars = udf { (t: String) => t.map(_.toString) }
-    pairCensus(typeTable(df, text)
-      .select(chars(col("__tok")).as("__syms"), col("__cnt")))
-  }
+  def pairStats(df: DataFrame, text: String): DataFrame =
+    MergeLearner.census(
+      MergeLearner.symbolTable(Subword.typeTable(df, text), rule),
+      units = false)
 
   /** Learn `nMerges` BPE merges from the corpus. Stops early when no
     * adjacent pair reaches `minPairCount`. Returns the model plus the
     * merge table `(rank, sym_l, sym_r, merged, pair_count)` for
     * auditing (rank 0 = first merge).
     *
-    * Loop venue: the corpus-sized work — the word-type census — is
-    * always distributed. The merge rounds touch only the type table,
-    * and when it fits a documented driver budget (`maxDriverTypes`
-    * types; the counts make it exact regardless of venue) the loop
-    * runs in memory on the driver — one collect of
-    * (token, cnt), then nMerges tight in-memory rounds. This is the
-    * standard shape of every production BPE learner (the type table
-    * IS the tokenizer's working set), and it matters here because a
-    * DataFrame round costs seconds of plan-compile + codegen per
-    * merge regardless of data size — measured 52s for 16 merges over
-    * a 31-type corpus vs <0.1s in memory. Corpora whose type table
-    * exceeds the budget take the distributed rounds, where per-round
-    * planning is noise against the data; both venues compute the
-    * identical argmax (max weighted count, ties by pair ascending)
-    * and BpeSpec pins them equal.
+    * Loop venue ([[MergeLearner.fit]]): the word-type census is always
+    * distributed; the merge rounds run in memory on the driver when
+    * the type table fits `maxDriverTypes` types (the counts make it
+    * exact regardless of venue), and as distributed rounds past it. Both
+    * venues compute the identical argmax and BpeSpec pins them equal.
     */
   def fit(df: DataFrame, text: String, nMerges: Int,
       minPairCount: Long = 2L,
       maxDriverTypes: Int = 1 << 20): (BpeModel, DataFrame) = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = df.sparkSession
-    val types0 = typeTable(df, text)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nTypes = types0.count()
-    val merges =
-      if (nTypes <= maxDriverTypes) {
-        val collected = types0.collect().map(r =>
-          (r.getAs[String]("__tok"), r.getAs[Long]("__cnt")))
-        types0.unpersist(blocking = false)
-        fitDriver(collected, nMerges, minPairCount)
-      } else {
-        val m = fitDistributed(types0, nMerges, minPairCount)
-        types0.unpersist(blocking = false)
-        m
-      }
+    val (merges, _) = MergeLearner.fit(df, text, rule, nMerges,
+      minPairCount, maxDriverTypes)
     import spark.implicits._
     val table = merges.zipWithIndex
-      .map { case ((l, rr, c), i) => (i, l, rr, l + rr, c) }
+      .map { case (m, i) => (i, m.l, m.r, m.l + m.r, m.count) }
       .toDF("rank", "sym_l", "sym_r", "merged", "pair_count")
-    (BpeModel(merges.map { case (l, rr, _) => (l, rr) }), table)
-  }
-
-  /** In-memory merge loop over the collected type table (bounded by
-    * `maxDriverTypes`), with INCREMENTAL pair-count maintenance: the
-    * adjacent-pair census and a (count desc, pair asc)-ordered index
-    * are built once, then each merge round touches only the types
-    * that actually contain the merged pair — decrement their old
-    * pairs, rewrite, increment their new pairs — instead of
-    * re-counting every symbol of every type. Production vocabularies
-    * (tens of thousands of merges) make the difference: a full
-    * recount is O(nMerges x total symbols); the incremental rounds
-    * are O(affected symbols x log |pairs|), and the argmax is the
-    * head of the ordered index. All arithmetic is exact long
-    * increments/decrements of the same census, so the merge sequence
-    * is bit-identical to the recount loop ([[fitDriverRecount]], the
-    * definition-of-record twin BpeSpec pins equal).
-    */
-  private[graft] def fitDriver(types: Array[(String, Long)],
-      nMerges: Int, minPairCount: Long): Seq[(String, String, Long)] = {
-    val syms: Array[Array[String]] =
-      types.map { case (t, _) => t.map(_.toString).toArray }
-    val cnts: Array[Long] = types.map(_._2)
-
-    val census = scala.collection.mutable.HashMap[(String, String), Long]()
-    // ordered view of the census: head = current argmax (max count,
-    // ties by (sym_l, sym_r) ascending). Kept in lockstep with census.
-    val ord = new java.util.TreeSet[(Long, String, String)](
-      new java.util.Comparator[(Long, String, String)] {
-        def compare(a: (Long, String, String),
-            b: (Long, String, String)): Int = {
-          val c = java.lang.Long.compare(b._1, a._1) // count desc
-          if (c != 0) c
-          else {
-            val l = a._2.compareTo(b._2)              // sym_l asc
-            if (l != 0) l else a._3.compareTo(b._3)   // sym_r asc
-          }
-        }
-      })
-    // which type indices (may be stale) contain a given pair
-    val where = scala.collection.mutable.HashMap[(String, String),
-      scala.collection.mutable.ArrayBuffer[Int]]()
-
-    def bump(k: (String, String), delta: Long, idx: Int): Unit = {
-      val old = census.getOrElse(k, 0L)
-      if (old != 0L) ord.remove((old, k._1, k._2))
-      val nw = old + delta
-      if (nw == 0L) census.remove(k)
-      else { census(k) = nw; ord.add((nw, k._1, k._2)) }
-      if (delta > 0 && idx >= 0)
-        where.getOrElseUpdate(k,
-          scala.collection.mutable.ArrayBuffer[Int]()) += idx
-    }
-
-    var i = 0
-    while (i < syms.length) {
-      val s = syms(i); val c = cnts(i)
-      var j = 0
-      while (j < s.length - 1) {
-        bump((s(j), s(j + 1)), c, i)
-        j += 1
-      }
-      i += 1
-    }
-
-    val merges = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-    var stop = false
-    while (merges.size < nMerges && !stop) {
-      if (ord.isEmpty) stop = true
-      else {
-        val head = ord.first()
-        if (head._1 < minPairCount) stop = true
-        else {
-          val (l, r) = (head._2, head._3)
-          merges += ((l, r, head._1))
-          val touched = where.remove((l, r))
-            .getOrElse(scala.collection.mutable.ArrayBuffer[Int]())
-          // an index can hold duplicates and stale entries; the
-          // contains-check below makes both harmless
-          val seen = new java.util.HashSet[Integer]()
-          var t = 0
-          while (t < touched.length) {
-            val idx = touched(t)
-            if (seen.add(idx)) {
-              val s = syms(idx)
-              var has = false
-              var j = 0
-              while (!has && j < s.length - 1) {
-                if (s(j) == l && s(j + 1) == r) has = true
-                j += 1
-              }
-              if (has) {
-                val c = cnts(idx)
-                var j2 = 0
-                while (j2 < s.length - 1) {
-                  bump((s(j2), s(j2 + 1)), -c, -1)
-                  j2 += 1
-                }
-                val out = scala.collection.mutable.ArrayBuffer[String]()
-                var p = 0
-                while (p < s.length) {
-                  if (p < s.length - 1 && s(p) == l && s(p + 1) == r) {
-                    out += l + r; p += 2
-                  } else { out += s(p); p += 1 }
-                }
-                val ns = out.toArray
-                syms(idx) = ns
-                var j3 = 0
-                while (j3 < ns.length - 1) {
-                  bump((ns(j3), ns(j3 + 1)), c, idx)
-                  j3 += 1
-                }
-              }
-            }
-            t += 1
-          }
-        }
-      }
-    }
-    merges.toSeq
-  }
-
-  /** Full-recount merge loop — the definition-of-record twin of
-    * [[fitDriver]]: rebuilds the whole pair census every round. Kept
-    * for the equality spec (BpeSpec pins the two loops' merge tables
-    * identical); [[fit]] always runs the incremental loop.
-    */
-  private[graft] def fitDriverRecount(types: Array[(String, Long)],
-      nMerges: Int, minPairCount: Long): Seq[(String, String, Long)] = {
-    var syms: Array[Array[String]] =
-      types.map { case (t, _) => t.map(_.toString).toArray }
-    val cnts: Array[Long] = types.map(_._2)
-    val merges = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-    var stop = false
-    while (merges.size < nMerges && !stop) {
-      val census = scala.collection.mutable.HashMap[(String, String), Long]()
-      var i = 0
-      while (i < syms.length) {
-        val s = syms(i); val c = cnts(i)
-        var j = 0
-        while (j < s.length - 1) {
-          val k = (s(j), s(j + 1))
-          census(k) = census.getOrElse(k, 0L) + c
-          j += 1
-        }
-        i += 1
-      }
-      if (census.isEmpty) stop = true
-      else {
-        // deterministic argmax: max count, ties by (sym_l, sym_r) asc
-        var best: ((String, String), Long) = null
-        census.foreach { e =>
-          if (best == null || e._2 > best._2 ||
-              (e._2 == best._2 &&
-                (e._1._1 < best._1._1 ||
-                  (e._1._1 == best._1._1 && e._1._2 < best._1._2))))
-            best = e
-        }
-        if (best._2 < minPairCount) stop = true
-        else {
-          val (l, r) = best._1
-          merges += ((l, r, best._2))
-          var i2 = 0
-          while (i2 < syms.length) {
-            val s = syms(i2)
-            var has = false
-            var j = 0
-            while (!has && j < s.length - 1) {
-              if (s(j) == l && s(j + 1) == r) has = true
-              j += 1
-            }
-            if (has) {
-              val out = scala.collection.mutable.ArrayBuffer[String]()
-              var p = 0
-              while (p < s.length) {
-                if (p < s.length - 1 && s(p) == l && s(p + 1) == r) {
-                  out += l + r; p += 2
-                } else { out += s(p); p += 1 }
-              }
-              syms(i2) = out.toArray
-            }
-            i2 += 1
-          }
-        }
-      }
-    }
-    merges.toSeq
-  }
-
-  /** Distributed merge rounds for type tables past the driver budget
-    * (each round: weighted pair census + one-row argmax + merge UDF;
-    * the [[Dedup.duplicateClusters]] persist/materialize/unpersist
-    * lifecycle keeps the plan flat).
-    */
-  private def fitDistributed(typesIn: DataFrame, nMerges: Int,
-      minPairCount: Long): Seq[(String, String, Long)] = {
-    val chars = udf { (t: String) => t.map(_.toString) }
-    var types = typesIn
-      .select(chars(col("__tok")).as("__syms"), col("__cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    types.count()
-    val merges = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-    var stop = false
-    var r = 0
-    while (r < nMerges && !stop) {
-      val best = pairCensus(types)
-        .orderBy(desc("pair_count"), asc("sym_l"), asc("sym_r"))
-        .head(1)
-      if (best.isEmpty || best(0).getAs[Long]("pair_count") < minPairCount)
-        stop = true
-      else {
-        val (l, rr, c) = (best(0).getAs[String]("sym_l"),
-          best(0).getAs[String]("sym_r"),
-          best(0).getAs[Long]("pair_count"))
-        merges += ((l, rr, c))
-        val applyMerge = udf { (syms: Seq[String]) =>
-          val out = scala.collection.mutable.ArrayBuffer[String]()
-          var i = 0
-          while (i < syms.length) {
-            if (i < syms.length - 1 && syms(i) == l && syms(i + 1) == rr) {
-              out += l + rr; i += 2
-            } else { out += syms(i); i += 1 }
-          }
-          out.toSeq
-        }
-        val next = types
-          .select(applyMerge(col("__syms")).as("__syms"), col("__cnt"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        next.count() // materialize before dropping the parent lineage
-        types.unpersist(blocking = false)
-        types = next
-      }
-      r += 1
-    }
-    types.unpersist(blocking = false)
-    merges.toSeq
+    (BpeModel(merges.map(m => (m.l, m.r))), table)
   }
 
   /** Per-document BPE token counts against a fitted model:
@@ -529,14 +246,9 @@ object Bpe {
     val nSub = udf { (tok: String) =>
       encodeToken(tok, ranksB.value).length
     }
-    val toks = df.where(col(text).isNotNull)
-      .select(col(id), explode(Dedup.normalizeTokens(col(text)))
-        .as("__tok"))
-    val dict = toks.select(col("__tok")).distinct()
-      .withColumn("__n", nSub(col("__tok")))
-    toks.join(broadcast(dict), Seq("__tok"))
+    Subword.encodeDistinct(df, id, text, nSub)
       .groupBy(col(id))
-      .agg(count(lit(1)).as("n_words"), sum(col("__n")).as("n_bpe"))
+      .agg(count(lit(1)).as("n_words"), sum(col("__enc")).as("n_bpe"))
   }
 
   /** STREAMING-SAFE fertility: (id, n_words, n_bpe) computed by one

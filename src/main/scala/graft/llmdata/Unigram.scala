@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * vocabulary is a pure function of the corpus.
   *
   * Scale shape (the [[Bpe.fit]] venue contract): the corpus is
-  * scanned ONCE into the word-type census (distributed; the same
-  * tokenize+explode+groupBy shuffle as every census operator here).
+  * scanned ONCE into the word-type census ([[Subword.typeTable]], the
+  * scan every tokenizer fit starts from).
   * Everything after is vocabulary-sized: the type table collects
   * under an explicit budget — `maxDriverTypes` rows, top by (cnt
   * desc, token asc) so an over-budget corpus degrades to a
@@ -30,9 +30,9 @@ import org.apache.spark.sql.functions._
   * than an error — and the EM loop runs in memory, which is how the
   * reference SentencePiece trainer works too (it is a single-node
   * program over the type table). Serving ([[encodeCounts]]) is the
-  * [[Bpe.encodeCounts]] dictionary trick: distinct tokens Viterbi-
-  * decode once against the broadcast vocabulary, then join back to
-  * the occurrence stream.
+  * dictionary trick of [[Subword.encodeDistinct]]: distinct tokens
+  * Viterbi-decode once against the broadcast vocabulary, then join
+  * back to the occurrence stream.
   */
 object Unigram {
 
@@ -90,19 +90,13 @@ object Unigram {
     out.reverseIterator.toArray
   }
 
-  /** Word-type census `(token, cnt)` — the single corpus scan. */
-  private def typeTable(df: DataFrame, text: String): DataFrame =
-    df.where(col(text).isNotNull)
-      .select(explode(Dedup.normalizeTokens(col(text))).as("__tok"))
-      .groupBy(col("__tok")).agg(count(lit(1)).as("__cnt"))
-
   /** Bounded deterministic type collect: top `maxDriverTypes` by
     * (cnt desc, tok asc) — the venue contract shared by [[fit]] and
     * [[fitEM]].
     */
   private def collectTypes(df: DataFrame, text: String,
       maxDriverTypes: Int): Array[(String, Long)] =
-    typeTable(df, text)
+    Subword.typeTable(df, text)
       .orderBy(desc("__cnt"), asc("__tok"))
       .limit(maxDriverTypes)
       .collect().map(r =>
@@ -476,10 +470,7 @@ object Unigram {
     val nPieces = udf { (tok: String, s: Long) =>
       sampleSegment(tok, mB.value, alpha, s).length
     }
-    df.where(col(text).isNotNull)
-      .select(col(id), posexplode(Dedup.normalizeTokens(col(text)))
-        .as(Seq("__pos", "__tok")))
-      .withColumn("__seed", xxhash64(col(id), col("__pos"), lit(seed)))
+    Subword.seededOccurrences(df, id, text, seed)
       .groupBy(col(id))
       .agg(count(lit(1)).as("n_words"),
         sum(nPieces(col("__tok"), col("__seed")).cast("long"))
@@ -497,14 +488,9 @@ object Unigram {
     val spark = df.sparkSession
     val mB = spark.sparkContext.broadcast(model)
     val nPieces = udf { (tok: String) => segment(tok, mB.value).length }
-    val toks = df.where(col(text).isNotNull)
-      .select(col(id), explode(Dedup.normalizeTokens(col(text)))
-        .as("__tok"))
-    val dict = toks.select(col("__tok")).distinct()
-      .withColumn("__n", nPieces(col("__tok")))
-    toks.join(broadcast(dict), Seq("__tok"))
+    Subword.encodeDistinct(df, id, text, nPieces)
       .groupBy(col(id))
-      .agg(count(lit(1)).as("n_words"), sum(col("__n")).as("n_pieces"))
+      .agg(count(lit(1)).as("n_words"), sum(col("__enc")).as("n_pieces"))
   }
 
   /** Persist a fitted model: one parquet of `(piece, logp)` rows plus

@@ -8,26 +8,26 @@ import org.apache.spark.sql.functions._
   * by BERT's tokenizer) — the third member of the subword family next
   * to [[Bpe]] (frequency-merge) and [[Unigram]] (probabilistic prune).
   *
-  * WordPiece differs from BPE in exactly two places, and shares every
-  * scale property with it:
+  * Learning runs on the same [[MergeLearner]] as [[Bpe]] (one corpus
+  * scan into the word-type table, driver loop under a type budget,
+  * distributed rounds past it); WordPiece supplies only its [[rule]],
+  * and differs from BPE in exactly these places:
   *
-  *   - FIT picks the adjacent pair maximizing the LIKELIHOOD score
+  *   - FIT splits a word into `##`-convention symbols and picks the
+  *     adjacent pair maximizing the LIKELIHOOD score
   *     `count(ab) / (count(a) * count(b))` — the pair whose merge most
   *     increases a unigram corpus likelihood — instead of the raw
   *     pair count. Scores are compared by exact integer
   *     cross-multiplication (`c1*d2 vs c2*d1` over BigInt, ties by
   *     (sym_l, sym_r) ascending), so the fitted vocabulary is a pure
-  *     function of the corpus on any engine — no floating-point
-  *     division anywhere in the decision.
+  *     function of the corpus on any engine — no float decides a
+  *     merge.
   *   - SERVING is greedy longest-match-first over the fitted
   *     vocabulary (maximal munch with the `##` continuation prefix),
   *     not merge-rank replay. A word any of whose positions cannot be
   *     matched becomes a single unk token (the BERT convention).
-  *
-  * Scale shape (same as [[Bpe]]): the corpus is scanned ONCE into the
-  * word-type table; merge rounds touch only the type table under the
-  * documented driver budget (distributed rounds past it); serving is
-  * a dictionary join — distinct tokens encoded once, broadcast back.
+  *     Serving is a dictionary join ([[Subword.encodeDistinct]]) —
+  *     distinct tokens encoded once, broadcast back.
   *
   * Symbols use the `##` continuation convention: "abc" starts as
   * ["a", "##b", "##c"]; merging (x, ##y) yields x+"y" (the merged
@@ -81,14 +81,6 @@ object WordPiece {
     out.toArray
   }
 
-  /** Word-type table `(token, cnt)` — the single corpus scan (shared
-    * shape with [[Bpe]]).
-    */
-  private def typeTable(df: DataFrame, text: String): DataFrame =
-    df.where(col(text).isNotNull)
-      .select(explode(Dedup.normalizeTokens(col(text))).as("__tok"))
-      .groupBy(col("__tok")).agg(count(lit(1)).as("__cnt"))
-
   /** Initial `##`-convention symbol split of a word type. */
   private[graft] def initSyms(tok: String): Array[String] = {
     val out = new Array[String](tok.length)
@@ -106,12 +98,37 @@ object WordPiece {
   private[graft] def mergedSym(l: String, r: String): String =
     l + (if (r.startsWith("##")) r.substring(2) else r)
 
-  /** Exact score comparison: is score(c1, l1, r1) = c1/(l1*r1)
-    * greater than score(c2, l2, r2)? Cross-multiplied BigInt — no
-    * division, no floating point.
+  /** WordPiece's merge rule: the `##` split, [[mergedSym]], and the
+    * likelihood argmax `c/(u_l*u_r)`, compared exactly by BigInt
+    * cross-multiplication. Merging reprices every pair sharing a symbol
+    * with the merged pair (its unit counts change), so no static index
+    * can hold the order: the driver loop scans the live census once
+    * per round. A distributed round collects the shortlist whose
+    * double-precision score is within 1e-6 relative of the float
+    * maximum (tiny by construction) and re-decides it EXACTLY on the
+    * driver — float only pre-filters, never decides.
     */
-  private def scoreGt(c1: Long, d1: BigInt, c2: Long, d2: BigInt): Boolean =
-    BigInt(c1) * d2 > BigInt(c2) * d1
+  private[graft] val rule: MergeLearner.Rule = new MergeLearner.Rule {
+    def split(tok: String): Array[String] = initSyms(tok)
+    def merged(l: String, r: String): String = mergedSym(l, r)
+    val scoresUnits = true
+    def compareScore(c1: Long, l1: Long, r1: Long,
+        c2: Long, l2: Long, r2: Long): Int =
+      (BigInt(c1) * (BigInt(l2) * r2)).compare(BigInt(c2) * (BigInt(l1) * r1))
+    def pick(census: DataFrame,
+        minPairCount: Long): Option[MergeLearner.Merge] = {
+      val cand = census.where(col("pair_count") >= minPairCount)
+        .withColumn("__s", col("pair_count").cast("double") /
+          (col("cnt_l").cast("double") * col("cnt_r").cast("double")))
+      val mx = cand.agg(max(col("__s"))).head()
+      if (mx.isNullAt(0)) None
+      else Some(cand.where(col("__s") >= lit(mx.getDouble(0) * (1.0 - 1e-6)))
+        .collect().map(r => MergeLearner.Merge(r.getAs[String]("sym_l"),
+          r.getAs[String]("sym_r"), r.getAs[Long]("pair_count"),
+          r.getAs[Long]("cnt_l"), r.getAs[Long]("cnt_r")))
+        .reduceLeft((a, b) => if (MergeLearner.beats(this, b, a)) b else a))
+    }
+  }
 
   /** Round-1 WordPiece statistics over the corpus — the
     * oracle-checkable stage of the fit: every adjacent symbol pair of
@@ -121,38 +138,13 @@ object WordPiece {
     * (sym_l, sym_r) — integer-only, no score division, so DuckDB
     * replays it bit-for-bit.
     */
-  def pairScores(df: DataFrame, text: String): DataFrame = {
-    val types = typeTable(df, text)
-    val symsUdf = udf { (t: String) =>
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(initSyms(t))
-    }
+  def pairScores(df: DataFrame, text: String): DataFrame =
     // the symbol table feeds the pair census AND both unit-count
     // joins; pin it through the Caches registry (the persist must
     // outlive this call — the returned plan is lazy)
-    val st = graft.Caches.pin(
-      types.select(symsUdf(col("__tok")).as("__syms"), col("__cnt")))
-    val pairsUdf = udf { (syms: Seq[String]) =>
-      if (syms == null || syms.length < 2) Seq.empty[Seq[String]]
-      else (0 until syms.length - 1).map(i => Seq(syms(i), syms(i + 1)))
-    }
-    val pairs = st.select(col("__cnt"),
-        explode(pairsUdf(col("__syms"))).as("__p"))
-      .groupBy(col("__p").getItem(0).as("sym_l"),
-        col("__p").getItem(1).as("sym_r"))
-      .agg(sum(col("__cnt")).as("pair_count"))
-    val units = st.select(col("__cnt"),
-        explode(col("__syms")).as("__u"))
-      .groupBy(col("__u"))
-      .agg(sum(col("__cnt")).as("__ucnt"))
-    val out = pairs
-      .join(units.withColumnRenamed("__u", "sym_l")
-        .withColumnRenamed("__ucnt", "cnt_l"), Seq("sym_l"))
-      .join(units.withColumnRenamed("__u", "sym_r")
-        .withColumnRenamed("__ucnt", "cnt_r"), Seq("sym_r"))
-      .select(col("sym_l"), col("sym_r"), col("pair_count"),
-        col("cnt_l"), col("cnt_r"))
-    out
-  }
+    MergeLearner.census(graft.Caches.pin(
+      MergeLearner.symbolTable(Subword.typeTable(df, text), rule)),
+      units = true)
 
   /** Learn `nMerges` WordPiece merges. Returns the model (alphabet +
     * merged tokens) plus the merge table
@@ -169,323 +161,16 @@ object WordPiece {
       maxDriverTypes: Int = 1 << 20): (WpModel, DataFrame) = {
     require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
     val spark = df.sparkSession
-    val types0 = typeTable(df, text)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nTypes = types0.count()
-    val collected: Array[(String, Long)] =
-      if (nTypes <= maxDriverTypes)
-        types0.collect().map(r =>
-          (r.getAs[String]("__tok"), r.getAs[Long]("__cnt")))
-      else null
-    val (alphabet, merges) =
-      if (collected != null) {
-        types0.unpersist(blocking = false)
-        val alpha = collected.iterator.flatMap { case (t, _) =>
-          initSyms(t)
-        }.toSet
-        (alpha, fitDriver(collected, nMerges, minPairCount))
-      } else {
-        val symsUdf = udf { (t: String) =>
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(initSyms(t))
-        }
-        val alpha = types0
-          .select(explode(symsUdf(col("__tok"))).as("__u"))
-          .distinct().collect().map(_.getString(0)).toSet
-        val m = fitDistributed(types0, nMerges, minPairCount)
-        types0.unpersist(blocking = false)
-        (alpha, m)
-      }
+    val (merges, alphabet) = MergeLearner.fit(df, text, rule, nMerges,
+      minPairCount, maxDriverTypes)
     import spark.implicits._
     val table = merges.zipWithIndex
-      .map { case ((l, r, c, dl, dr), i) =>
-        (i, l, r, mergedSym(l, r), c, dl, dr)
+      .map { case (m, i) =>
+        (i, m.l, m.r, mergedSym(m.l, m.r), m.count, m.cntL, m.cntR)
       }
       .toDF("rank", "sym_l", "sym_r", "merged", "pair_count",
         "cnt_l", "cnt_r")
-    val vocab = alphabet ++ merges.map { case (l, r, _, _, _) =>
-      mergedSym(l, r)
-    }
-    (WpModel(vocab), table)
-  }
-
-  /** In-memory merge loop with INCREMENTAL pair- and unit-count
-    * maintenance (the [[Bpe.fitDriver]] pattern: affected rows
-    * resubmit their full pair/unit contributions). The argmax cannot
-    * ride an ordered index here — merging changes the UNIT counts of
-    * the merged symbols, which reprices every pair sharing a symbol
-    * with them — so each round scans the live census once with the
-    * exact cross-multiplied comparison. O(|pairs|) per round, pairs
-    * bounded by the live symbol inventory. [[fitDriverRecount]] is
-    * the definition-of-record twin, spec-pinned equal.
-    */
-  private[graft] def fitDriver(types: Array[(String, Long)],
-      nMerges: Int, minPairCount: Long):
-      Seq[(String, String, Long, Long, Long)] = {
-    val syms: Array[Array[String]] =
-      types.map { case (t, _) => initSyms(t) }
-    val cnts: Array[Long] = types.map(_._2)
-
-    val pairC = scala.collection.mutable.HashMap[(String, String), Long]()
-    val unitC = scala.collection.mutable.HashMap[String, Long]()
-    val where = scala.collection.mutable.HashMap[(String, String),
-      scala.collection.mutable.ArrayBuffer[Int]]()
-
-    def bumpPair(k: (String, String), delta: Long, idx: Int): Unit = {
-      val nw = pairC.getOrElse(k, 0L) + delta
-      if (nw == 0L) pairC.remove(k) else pairC(k) = nw
-      if (delta > 0 && idx >= 0)
-        where.getOrElseUpdate(k,
-          scala.collection.mutable.ArrayBuffer[Int]()) += idx
-    }
-    def bumpUnit(u: String, delta: Long): Unit = {
-      val nw = unitC.getOrElse(u, 0L) + delta
-      if (nw == 0L) unitC.remove(u) else unitC(u) = nw
-    }
-
-    var i = 0
-    while (i < syms.length) {
-      val s = syms(i); val c = cnts(i)
-      var j = 0
-      while (j < s.length) {
-        bumpUnit(s(j), c)
-        if (j < s.length - 1) bumpPair((s(j), s(j + 1)), c, i)
-        j += 1
-      }
-      i += 1
-    }
-
-    val merges =
-      scala.collection.mutable.ArrayBuffer[(String, String, Long, Long, Long)]()
-    var stop = false
-    while (merges.size < nMerges && !stop) {
-      // exact-score argmax over the live census: max c/(dl*dr) by
-      // cross-multiplication, ties by (sym_l, sym_r) ascending
-      var bK: (String, String) = null
-      var bC = 0L
-      var bD: BigInt = null
-      pairC.foreach { case (k, c) =>
-        if (c >= minPairCount) {
-          val d = BigInt(unitC(k._1)) * BigInt(unitC(k._2))
-          val better =
-            if (bK == null) true
-            else if (scoreGt(c, d, bC, bD)) true
-            else if (scoreGt(bC, bD, c, d)) false
-            else k._1 < bK._1 || (k._1 == bK._1 && k._2 < bK._2)
-          if (better) { bK = k; bC = c; bD = d }
-        }
-      }
-      if (bK == null) stop = true
-      else {
-        val (l, r) = bK
-        merges += ((l, r, bC, unitC(l), unitC(r)))
-        val m = mergedSym(l, r)
-        val touched = where.remove((l, r))
-          .getOrElse(scala.collection.mutable.ArrayBuffer[Int]())
-        val seen = new java.util.HashSet[Integer]()
-        var t = 0
-        while (t < touched.length) {
-          val idx = touched(t)
-          if (seen.add(idx)) {
-            val s = syms(idx)
-            var has = false
-            var j = 0
-            while (!has && j < s.length - 1) {
-              if (s(j) == l && s(j + 1) == r) has = true
-              j += 1
-            }
-            if (has) {
-              val c = cnts(idx)
-              var j2 = 0
-              while (j2 < s.length) {
-                bumpUnit(s(j2), -c)
-                if (j2 < s.length - 1) bumpPair((s(j2), s(j2 + 1)), -c, -1)
-                j2 += 1
-              }
-              val out = scala.collection.mutable.ArrayBuffer[String]()
-              var p = 0
-              while (p < s.length) {
-                if (p < s.length - 1 && s(p) == l && s(p + 1) == r) {
-                  out += m; p += 2
-                } else { out += s(p); p += 1 }
-              }
-              val ns = out.toArray
-              syms(idx) = ns
-              var j3 = 0
-              while (j3 < ns.length) {
-                bumpUnit(ns(j3), c)
-                if (j3 < ns.length - 1) bumpPair((ns(j3), ns(j3 + 1)), c, idx)
-                j3 += 1
-              }
-            }
-          }
-          t += 1
-        }
-      }
-    }
-    merges.toSeq
-  }
-
-  /** Full-recount twin of [[fitDriver]] — rebuilds both censuses
-    * every round; the definition of record the spec pins the
-    * incremental loop against.
-    */
-  private[graft] def fitDriverRecount(types: Array[(String, Long)],
-      nMerges: Int, minPairCount: Long):
-      Seq[(String, String, Long, Long, Long)] = {
-    var syms: Array[Array[String]] =
-      types.map { case (t, _) => initSyms(t) }
-    val cnts: Array[Long] = types.map(_._2)
-    val merges =
-      scala.collection.mutable.ArrayBuffer[(String, String, Long, Long, Long)]()
-    var stop = false
-    while (merges.size < nMerges && !stop) {
-      val pairC = scala.collection.mutable.HashMap[(String, String), Long]()
-      val unitC = scala.collection.mutable.HashMap[String, Long]()
-      var i = 0
-      while (i < syms.length) {
-        val s = syms(i); val c = cnts(i)
-        var j = 0
-        while (j < s.length) {
-          unitC(s(j)) = unitC.getOrElse(s(j), 0L) + c
-          if (j < s.length - 1) {
-            val k = (s(j), s(j + 1))
-            pairC(k) = pairC.getOrElse(k, 0L) + c
-          }
-          j += 1
-        }
-        i += 1
-      }
-      var bK: (String, String) = null
-      var bC = 0L
-      var bD: BigInt = null
-      pairC.foreach { case (k, c) =>
-        if (c >= minPairCount) {
-          val d = BigInt(unitC(k._1)) * BigInt(unitC(k._2))
-          val better =
-            if (bK == null) true
-            else if (scoreGt(c, d, bC, bD)) true
-            else if (scoreGt(bC, bD, c, d)) false
-            else k._1 < bK._1 || (k._1 == bK._1 && k._2 < bK._2)
-          if (better) { bK = k; bC = c; bD = d }
-        }
-      }
-      if (bK == null) stop = true
-      else {
-        val (l, r) = bK
-        merges += ((l, r, bC, unitC(l), unitC(r)))
-        val m = mergedSym(l, r)
-        var i2 = 0
-        while (i2 < syms.length) {
-          val s = syms(i2)
-          var has = false
-          var j = 0
-          while (!has && j < s.length - 1) {
-            if (s(j) == l && s(j + 1) == r) has = true
-            j += 1
-          }
-          if (has) {
-            val out = scala.collection.mutable.ArrayBuffer[String]()
-            var p = 0
-            while (p < s.length) {
-              if (p < s.length - 1 && s(p) == l && s(p + 1) == r) {
-                out += m; p += 2
-              } else { out += s(p); p += 1 }
-            }
-            syms(i2) = out.toArray
-          }
-          i2 += 1
-        }
-      }
-    }
-    merges.toSeq
-  }
-
-  /** Distributed merge rounds past the driver budget: per round, the
-    * weighted pair census and unit census join into score candidates;
-    * the shortlist whose double-precision score is within 1e-6
-    * relative of the float maximum is collected (tiny by
-    * construction) and the winner re-decided EXACTLY on the driver
-    * with the same cross-multiplied comparison — float only
-    * pre-filters, never decides, so the merge sequence matches the
-    * driver loop (spec-pinned on a shared corpus).
-    */
-  private def fitDistributed(typesIn: DataFrame, nMerges: Int,
-      minPairCount: Long): Seq[(String, String, Long, Long, Long)] = {
-    val symsUdf = udf { (t: String) =>
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(initSyms(t))
-    }
-    var types = typesIn
-      .select(symsUdf(col("__tok")).as("__syms"), col("__cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    types.count()
-    val pairsUdf = udf { (syms: Seq[String]) =>
-      if (syms == null || syms.length < 2) Seq.empty[Seq[String]]
-      else (0 until syms.length - 1).map(i => Seq(syms(i), syms(i + 1)))
-    }
-    val merges =
-      scala.collection.mutable.ArrayBuffer[(String, String, Long, Long, Long)]()
-    var stop = false
-    var r = 0
-    while (r < nMerges && !stop) {
-      val pairs = types.select(col("__cnt"),
-          explode(pairsUdf(col("__syms"))).as("__p"))
-        .groupBy(col("__p").getItem(0).as("sym_l"),
-          col("__p").getItem(1).as("sym_r"))
-        .agg(sum(col("__cnt")).as("pair_count"))
-        .where(col("pair_count") >= minPairCount)
-      val units = types.select(col("__cnt"),
-          explode(col("__syms")).as("__u"))
-        .groupBy(col("__u")).agg(sum(col("__cnt")).as("__ucnt"))
-      val cand = pairs
-        .join(units.withColumnRenamed("__u", "sym_l")
-          .withColumnRenamed("__ucnt", "cnt_l"), Seq("sym_l"))
-        .join(units.withColumnRenamed("__u", "sym_r")
-          .withColumnRenamed("__ucnt", "cnt_r"), Seq("sym_r"))
-        .withColumn("__s", col("pair_count").cast("double") /
-          (col("cnt_l").cast("double") * col("cnt_r").cast("double")))
-      val mx = cand.agg(max(col("__s"))).head()
-      if (mx.isNullAt(0)) stop = true
-      else {
-        val shortlist = cand
-          .where(col("__s") >= lit(mx.getDouble(0) * (1.0 - 1e-6)))
-          .collect()
-        var bL: String = null; var bR: String = null
-        var bC = 0L; var bDl = 0L; var bDr = 0L; var bD: BigInt = null
-        shortlist.foreach { row =>
-          val (l, rr) = (row.getAs[String]("sym_l"), row.getAs[String]("sym_r"))
-          val c = row.getAs[Long]("pair_count")
-          val dl = row.getAs[Long]("cnt_l"); val dr = row.getAs[Long]("cnt_r")
-          val d = BigInt(dl) * BigInt(dr)
-          val better =
-            if (bL == null) true
-            else if (scoreGt(c, d, bC, bD)) true
-            else if (scoreGt(bC, bD, c, d)) false
-            else l < bL || (l == bL && rr < bR)
-          if (better) { bL = l; bR = rr; bC = c; bDl = dl; bDr = dr; bD = d }
-        }
-        merges += ((bL, bR, bC, bDl, bDr))
-        val (l, rr, m) = (bL, bR, mergedSym(bL, bR))
-        val applyMerge = udf { (syms: Seq[String]) =>
-          val out = scala.collection.mutable.ArrayBuffer[String]()
-          var i = 0
-          while (i < syms.length) {
-            if (i < syms.length - 1 && syms(i) == l && syms(i + 1) == rr) {
-              out += m; i += 2
-            } else { out += syms(i); i += 1 }
-          }
-          out.toSeq
-        }
-        val next = types
-          .select(applyMerge(col("__syms")).as("__syms"), col("__cnt"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        types.unpersist(blocking = false)
-        types = next
-      }
-      r += 1
-    }
-    types.unpersist(blocking = false)
-    merges.toSeq
+    (WpModel(alphabet ++ merges.map(m => mergedSym(m.l, m.r))), table)
   }
 
   /** Per-document WordPiece counts against a fitted model:
@@ -505,16 +190,11 @@ object WordPiece {
       val isUnk = pieces.length == 1 && pieces(0) == unk
       (pieces.length.toLong, if (isUnk) 1L else 0L)
     }
-    val toks = df.where(col(text).isNotNull)
-      .select(col(id), explode(Dedup.normalizeTokens(col(text)))
-        .as("__tok"))
-    val dict = toks.select(col("__tok")).distinct()
-      .withColumn("__e", enc(col("__tok")))
-    toks.join(broadcast(dict), Seq("__tok"))
+    Subword.encodeDistinct(df, id, text, enc)
       .groupBy(col(id))
       .agg(count(lit(1)).as("n_words"),
-        sum(col("__e").getField("_1")).as("n_wp"),
-        sum(col("__e").getField("_2")).as("n_unk"))
+        sum(col("__enc").getField("_1")).as("n_wp"),
+        sum(col("__enc").getField("_2")).as("n_unk"))
   }
 
   /** The model's id table: `(token_id, token)` with ids assigned by
@@ -549,17 +229,9 @@ object WordPiece {
     val enc = udf { (tok: String) =>
       encodeWord(tok, vocabB.value, unk).map(idsB.value)
     }
-    val toks = df.where(col(text).isNotNull)
-      .select(col(id), posexplode(Dedup.normalizeTokens(col(text))))
-      .withColumnRenamed("pos", "word_pos")
-      .withColumnRenamed("col", "__tok")
-    val dict = toks.select(col("__tok")).distinct()
-      .withColumn("__ids", enc(col("__tok")))
-    toks.join(broadcast(dict), Seq("__tok"))
-      .select(col(id), col("word_pos"),
-        posexplode(col("__ids")))
-      .withColumnRenamed("pos", "piece_pos")
-      .withColumnRenamed("col", "token_id")
+    Subword.encodeDistinct(df, id, text, enc)
+      .select(col(id), col("__pos").as("word_pos"),
+        posexplode(col("__enc")).as(Seq("piece_pos", "token_id")))
   }
 
   /** Persist a fitted model: one parquet of `(kind, token)` rows —

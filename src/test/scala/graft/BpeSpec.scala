@@ -1,6 +1,6 @@
 package graft
 
-import graft.llmdata.{Bpe, Dedup}
+import graft.llmdata.{Bpe, Dedup, MergeLearner}
 import org.apache.spark.sql.functions._
 
 /** BPE learning/serving pinned against an independent single-node
@@ -93,6 +93,19 @@ class BpeSpec extends SparkSuite {
   private val docs = corpus.zipWithIndex
     .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
 
+  /** a few word types over the skewed "aab bc" alphabet, one document
+    * per type repeating it 1..20 times — count ties and repeated
+    * merges, as in the incremental == recount spec
+    */
+  private def randomCorpus(rnd: scala.util.Random) = {
+    val alpha = "aabbc"
+    (0 until 4 + rnd.nextInt(12)).map { i =>
+      val t = (0 to rnd.nextInt(8))
+        .map(_ => alpha(rnd.nextInt(alpha.length))).mkString
+      (i.toLong, Seq.fill(1 + rnd.nextInt(20))(t).mkString(" "))
+    }.toDF("doc_id", "text")
+  }
+
   test("pairStats equals the reference pair census") {
     val got = Bpe.pairStats(docs, "text").collect()
       .map(r => (r.getAs[String]("sym_l"), r.getAs[String]("sym_r")) ->
@@ -145,9 +158,45 @@ class BpeSpec extends SparkSuite {
         (t, 1L + rnd.nextInt(50))
       }.groupBy(_._1).view.mapValues(_.map(_._2).sum).toArray
       val n = 1 + rnd.nextInt(30)
-      val inc = Bpe.fitDriver(types, n, minPairCount = 2L)
-      val rec = Bpe.fitDriverRecount(types, n, minPairCount = 2L)
+      val inc = MergeLearner.fitDriver(types, Bpe.rule, n,
+        minPairCount = 2L)
+      val rec = MergeLearner.fitDriverRecount(types, Bpe.rule, n,
+        minPairCount = 2L)
       assert(inc == rec, s"trial $trial diverged:\ninc $inc\nrec $rec")
+    }
+  }
+
+  test("distributed merge rounds equal the driver loop on randomized " +
+      "skewed corpora") {
+    val rnd = new scala.util.Random(20261019L)
+    for (trial <- 0 until 3) {
+      val corpus = randomCorpus(rnd)
+      val n = 1 + rnd.nextInt(8)
+      val (_, dist) = Bpe.fit(corpus, "text", n, maxDriverTypes = 0)
+      val (_, drv) = Bpe.fit(corpus, "text", n)
+      def rows(t: org.apache.spark.sql.DataFrame) =
+        t.orderBy("rank").collect().map(_.toSeq).toSeq
+      assert(rows(dist) == rows(drv), s"trial $trial diverged")
+    }
+  }
+
+  test("a fit whose text column raises releases every cache it " +
+      "persisted, on both venues") {
+    // a range, not a local relation: the optimizer evaluates a local
+    // relation's raise_error at plan time, before anything persists
+    val bad = spark.range(corpus.size).select(col("id").as("doc_id"),
+      when(col("id") === 2L, raise_error(lit("bad text")))
+        .otherwise(element_at(typedlit(corpus), col("id").cast("int") + 1))
+        .as("text"))
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    for (budget <- Seq(1 << 20, 0)) {
+      val e = intercept[Exception] {
+        Bpe.fit(bad, "text", nMerges = 4, maxDriverTypes = budget)
+      }
+      assert(e.getMessage.contains("bad text"))
+      assert(cache.isEmpty, s"budget $budget left a cached table")
     }
   }
 

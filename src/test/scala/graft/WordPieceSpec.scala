@@ -1,6 +1,6 @@
 package graft
 
-import graft.llmdata.WordPiece
+import graft.llmdata.{MergeLearner, WordPiece}
 import org.apache.spark.sql.functions._
 
 /** WordPiece learning/serving pinned against an independent
@@ -90,6 +90,19 @@ class WordPieceSpec extends SparkSuite {
   private val docs = corpus.zipWithIndex
     .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
 
+  /** a few word types over the skewed "aab bc" alphabet, one document
+    * per type repeating it 1..20 times — score near-ties the float
+    * shortlist must hand to the exact re-decision
+    */
+  private def randomCorpus(rnd: scala.util.Random) = {
+    val alpha = "aabbc"
+    (0 until 4 + rnd.nextInt(12)).map { i =>
+      val t = (0 to rnd.nextInt(8))
+        .map(_ => alpha(rnd.nextInt(alpha.length))).mkString
+      (i.toLong, Seq.fill(1 + rnd.nextInt(20))(t).mkString(" "))
+    }.toDF("doc_id", "text")
+  }
+
   test("pairScores equals the reference pair and unit censuses") {
     val got = WordPiece.pairScores(docs, "text").collect().map { r =>
       (r.getAs[String]("sym_l"), r.getAs[String]("sym_r")) ->
@@ -147,8 +160,10 @@ class WordPieceSpec extends SparkSuite {
         (t, 1L + rnd.nextInt(50))
       }.groupBy(_._1).view.mapValues(_.map(_._2).sum).toArray
       val n = 1 + rnd.nextInt(30)
-      val inc = WordPiece.fitDriver(types, n, minPairCount = 2L)
-      val rec = WordPiece.fitDriverRecount(types, n, minPairCount = 2L)
+      val inc = MergeLearner.fitDriver(types, WordPiece.rule, n,
+        minPairCount = 2L)
+      val rec = MergeLearner.fitDriverRecount(types, WordPiece.rule, n,
+        minPairCount = 2L)
       assert(inc == rec, s"trial $trial diverged:\ninc $inc\nrec $rec")
     }
   }
@@ -165,6 +180,42 @@ class WordPieceSpec extends SparkSuite {
     assert(d == v)
     assert(v == refFit(corpus, 6))
     assert(dist.vocab == drv.vocab)
+  }
+
+  test("distributed merge rounds equal the driver loop on randomized " +
+      "skewed corpora") {
+    val rnd = new scala.util.Random(20261020L)
+    for (trial <- 0 until 3) {
+      val corpus = randomCorpus(rnd)
+      val n = 1 + rnd.nextInt(8)
+      val (distModel, dist) =
+        WordPiece.fit(corpus, "text", n, maxDriverTypes = 0)
+      val (drvModel, drv) = WordPiece.fit(corpus, "text", n)
+      def rows(t: org.apache.spark.sql.DataFrame) =
+        t.orderBy("rank").collect().map(_.toSeq).toSeq
+      assert(rows(dist) == rows(drv), s"trial $trial diverged")
+      assert(distModel.vocab == drvModel.vocab)
+    }
+  }
+
+  test("a fit whose text column raises releases every cache it " +
+      "persisted, on both venues") {
+    // a range, not a local relation: the optimizer evaluates a local
+    // relation's raise_error at plan time, before anything persists
+    val bad = spark.range(corpus.size).select(col("id").as("doc_id"),
+      when(col("id") === 2L, raise_error(lit("bad text")))
+        .otherwise(element_at(typedlit(corpus), col("id").cast("int") + 1))
+        .as("text"))
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    for (budget <- Seq(1 << 20, 0)) {
+      val e = intercept[Exception] {
+        WordPiece.fit(bad, "text", nMerges = 4, maxDriverTypes = budget)
+      }
+      assert(e.getMessage.contains("bad text"))
+      assert(cache.isEmpty, s"budget $budget left a cached table")
+    }
   }
 
   test("nMerges = 0 yields the pure alphabet model: every word " +
