@@ -567,8 +567,9 @@ class Compiler(df: DataFrame, seqCol: Option[String],
   /** npv(rate, cashflow): PV with the FIRST cashflow undiscounted
     * (parser.go:553-569), ordered by the frame's sequence. The period
     * index comes from a range-partitioned sequence
-    * (GraftBridge.zipWithSequence), not a global row_number window, so
-    * the eager scalar evaluation has no single-partition pass.
+    * (GraftBridge.sortedZipWithSequence), not a global row_number
+    * window, so the eager scalar evaluation has no single-partition
+    * pass.
     */
   private def npvCol(args: List[Expr]): Column = {
     val rate = compileExpr(args(0)).cast("double")

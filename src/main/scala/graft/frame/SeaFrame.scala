@@ -206,9 +206,9 @@ final case class SeaFrame(
     }.copy(sortedBy = Some(field -> ascending))
 
   /** Shuffle: seeded permutation (gdata.go:506-510). The permutation
-    * key is a deterministic seeded hash (not `rand`): withSequence
-    * executes its plan twice (count + emit passes), and the key must
-    * agree across both. Seeded so tests are reproducible; excluded from
+    * key is a deterministic seeded hash (not `rand`): withSequence's
+    * range sampling and its map stage each evaluate the key, and the
+    * two must agree. Seeded so tests are reproducible; excluded from
     * oracle hash-match regardless.
     */
   def shuffle(seed: Long): SeaFrame =
@@ -448,14 +448,15 @@ object SeaFrame {
   /** Wrap and assign sequence 0..n-1 by the given natural-key order.
     *
     * Scale note: a global row_number window would funnel every row
-    * through ONE partition. Instead: range-partitioned parallel sort,
-    * then zipWithIndex (one extra count job for partition offsets) —
-    * the sequence stays globally correct with no single-partition
-    * bottleneck.
+    * through ONE partition. Instead: a range-partitioned parallel sort
+    * whose map stage also counts the rows bound for each partition,
+    * giving the partition offsets with no extra job
+    * (GraftBridge.sortedZipWithSequence) — the sequence stays globally
+    * correct with no single-partition bottleneck.
     */
   def withSequence(df: DataFrame, orderBy: Seq[Column]): SeaFrame = {
     val (zipped, n) = org.apache.spark.sql.GraftBridge
-      .singlePassSortedZip(df, orderBy, SEQ)
+      .sortedZipWithSequence(df, orderBy, SEQ)
     SeaFrame(zipped, FeatureSchema.empty, Some(SEQ),
       knownCount = Some(n))
   }

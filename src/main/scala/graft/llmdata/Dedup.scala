@@ -471,6 +471,20 @@ object Dedup {
         col("b.__n") * den >= col("a.__n") * num)
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
       .distinct()
+    val union = col("n_a") + col("n_b") - col("n_inter")
+    verifyOverlap(cands, toks,
+      col("n_inter") * den >= lit(num) * union, "jaccard",
+      round(col("n_inter").cast("double") / union.cast("double"), 6))
+  }
+
+  /** Exact verification shared by the set joins: join the candidate
+    * pairs (id_a, id_b) back to their token sets `toks` (__id, __ts)
+    * on both sides, add the overlap `n_inter` and the set sizes `n_a`,
+    * `n_b`, keep the pairs passing `keep`, and emit them with `score`
+    * as column `scoreName`.
+    */
+  private def verifyOverlap(cands: DataFrame, toks: DataFrame,
+      keep: Column, scoreName: String, score: Column): DataFrame =
     cands
       .join(toks.select(col("__id").as("id_a"),
         col("__ts").as("__ta")), Seq("id_a"))
@@ -480,13 +494,10 @@ object Dedup {
         size(array_intersect(col("__ta"), col("__tb"))).cast("long"))
       .withColumn("n_a", size(col("__ta")).cast("long"))
       .withColumn("n_b", size(col("__tb")).cast("long"))
-      .where(col("n_inter") * den >=
-        lit(num) * (col("n_a") + col("n_b") - col("n_inter")))
-      .withColumn("jaccard", round(col("n_inter").cast("double") /
-        (col("n_a") + col("n_b") - col("n_inter")).cast("double"), 6))
+      .where(keep)
+      .withColumn(scoreName, score)
       .select(col("id_a"), col("id_b"), col("n_inter"), col("n_a"),
-        col("n_b"), col("jaccard"))
-  }
+        col("n_b"), col(scoreName))
 
   /** EXACT CONTAINMENT JOIN — the ASYMMETRIC near-dup relation
     * Jaccard structurally misses: C(A→B) = |A∩B| / |A| >= num/den
@@ -541,21 +552,10 @@ object Dedup {
         col("__nb") * den >= lit(num) * col("__na"))
       .select(col("__ida").as("id_a"), col("__idb").as("id_b"))
       .distinct()
-    cands
-      .join(toks.select(col("__id").as("id_a"),
-        col("__ts").as("__ta")), Seq("id_a"))
-      .join(toks.select(col("__id").as("id_b"),
-        col("__ts").as("__tb")), Seq("id_b"))
-      .withColumn("n_inter",
-        size(array_intersect(col("__ta"), col("__tb"))).cast("long"))
-      .withColumn("n_a", size(col("__ta")).cast("long"))
-      .withColumn("n_b", size(col("__tb")).cast("long"))
-      .where(col("n_inter") * den >= lit(num) * col("n_a"))
-      .withColumn("containment",
-        round(col("n_inter").cast("double") /
-          col("n_a").cast("double"), 6))
-      .select(col("id_a"), col("id_b"), col("n_inter"), col("n_a"),
-        col("n_b"), col("containment"))
+    verifyOverlap(cands, toks,
+      col("n_inter") * den >= lit(num) * col("n_a"), "containment",
+      round(col("n_inter").cast("double") /
+        col("n_a").cast("double"), 6))
   }
 
   /** Exact pairwise n-gram Jaccard over all id-ordered pairs —
@@ -640,27 +640,11 @@ object Dedup {
       .select(col("train_id"), col("eval_id"), col("score"))
   }
 
-  /** 64-bit SimHash of the normalized token stream: per bit, sign of
-    * the sum over tokens of +/-1 by that token-hash bit. Built from
-    * xxhash64 + bit ops only — no UDF, fully codegen'd.
-    */
-  def simhash(text: Column): Column = {
-    val tokens = split(normalize(text), " ")
-    val th = transform(tokens, t => xxhash64(t))
-    (0 until 64).map { bit =>
-      val votes = aggregate(th, lit(0L), (acc, h) =>
-        acc + when(shiftright(h, bit).bitwiseAND(1L) === 1L, 1L)
-          .otherwise(-1L))
-      when(votes > 0, shiftleft(lit(1L), bit)).otherwise(0L)
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** 64-bit SimHash as a single tight-loop pass: normalize, tokenize,
     * hash each token once, accumulate the 64 bit votes, emit the
     * fingerprint. No shuffle at all — embarrassingly parallel — where
     * an explode + 64-column aggregate pays a full exchange of token
-    * hashes, and the Column-level [[simhash]] runs 64 interpreted
-    * array scans (kept for parity/tests).
+    * hashes.
     */
   def simhashUdf: Column => Column = { text =>
     val f = udf { (t: String) =>

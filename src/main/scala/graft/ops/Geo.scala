@@ -140,13 +140,15 @@ object Geo {
     if (maxPerCell > 0) {
       def worst(df: DataFrame) = df.groupBy(col("__cell")).count()
         .agg(coalesce(max(col("count")), lit(0L))).first().getLong(0)
+      val remedy = " — use a smaller radius or pre-aggregate " +
+        "co-located points"
       val wa = worst(ca)
       require(wa <= maxPerCell, s"radiusJoinCells: densest cell of " +
-        s"side a holds $wa points (> $maxPerCell)")
+        s"side a holds $wa points (> $maxPerCell)$remedy")
       val wb = worst(cbBase.withColumn("__cell",
         key(col("__cx"), col("__cy"))))
       require(wb <= maxPerCell, s"radiusJoinCells: densest cell of " +
-        s"side b holds $wb points (> $maxPerCell)")
+        s"side b holds $wb points (> $maxPerCell)$remedy")
     }
     ca.join(cb, Seq("__cell"))
       .where(if (selfPairs) col("id_a") < col("id_b") else lit(true))

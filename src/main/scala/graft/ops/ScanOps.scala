@@ -205,15 +205,15 @@ object ScanOps {
 
   /** Exact global NTILE(k) over `orderBy` with no single-partition
     * window: rank = range-partitioned sort + per-partition offsets
-    * (GraftBridge.zipWithSequence), bucket = closed-form ntile from
-    * (rank, n). `orderBy` should be a total order (add a tiebreak
+    * (GraftBridge.sortedZipWithSequence), bucket = closed-form ntile
+    * from (rank, n). `orderBy` should be a total order (add a tiebreak
     * column) for deterministic bucketing of ties — the same caveat SQL
     * ntile has.
     */
   def ntile(df: DataFrame, orderBy: Seq[Column], k: Int,
       out: String = "ntile"): DataFrame = {
     val seqName = "__ntile_seq"
-    // total row count falls out of the zip's count pass — no extra job
+    // total row count falls out of the zip's map stage — no extra job
     val (zipped, n) = org.apache.spark.sql.GraftBridge
       .sortedZipWithSequence(df, orderBy, seqName)
     zipped.withColumn(out, ntileFromRank(col(seqName) + 1, n, k))

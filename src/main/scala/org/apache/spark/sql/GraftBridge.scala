@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, Expression, GenericInternalRow, JoinedRow, NullOrdering, NullsFirst, NullsLast, SortDirection}
 
 /** Bridge into Spark's private[sql] Column <-> Expression conversion
   * (Spark 4 moved it behind classic.ExpressionUtils). Lives in the
@@ -24,25 +25,16 @@ object GraftBridge {
   }
 
   /** Append a contiguous 0..n-1 long column to `df` in its CURRENT
-    * (already sorted) partition order, without leaving the InternalRow
-    * world: pass 1 counts rows per partition (driver receives one long
-    * per partition), pass 2 maps each partition with its prefix offset.
-    * Unlike `rdd.zipWithIndex` + `createDataFrame`, there is no Row
-    * encoder boundary — rows are wrapped, not deserialized. Like
-    * zipWithIndex, the upstream plan executes twice (count + emit);
-    * cache upstream if that matters.
+    * partition order, plus the row count, without leaving the
+    * InternalRow world: one job counts rows per partition (the driver
+    * receives one long per partition), a second maps each partition
+    * with its prefix offset. Rows are wrapped, not deserialized. The
+    * upstream plan executes twice. The no-sort-key case of
+    * [[sortedZipWithSequence]].
     */
-  def zipWithSequence(df: Dataset[Row], seqName: String): DataFrame =
-    zipWithSequenceCounted(df, seqName)._1
-
-  /** zipWithSequence plus the total row count — already known from the
-    * count pass, so callers needing n (e.g. exact ntile) don't pay a
-    * third execution of the plan.
-    */
-  def zipWithSequenceCounted(df: Dataset[Row], seqName: String)
+  private def zipWithSequenceCounted(df: Dataset[Row], seqName: String)
       : (DataFrame, Long) = {
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.sql.types.LongType
     val classicDf = df.asInstanceOf[classic.Dataset[Row]]
     val session = classicDf.sparkSession
     val internal = classicDf.queryExecution.toRdd
@@ -52,185 +44,75 @@ object GraftBridge {
       })))
       .collect().sortBy(_._1).map(_._2)
     val offsets = counts.scanLeft(0L)(_ + _)
-    val outSchema = StructType(df.schema.fields :+
-      StructField(seqName, LongType, nullable = false))
-    val zipped = internal.mapPartitionsWithIndex { (pid, it) =>
-      // reused mutable wrappers: downstream operators stream or
-      // copy-on-buffer, per Spark's InternalRow iterator contract
-      val joined = new JoinedRow
-      val idx = new GenericInternalRow(1)
-      var i = offsets(pid)
-      it.map { r =>
-        idx.update(0, i)
-        i += 1
-        joined(r, idx): org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
+    val outSchema = df.schema.add(seqName, LongType, nullable = false)
+    val zipped = internal.mapPartitionsWithIndex((pid, it) =>
+      numbered(it, offsets(pid)))
     (session.internalCreateDataFrame(zipped, outSchema),
       offsets.last)
   }
 
-  /** Sort `df` globally by `sortCols` and append a contiguous 0..n-1
-    * sequence — with the per-partition SORT RUNNING ONCE.
-    *
-    * The naive two-pass zip (`df.orderBy(...)` + count + emit)
-    * re-runs the reduce-side sort in the emit job (Spark reuses the
-    * shuffle files, not the sort above them). Here the shared plan is
-    * only `repartitionByRange` (shuffle, no sort): the count pass
-    * consumes the unsorted shuffle output, and the emit pass sorts
-    * each partition itself with Spark's spilling Tungsten sorter
-    * (UnsafeExternalRowSorter — the same machinery SortExec uses)
-    * before attaching the offsets. Both passes share one RDD, so the
-    * sampled range boundaries are consistent and the shuffle is
-    * computed once.
-    *
-    * Sort keys that are plain existing columns are bound by position;
-    * computed keys are materialized as trailing columns for the
-    * shuffle and dropped from the result.
+  /** Each row of `it` with a trailing long column counting up from
+    * `start`. The wrappers are reused: downstream operators stream or
+    * copy-on-buffer, per Spark's InternalRow iterator contract.
     */
-  /** Key resolution shared by the zip variants: unwrap sort
-    * direction from ColumnNode trees, reuse existing columns by
-    * ordinal, materialize computed keys as trailing columns.
-    * Returns (df with keys, resolved keys, names of appended cols).
+  private def numbered(it: Iterator[InternalRow], start: Long)
+      : Iterator[InternalRow] = {
+    val joined = new JoinedRow
+    val idx = new GenericInternalRow(1)
+    var i = start
+    it.map { r =>
+      idx.update(0, i)
+      i += 1
+      joined(r, idx)
+    }
+  }
+
+  /** Sort keys as (ordinal in the returned frame, direction, null
+    * ordering): unwrap both from ColumnNode trees (a bare column sorts
+    * ascending, nulls first), reuse existing columns by ordinal,
+    * materialize computed keys as trailing columns. Also returns the
+    * names of the appended columns.
     */
   private def resolveSortKeys(df: Dataset[Row], sortCols: Seq[Column])
-      : (Dataset[Row], Seq[(Either[Int, String], Boolean)], Seq[String]) = {
+      : (Dataset[Row], Seq[(Int, SortDirection, NullOrdering)],
+        Seq[String]) = {
     import org.apache.spark.sql.internal.{SortOrder => NodeSortOrder, UnresolvedAttribute => NodeAttr}
-    val keyInfo: Seq[(Column, Boolean)] = sortCols.map { c =>
-      c.node match {
-        case so: NodeSortOrder =>
-          (Column(so.child),
-            so.sortDirection == NodeSortOrder.Ascending)
-        case _ => (c, true)
-      }
-    }
     val dataCols = df.columns
-    val resolved: Seq[(Either[Int, (String, Column)], Boolean)] =
-      keyInfo.zipWithIndex.map { case ((c, asc), i) =>
-        val ord = c.node match {
-          case a: NodeAttr
-              if a.nameParts.length == 1 &&
-                dataCols.count(_ == a.nameParts.head) == 1 =>
-            Some(dataCols.indexOf(a.nameParts.head))
-          case _ => None
+    val keys = sortCols.zipWithIndex.map { case (sc, i) =>
+      val (c, dir, nulls): (Column, SortDirection, NullOrdering) =
+        sc.node match {
+          case so: NodeSortOrder =>
+            (Column(so.child),
+              if (so.sortDirection == NodeSortOrder.Ascending) Ascending
+              else Descending,
+              if (so.nullOrdering == NodeSortOrder.NullsFirst) NullsFirst
+              else NullsLast)
+          case _ => (sc, Ascending, NullsFirst)
         }
-        (ord.map(Left(_)).getOrElse(Right((s"__zk$i", c))), asc)
+      val existing = c.node match {
+        case a: NodeAttr
+            if a.nameParts.length == 1 &&
+              dataCols.count(_ == a.nameParts.head) == 1 =>
+          Some(a.nameParts.head)
+        case _ => None
       }
-    val appended = resolved.collect { case (Right((n, c)), _) => (n, c) }
+      (existing.toLeft((s"__zk$i", c)), dir, nulls)
+    }
+    val appended = keys.collect { case (Right(nc), _, _) => nc }
     val withKeys = appended.foldLeft(df) { case (d, (n, c)) =>
       d.withColumn(n, c)
     }
     (withKeys,
-      resolved.map {
-        case (Left(i), asc) => (Left(i): Either[Int, String], asc)
-        case (Right((n, _)), asc) => (Right(n), asc)
+      keys.map { case (k, dir, nulls) =>
+        (withKeys.schema.fieldIndex(k.fold(identity, _._1)), dir, nulls)
       },
       appended.map(_._1))
   }
 
-  def sortedZipWithSequence(df: Dataset[Row], sortCols: Seq[Column],
-      seqName: String): (DataFrame, Long) = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, GenericInternalRow, JoinedRow, SortOrder, UnsafeRow}
-    import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-    import org.apache.spark.sql.execution.UnsafeExternalRowSorter
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-
-    import org.apache.spark.sql.functions.col
-    if (sortCols.isEmpty) return zipWithSequenceCounted(df, seqName)
-    val classicDf = df.asInstanceOf[classic.Dataset[Row]]
-    val session = classicDf.sparkSession
-
-    val (withKeys, resolved, appended) = resolveSortKeys(df, sortCols)
-    val dataCols = df.columns
-    val rangeCols = resolved.map {
-      case (Left(i), asc) =>
-        if (asc) col(dataCols(i)).asc else col(dataCols(i)).desc
-      case (Right(n), asc) => if (asc) col(n).asc else col(n).desc
-    }
-    val ranged = withKeys.repartitionByRange(rangeCols: _*)
-      .asInstanceOf[classic.Dataset[Row]]
-    val internal = ranged.queryExecution.toRdd
-
-    // pass 1: row counts over the UNSORTED shuffle output (the shuffle
-    // materializes here and is reused by the emit job)
-    val counts = internal
-      .mapPartitionsWithIndex((i, it) => Iterator((i, {
-        var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n
-      })))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-
-    val fullSchema = ranged.schema
-    val nData = dataCols.length
-    val sortOrders = resolved.map {
-      case (Left(i), asc) =>
-        SortOrder(BoundReference(i, fullSchema(i).dataType,
-          fullSchema(i).nullable), if (asc) Ascending else Descending)
-      case (Right(n), asc) =>
-        val i = fullSchema.fieldIndex(n)
-        SortOrder(BoundReference(i, fullSchema(i).dataType,
-          fullSchema(i).nullable), if (asc) Ascending else Descending)
-    }
-    val ordering = new LazilyGeneratedOrdering(sortOrders)
-    val rowSchema = StructType(fullSchema.fields)
-    val outSchema = StructType(fullSchema.fields :+
-      StructField(seqName, LongType, nullable = false))
-
-    // first-key prefix comparison + radix eligibility, exactly as
-    // SortExec sets up its own sorter (comparator + projection are
-    // built executor-side — they don't serialize)
-    val headOrder = sortOrders.head
-    val canRadix = sortOrders.length == 1 &&
-      org.apache.spark.sql.execution.SortPrefixUtils
-        .canSortFullyWithPrefix(headOrder) &&
-      session.sessionState.conf.enableRadixSort
-
-    val zipped = internal.mapPartitionsWithIndex { (pid, it) =>
-      val prefixComparator =
-        org.apache.spark.sql.execution.SortPrefixUtils
-          .getPrefixComparator(headOrder)
-      val prefixProjection =
-        org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-          .create(Seq(
-            org.apache.spark.sql.catalyst.expressions
-              .SortPrefix(headOrder)))
-      val sorter = UnsafeExternalRowSorter.create(
-        rowSchema, ordering, prefixComparator,
-        new UnsafeExternalRowSorter.PrefixComputer {
-          private val res =
-            new UnsafeExternalRowSorter.PrefixComputer.Prefix
-          override def computePrefix(row: InternalRow)
-              : UnsafeExternalRowSorter.PrefixComputer.Prefix = {
-            val p = prefixProjection.apply(row)
-            res.isNull = p.isNullAt(0)
-            res.value = if (res.isNull) 0L else p.getLong(0)
-            res
-          }
-        },
-        org.apache.spark.SparkEnv.get.memoryManager.pageSizeBytes,
-        canRadix)
-      val sortedIt = sorter.sort(
-        it.asInstanceOf[Iterator[UnsafeRow]])
-      val joined = new JoinedRow
-      val idx = new GenericInternalRow(1)
-      var i = offsets(pid)
-      sortedIt.map { r =>
-        idx.update(0, i)
-        i += 1
-        joined(r, idx): InternalRow
-      }
-    }
-    val out = session.internalCreateDataFrame(zipped, outSchema)
-    (appended.foldLeft(out: DataFrame)((d, n) => d.drop(n)),
-      offsets.last)
-  }
-
-  /** SINGLE-PASS sorted zip: one scan, one shuffle write, ONE shuffle
-    * read + sort. Where [[sortedZipWithSequence]] runs a separate
-    * count job over the shuffle files (Spark reuses them, but the
-    * read is still paid twice), this path gets exact per-reduce-
-    * partition ROW counts during the map stage itself:
+  /** Sort `df` globally by `sortCols` and append a contiguous 0..n-1
+    * sequence `seqName`; also returns the row count. One scan, one
+    * shuffle write, ONE shuffle read + sort. Exact per-reduce-partition
+    * row counts come from the map stage itself:
     *
     *   1. build the range-partitioned shuffle dependency by hand
     *      (ShuffleExchangeExec.prepareShuffleDependency — sampling
@@ -246,28 +128,32 @@ object GraftBridge {
     *   3. run JUST the map stage (SparkContext.submitMapStage), fold
     *      the counts into prefix offsets;
     *   4. read the already-materialized shuffle via ShuffledRowRDD,
-    *      sort each partition with the Tungsten sorter and attach
-    *      offsets — the scheduler sees the dependency satisfied and
-    *      skips the map stage.
+    *      sort each partition with Spark's spilling Tungsten sorter
+    *      (UnsafeExternalRowSorter, set up as SortExec sets up its own)
+    *      and attach offsets — the scheduler sees the dependency
+    *      satisfied and skips the map stage.
     *
-    * At scale this removes one full pass over shuffle files versus
-    * the two-pass zip.
+    * Sort keys that are plain existing columns are bound by position;
+    * computed keys are materialized as trailing columns for the
+    * shuffle and dropped from the result. Every key must be
+    * deterministic: the range sampling and the map stage each
+    * evaluate it. With no sort keys, the sequence follows the current
+    * partition order.
     */
-  def singlePassSortedZip(df: Dataset[Row], sortCols: Seq[Column],
+  def sortedZipWithSequence(df: Dataset[Row], sortCols: Seq[Column],
       seqName: String): (DataFrame, Long) = {
     import org.apache.spark.ShuffleDependency
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, GenericInternalRow, JoinedRow, SortOrder, UnsafeRow}
+    import org.apache.spark.sql.catalyst.expressions.{BindReferences, SortOrder, SortPrefix, UnsafeProjection, UnsafeRow}
     import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    import org.apache.spark.sql.execution.{CoalescedPartitionSpec, ShuffledRowRDD, UnsafeExternalRowSorter, UnsafeRowSerializer}
+    import org.apache.spark.sql.execution.{CoalescedPartitionSpec, ShufflePartitionSpec, ShuffledRowRDD, SortPrefixUtils, UnsafeExternalRowSorter, UnsafeRowSerializer}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.metric.{SQLShuffleReadMetricsReporter, SQLShuffleWriteMetricsReporter}
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.sql.types.LongType
     import org.apache.spark.util.CompletionIterator
 
     if (sortCols.isEmpty) return zipWithSequenceCounted(df, seqName)
-    val (withKeys0, resolved, appended) = resolveSortKeys(df, sortCols)
+    val (withKeys0, keys, appended) = resolveSortKeys(df, sortCols)
     val withKeys = withKeys0.asInstanceOf[classic.Dataset[Row]]
     val session = withKeys.sparkSession
     val sc = session.sparkContext
@@ -276,13 +162,8 @@ object GraftBridge {
     val qe = withKeys.queryExecution
     val childRdd = qe.toRdd
     val attrs = qe.executedPlan.output
-    val fullSchema = withKeys.schema
-    val orders = resolved.map {
-      case (Left(i), asc) =>
-        SortOrder(attrs(i), if (asc) Ascending else Descending)
-      case (Right(n), asc) =>
-        SortOrder(attrs(fullSchema.fieldIndex(n)),
-          if (asc) Ascending else Descending)
+    val orders = keys.map { case (i, dir, nulls) =>
+      SortOrder(attrs(i), dir, nulls, Seq.empty)
     }
 
     // 1. the range shuffle dependency, exactly as an exchange builds it
@@ -323,41 +204,27 @@ object GraftBridge {
     val offsets = perReduce.scanLeft(0L)(_ + _)
 
     // 4. read the materialized shuffle once, sort, attach offsets
-    val boundOrders = resolved.map {
-      case (Left(i), asc) =>
-        SortOrder(BoundReference(i, fullSchema(i).dataType,
-          fullSchema(i).nullable), if (asc) Ascending else Descending)
-      case (Right(n), asc) =>
-        val i = fullSchema.fieldIndex(n)
-        SortOrder(BoundReference(i, fullSchema(i).dataType,
-          fullSchema(i).nullable), if (asc) Ascending else Descending)
-    }
+    // (comparator, prefix projection and sorter are built
+    // executor-side — they don't serialize)
+    val boundOrders = BindReferences.bindReferences(orders, attrs)
     val ordering = new LazilyGeneratedOrdering(boundOrders)
-    val rowSchema = StructType(fullSchema.fields)
-    val outSchema = StructType(fullSchema.fields :+
-      StructField(seqName, LongType, nullable = false))
+    val rowSchema = withKeys.schema
     val headOrder = boundOrders.head
     val canRadix = boundOrders.length == 1 &&
-      org.apache.spark.sql.execution.SortPrefixUtils
-        .canSortFullyWithPrefix(headOrder) &&
+      SortPrefixUtils.canSortFullyWithPrefix(headOrder) &&
       session.sessionState.conf.enableRadixSort
 
-    val specs: Array[org.apache.spark.sql.execution.ShufflePartitionSpec] =
+    val specs: Array[ShufflePartitionSpec] =
       Array.tabulate(actualParts)(i =>
         CoalescedPartitionSpec(i, i + 1, None))
     val shuffled = new ShuffledRowRDD(dep,
       SQLShuffleReadMetricsReporter.createShuffleReadMetrics(sc), specs)
     val zipped = shuffled.mapPartitionsWithIndex { (pid, it) =>
-      val prefixComparator =
-        org.apache.spark.sql.execution.SortPrefixUtils
-          .getPrefixComparator(headOrder)
-      val prefixProjection =
-        org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-          .create(Seq(
-            org.apache.spark.sql.catalyst.expressions
-              .SortPrefix(headOrder)))
+      val prefixExpr = SortPrefix(headOrder)
+      val prefixProjection = UnsafeProjection.create(Seq(prefixExpr))
       val sorter = UnsafeExternalRowSorter.create(
-        rowSchema, ordering, prefixComparator,
+        rowSchema, ordering,
+        SortPrefixUtils.getPrefixComparator(headOrder),
         new UnsafeExternalRowSorter.PrefixComputer {
           private val res =
             new UnsafeExternalRowSorter.PrefixComputer.Prefix
@@ -365,23 +232,20 @@ object GraftBridge {
               : UnsafeExternalRowSorter.PrefixComputer.Prefix = {
             val p = prefixProjection.apply(row)
             res.isNull = p.isNullAt(0)
-            res.value = if (res.isNull) 0L else p.getLong(0)
+            // a null's prefix sorts first or last by the null
+            // ordering; it is compared like any other prefix
+            res.value =
+              if (res.isNull) prefixExpr.nullValue else p.getLong(0)
             res
           }
         },
         org.apache.spark.SparkEnv.get.memoryManager.pageSizeBytes,
         canRadix)
-      val sortedIt = sorter.sort(it.asInstanceOf[Iterator[UnsafeRow]])
-      val joined = new JoinedRow
-      val idx = new GenericInternalRow(1)
-      var i = offsets(pid)
-      sortedIt.map { r =>
-        idx.update(0, i)
-        i += 1
-        joined(r, idx): InternalRow
-      }
+      numbered(sorter.sort(it.asInstanceOf[Iterator[UnsafeRow]]),
+        offsets(pid))
     }
-    val out = session.internalCreateDataFrame(zipped, outSchema)
+    val out = session.internalCreateDataFrame(zipped,
+      rowSchema.add(seqName, LongType, nullable = false))
     (appended.foldLeft(out: DataFrame)((d, n) => d.drop(n)),
       offsets.last)
   }

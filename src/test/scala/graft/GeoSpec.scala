@@ -56,9 +56,11 @@ class GeoSpec extends SparkSuite {
     val dense = (1 to 300).map(i =>
       (i.toLong, i / 100000.0, i / 100000.0)).toDF("id", "lat", "lon")
     val sparse = sites(3, 0.5)
-    intercept[IllegalArgumentException] {
+    val refused = intercept[IllegalArgumentException] {
       Geo.radiusJoinCells(sparse, dense, 100000.0, maxPerCell = 50)
     }
+    assert(refused.getMessage.contains("side b") &&
+      refused.getMessage.contains("smaller radius or pre-aggregate"))
     intercept[IllegalArgumentException] {
       Geo.radiusJoin(sparse, dense, 100000.0, maxPerBand = 50)
     }

@@ -38,7 +38,7 @@ class LlmDataSpec extends SparkSuite {
 
   test("simhash: identical docs at Hamming 0, near-dups close") {
     val fps = docs.select(col("doc_id"),
-      Dedup.simhash(col("text")).as("fp")).collect()
+      Dedup.simhashUdf(col("text")).as("fp")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fps(0L) == fps(1L))
     val hammingNear = java.lang.Long.bitCount(fps(0L) ^ fps(2L))
