@@ -723,13 +723,9 @@ object Stats {
     require(z > 0 && scale >= 1, s"theilSenCi: z=$z scale=$scale")
     val pts = graft.Caches.pin(df.select(col(series),
       col(x).cast("long").as("__x"), col(y).cast("long").as("__y")))
-    if (maxPoints > 0) {
-      val worst = pts.groupBy(col(series)).count()
-        .agg(coalesce(max(col("count")), lit(0L))).first().getLong(0)
-      require(worst <= maxPoints,
-        s"theilSenCi: a series holds $worst points (> $maxPoints) — " +
-          "aggregate to a coarser time grain first")
-    }
+    graft.ops.Guard(pts.groupBy(col(series)).count(), col("count"),
+      maxPoints, "theilSenCi", w => s"a series holds $w points",
+      "aggregate to a coarser time grain first")
     val a = pts.select(col(series), col("__x").as("xa"),
       col("__y").as("ya"))
     val b = pts.select(col(series), col("__x").as("xb"),
@@ -796,13 +792,9 @@ object Stats {
     require(scale >= 1, s"theilSen: scale $scale")
     val pts = df.select(col(series), col(x).cast("long").as("__x"),
       col(y).cast("long").as("__y"))
-    if (maxPoints > 0) {
-      val worst = pts.groupBy(col(series)).count()
-        .agg(coalesce(max(col("count")), lit(0L))).first().getLong(0)
-      require(worst <= maxPoints,
-        s"theilSen: a series holds $worst points (> $maxPoints) — " +
-          "aggregate to a coarser time grain first")
-    }
+    graft.ops.Guard(pts.groupBy(col(series)).count(), col("count"),
+      maxPoints, "theilSen", w => s"a series holds $w points",
+      "aggregate to a coarser time grain first")
     val a = pts.select(col(series), col("__x").as("xa"),
       col("__y").as("ya"))
     val b = pts.select(col(series), col("__x").as("xb"),

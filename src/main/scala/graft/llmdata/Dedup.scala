@@ -457,13 +457,9 @@ object Dedup {
       .where(col("__r") <= col("__n") -
         expr(s"(${num}L * __n + ${den}L - 1L) div ${den}L") + 1)
       .select(col("__tok"), col("__id"), col("__n")))
-    if (maxPerToken > 0) {
-      val worst = ranked.groupBy(col("__tok")).count()
-        .agg(coalesce(max(col("count")), lit(0L))).first().getLong(0)
-      require(worst <= maxPerToken,
-        s"setSimJoin: a prefix token indexes $worst records " +
-          s"(> $maxPerToken) — threshold too low for this corpus")
-    }
+    graft.ops.Guard(ranked.groupBy(col("__tok")).count(), col("count"),
+      maxPerToken, "setSimJoin", w => s"a prefix token indexes $w records",
+      "threshold too low for this corpus")
     val cands = ranked.as("a")
       .join(ranked.as("b"), col("a.__tok") === col("b.__tok") &&
         col("a.__id") < col("b.__id") &&
@@ -530,13 +526,9 @@ object Dedup {
         .cast("long").as("__n"), explode(col("__ts")).as("__tok"))
     val dfreq = exploded.groupBy(col("__tok"))
       .agg(count(lit(1)).as("__df"))
-    if (maxPerToken > 0) {
-      val worst = dfreq.agg(coalesce(max(col("__df")), lit(0L)))
-        .first().getLong(0)
-      require(worst <= maxPerToken,
-        s"containmentJoin: a token indexes $worst records " +
-          s"(> $maxPerToken) — strip stopword-grade tokens first")
-    }
+    graft.ops.Guard(dfreq, col("__df"), maxPerToken, "containmentJoin",
+      w => s"a token indexes $w records",
+      "strip stopword-grade tokens first")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__id")).orderBy(col("__df"), col("__tok"))
     val prefixA = exploded.join(dfreq, Seq("__tok"))

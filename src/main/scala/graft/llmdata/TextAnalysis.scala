@@ -1290,7 +1290,8 @@ object TextAnalysis {
       .na.fill(0L, Seq("__ca", "__cb")))
     val nVocab = j.count()
     require(nVocab <= maxVocab,
-      s"jsDivergence: $nVocab vocabulary exceeds $maxVocab")
+      s"jsDivergence: $nVocab vocabulary exceeds $maxVocab — drop " +
+        "rare tokens or hash them into buckets first")
     val totals = j.agg(sum(col("__ca")).as("__na"),
       sum(col("__cb")).as("__nb"))
     val wt = j.crossJoin(broadcast(totals))
@@ -1354,7 +1355,8 @@ object TextAnalysis {
       }: _*))
     val nVocab = grid.count()
     require(nVocab <= maxVocab,
-      s"jsDivergenceMatrix: $nVocab vocabulary exceeds $maxVocab")
+      s"jsDivergenceMatrix: $nVocab vocabulary exceeds $maxVocab — " +
+        "drop rare tokens or hash them into buckets first")
     val totals = grid.agg(
       sum(col("__c0")).as("__n0"),
       (1 until k).map(i => sum(col(s"__c$i")).as(s"__n$i")): _*)

@@ -72,14 +72,8 @@ object Association {
       .select(col(basketCol).as("__b"), col(itemCol).as("__i"))
       .groupBy(col("__b"))
       .agg(array_sort(collect_set(col("__i"))).as("__is")))
-    if (maxPerBasket > 0) {
-      val worst = grouped
-        .agg(coalesce(max(size(col("__is"))), lit(0)))
-        .first().getInt(0)
-      require(worst <= maxPerBasket,
-        s"$site: largest basket has $worst distinct items " +
-          s"(> $maxPerBasket) — coarsen the item key")
-    }
+    Guard(grouped, size(col("__is")), maxPerBasket, site,
+      w => s"largest basket has $w distinct items", "coarsen the item key")
     val counts = grouped.select(explode(col("__is")).as("__i"))
       .groupBy(col("__i")).agg(count(lit(1)).as("__c"))
     val pairs = grouped.select(explode(flatten(transform(col("__is"),

@@ -122,7 +122,8 @@ object Cox {
     try {
       val nDistinct = rows.select(col("__t")).distinct().count()
       require(nDistinct <= maxDistinct,
-        s"Cox.fit: $nDistinct distinct durations exceeds $maxDistinct")
+        s"Cox.fit: $nDistinct distinct durations exceeds $maxDistinct " +
+          "— round the durations to a coarser time grain")
 
       def pass(beta: Array[Double])
           : (Array[Double], Array[Array[Double]], Double, Long) = {

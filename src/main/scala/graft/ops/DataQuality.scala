@@ -277,7 +277,8 @@ object DataQuality {
     val groups = cells.groupBy(qs: _*).agg(sum(col("__c")).as("n"))
     val nGroups = groups.count()
     require(nGroups <= maxGroups,
-      s"tCloseness: $nGroups quasi-identifier groups exceed $maxGroups")
+      s"tCloseness: $nGroups quasi-identifier groups exceed $maxGroups " +
+        "— generalize the quasi-identifiers (coarser values or fewer)")
     val total = values.agg(sum(col("__cv")).as("__nn"))
     val lattice = groups.crossJoin(broadcast(values))
       .join(cells, quasiCols :+ "__v", "left")

@@ -357,7 +357,8 @@ object Eval {
       .agg(count(lit(1)).as("__n"), sum(col("__y")).as("__s")))
     val nCells = cells.count()
     require(nCells <= maxCells,
-      s"brierDecomposition: $nCells bins exceed $maxCells")
+      s"brierDecomposition: $nCells bins exceed $maxCells — round the " +
+        "scores to a coarser grid first")
     val totals = cells.agg(sum(col("__n")).as("__nn"),
       sum(col("__s")).as("__ss"))
     val wt = cells.crossJoin(broadcast(totals))
@@ -866,7 +867,8 @@ object Eval {
       "krippendorffAlpha: no unit has >= 2 ratings — alpha undefined")
     val mMax = mMaxRow.getLong(0)
     require(mMax <= maxRaters,
-      s"krippendorffAlpha: a unit has $mMax ratings > maxRaters $maxRaters")
+      s"krippendorffAlpha: a unit has $mMax ratings > maxRaters " +
+        s"$maxRaters — subsample the ratings of the crowded units")
     val obs = units.agg(
       count(lit(1)).as("n_units"),
       dec(sum(dec(col("__m")))).as("__n"),

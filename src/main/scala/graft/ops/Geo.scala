@@ -56,22 +56,14 @@ object Geo {
       .select(col("id_b"), col("lat_b"), col("lon_b"),
         explode(array(col("__band") - 1, col("__band"),
           col("__band") + 1)).as("__band"))
-    if (maxPerBand > 0) {
-      // Census BOTH inputs: a dense b side (further tripled by the
-      // neighbor-band explode) would fire the same quadratic bomb the
-      // a-side guard exists to stop. b is censused UN-exploded — the
-      // explode multiplies by exactly 3, which the bound accounts for.
-      val worst = ba.groupBy(col("__band")).count()
-        .agg(coalesce(max(col("count")), lit(0L))).first().getLong(0)
-      require(worst <= maxPerBand,
-        s"radiusJoin: densest latitude band holds $worst points " +
-          s"(> $maxPerBand) — use a finer cell scheme")
-      val worstB = banded(b, "b").groupBy(col("__band")).count()
-        .agg(coalesce(max(col("count")), lit(0L))).first().getLong(0)
-      require(worstB <= maxPerBand,
-        s"radiusJoin: densest latitude band of side b holds $worstB " +
-          s"points (> $maxPerBand) — use a finer cell scheme")
-    }
+    // Census BOTH inputs: a dense b side (further tripled by the
+    // neighbor-band explode) would fire the same quadratic bomb the
+    // a-side guard exists to stop. b is censused UN-exploded — the
+    // explode multiplies by exactly 3, which the bound accounts for.
+    for ((side, df) <- Seq("" -> ba, " of side b" -> banded(b, "b")))
+      Guard(df.groupBy(col("__band")).count(), col("count"), maxPerBand,
+        "radiusJoin", w => s"densest latitude band$side holds $w points",
+        "use a finer cell scheme")
     val joined = ba.join(bb, Seq("__band"))
       .where(if (selfPairs) col("id_a") < col("id_b") else lit(true))
       .withColumn("__d6", round(haversineM(col("lat_a"),
@@ -137,19 +129,11 @@ object Geo {
           array((for (dx <- -1 to 1; dy <- -1 to 1) yield
             key(pmod(col("__cx") + dx, lit(nLon)), col("__cy") + dy))
             : _*))).as("__cell"))
-    if (maxPerCell > 0) {
-      def worst(df: DataFrame) = df.groupBy(col("__cell")).count()
-        .agg(coalesce(max(col("count")), lit(0L))).first().getLong(0)
-      val remedy = " — use a smaller radius or pre-aggregate " +
-        "co-located points"
-      val wa = worst(ca)
-      require(wa <= maxPerCell, s"radiusJoinCells: densest cell of " +
-        s"side a holds $wa points (> $maxPerCell)$remedy")
-      val wb = worst(cbBase.withColumn("__cell",
-        key(col("__cx"), col("__cy"))))
-      require(wb <= maxPerCell, s"radiusJoinCells: densest cell of " +
-        s"side b holds $wb points (> $maxPerCell)$remedy")
-    }
+    for ((side, df) <- Seq("a" -> ca, "b" -> cbBase.withColumn("__cell",
+        key(col("__cx"), col("__cy")))))
+      Guard(df.groupBy(col("__cell")).count(), col("count"), maxPerCell,
+        "radiusJoinCells", w => s"densest cell of side $side holds $w points",
+        "use a smaller radius or pre-aggregate co-located points")
     ca.join(cb, Seq("__cell"))
       .where(if (selfPairs) col("id_a") < col("id_b") else lit(true))
       .withColumn("__d6", round(haversineM(col("lat_a"),

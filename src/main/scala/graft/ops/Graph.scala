@@ -418,17 +418,19 @@ object Graph {
     // fixpoint — the old edge-count probe paid one extra full
     // semi-join round just to observe nothing changed, plus a final
     // edges-wide re-aggregate for the output. Now each round runs
-    // ONE edges-wide degree aggregate (checkpointed node-sized), a
-    // trivial count on it, and — only when peeling continues — the
-    // two semi-joins; the terminal degree frame is returned directly
-    // (all its degrees are >= k by the very test that ended the
-    // loop). Same unique k-core, one fewer edges-wide pass per run.
+    // ONE edges-wide degree aggregate (checkpointed node-sized), an
+    // `isEmpty` probe on it (a `limit(1).count()` there named a fresh
+    // limit counter, so compiled new classes, every round), and — only
+    // when peeling continues — the two semi-joins; the terminal degree
+    // frame is returned directly (all its degrees are >= k by the very
+    // test that ended the loop). Same unique k-core, one fewer
+    // edges-wide pass per run.
     var rounds = 0
     while (true) {
       val deg = e.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("__d"))
         .localCheckpoint(true)
-      if (deg.where(col("__d") < k).limit(1).count() == 0L)
+      if (deg.where(col("__d") < k).isEmpty)
         return deg.select(col("node"), col("__d").as("deg_in_core"))
       require(rounds < maxRounds,
         s"kCore: no fixpoint within $maxRounds rounds")

@@ -226,13 +226,9 @@ object Joins {
       .groupBy(col(strCol)).agg(count(lit(1)).as("__n"))
       .select(col(strCol).as("__v"), col("__n"),
         blockOf(col(strCol)).as("__blk"))
-    if (maxPerBlock > 0) {
-      val worst = vals.groupBy(col("__blk")).count()
-        .agg(coalesce(max(col("count")), lit(0L))).first().getLong(0)
-      require(worst <= maxPerBlock,
-        s"fuzzyMatch: largest block has $worst distinct values " +
-          s"(> $maxPerBlock) — choose a finer blocking key")
-    }
+    Guard(vals.groupBy(col("__blk")).count(), col("count"), maxPerBlock,
+      "fuzzyMatch", w => s"largest block has $w distinct values",
+      "choose a finer blocking key")
     val a = vals.select(col("__blk"), col("__v").as("name_a"),
       col("__n").as("n_a"))
     val b = vals.select(col("__blk"), col("__v").as("name_b"),
@@ -264,13 +260,9 @@ object Joins {
       .groupBy(col(strCol)).agg(count(lit(1)).as("__n"))
       .select(col(strCol).as("__v"), col("__n"),
         blockOf(col(strCol)).as("__blk"))
-    if (maxPerBlock > 0) {
-      val worst = vals.groupBy(col("__blk")).count()
-        .agg(coalesce(max(col("count")), lit(0L))).first().getLong(0)
-      require(worst <= maxPerBlock,
-        s"fuzzyMatchJw: largest block has $worst distinct values " +
-          s"(> $maxPerBlock) — choose a finer blocking key")
-    }
+    Guard(vals.groupBy(col("__blk")).count(), col("count"), maxPerBlock,
+      "fuzzyMatchJw", w => s"largest block has $w distinct values",
+      "choose a finer blocking key")
     val a = vals.select(col("__blk"), col("__v").as("name_a"),
       col("__n").as("n_a"))
     val b = vals.select(col("__blk"), col("__v").as("name_b"),

@@ -61,16 +61,10 @@ object Linkage {
     // the saved re-scan
     val pa = side(a, "a")
     val pb = side(b, "b")
-    if (maxPerBlock > 0) {
-      def worst(df: DataFrame) = df.groupBy(col("__blk")).count()
-        .agg(coalesce(max(col("count")), lit(0L))).first().getLong(0)
-      val wa = worst(pa)
-      require(wa <= maxPerBlock, s"fellegiSunter: densest block of " +
-        s"side a holds $wa records (> $maxPerBlock) — refine the key")
-      val wb = worst(pb)
-      require(wb <= maxPerBlock, s"fellegiSunter: densest block of " +
-        s"side b holds $wb records (> $maxPerBlock) — refine the key")
-    }
+    for ((side, df) <- Seq("a" -> pa, "b" -> pb))
+      Guard(df.groupBy(col("__blk")).count(), col("count"), maxPerBlock,
+        "fellegiSunter", w => s"densest block of side $side holds $w records",
+        "refine the key")
     val score = ws.foldLeft(lit(0L)) { case (acc, (f, wAgree, wDis)) =>
       acc + when(col(s"${f}_a") === col(s"${f}_b"), lit(wAgree))
         .otherwise(lit(wDis))

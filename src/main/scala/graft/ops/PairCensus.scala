@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   *
   * Hub policy past `cap` (`cap <= 0`: no policy, exact answer):
   *   - "refuse": a key of degree > cap refuses the query HERE, at
-  *     construction, before any pair stage runs; the message names
-  *     `site` and `remedy`;
+  *     construction, before any pair stage runs: [[Guard]] on the kept
+  *     census, its message naming `site` and `remedy`;
   *   - "drop": keys of degree > cap are dropped (`keep` gains
   *     d <= cap), the Adamic-Adar hub discount taken to its limit;
   *   - "sample": every key keeps its `cap` members of lowest portable
@@ -60,12 +60,8 @@ private[graft] object PairCensus {
       if (uses.count(identity) >= 2) graft.Caches.pin(c) else c
     }
     val kept = keeps.foldLeft(census)((c, p) => c.where(p(col("d"))))
-    if (guard) {
-      val worst = kept.agg(coalesce(max(col("d")), lit(0L))).first()
-        .getLong(0)
-      require(worst <= cap, s"$site: a key is shared by $worst " +
-        s"members (> $cap) — $remedy or raise the cap")
-    }
+    if (guard) Guard(kept, col("d"), cap, site,
+      w => s"a key is shared by $w members", s"$remedy or raise the cap")
     val keptRows = if (keeps.isEmpty) km
       else km.join(kept.select(col("key")), Seq("key"), "left_semi")
     val rows =

@@ -231,7 +231,8 @@ object Preference {
     val nItems = g.select(col("__w").as("x"))
       .union(g.select(col("__l").as("x"))).distinct().count()
     require(nItems <= maxItems.toLong,
-      s"elo: $nItems items > maxItems $maxItems")
+      s"elo: $nItems items > maxItems $maxItems — bucket the rare " +
+        "items or use bradleyTerry (the batch path) at this scale")
     val seq = g.orderBy(col("__o"), col("__w"), col("__l"))
       .select(col("__w"), col("__l")).collect()
       .map(r => (r.getString(0), r.getString(1)))

@@ -432,13 +432,9 @@ object RankStats {
       maxPoints: Int = 10000): DataFrame = {
     val pts = graft.Caches.pin(df.select(series.as("series"),
       t.cast("long").as("__t"), v.cast("long").as("__v")))
-    if (maxPoints > 0) {
-      val worst = pts.groupBy(col("series")).count()
-        .agg(coalesce(max(col("count")), lit(0L))).first().getLong(0)
-      require(worst <= maxPoints,
-        s"mannKendall: a series holds $worst points (> $maxPoints) — " +
-          "aggregate to a coarser time grain first")
-    }
+    Guard(pts.groupBy(col("series")).count(), col("count"), maxPoints,
+      "mannKendall", w => s"a series holds $w points",
+      "aggregate to a coarser time grain first")
     val a = pts.select(col("series"), col("__t").as("__ta"),
       col("__v").as("__va"))
     val b = pts.select(col("series"), col("__t").as("__tb"),
@@ -487,13 +483,9 @@ object RankStats {
     val pts = graft.Caches.pin(df.select(series.as("series"),
       season.cast("long").as("__sea"), t.cast("long").as("__t"),
       v.cast("long").as("__v")))
-    if (maxPerSeason > 0) {
-      val worst = pts.groupBy(col("series"), col("__sea")).count()
-        .agg(coalesce(max(col("count")), lit(0L))).first().getLong(0)
-      require(worst <= maxPerSeason,
-        s"mannKendallSeasonal: a (series, season) holds $worst " +
-          s"points (> $maxPerSeason) — coarsen the time grain")
-    }
+    Guard(pts.groupBy(col("series"), col("__sea")).count(), col("count"),
+      maxPerSeason, "mannKendallSeasonal",
+      w => s"a (series, season) holds $w points", "coarsen the time grain")
     val a = pts.select(col("series"), col("__sea"),
       col("__t").as("__ta"), col("__v").as("__va"))
     val b = pts.select(col("series"), col("__sea"),
