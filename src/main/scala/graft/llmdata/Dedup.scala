@@ -28,14 +28,6 @@ object Dedup {
     trim(regexp_replace(regexp_replace(lower(text),
       "[^a-z0-9 ]", ""), " +", " "))
 
-  /** Normalized non-empty tokens in ONE pass: exactly
-    * `filter(split(normalize(text), " "), _ != "")` (parity proven
-    * over the full corpus) as a tight character loop instead of a
-    * lower + two-regex + trim + split + filter expression chain —
-    * measured ~35% faster warm at sf0.1, the dominant cost of every
-    * tokenize-bound operator. Null text -> null (filter upstream,
-    * same contract as the expression form).
-    */
   /** The tokenize loop as a plain JVM function, for UDFs that fuse
     * tokenization with other per-row work ([[Bpe.fertility]]). Null
     * in -> null out, same contract as the Column form.
@@ -62,6 +54,14 @@ object Dedup {
     out.toArray
   }
 
+  /** Normalized non-empty tokens in ONE pass: exactly
+    * `filter(split(normalize(text), " "), _ != "")` (parity proven
+    * over the full corpus) as a tight character loop instead of a
+    * lower + two-regex + trim + split + filter expression chain —
+    * measured ~35% faster warm at sf0.1, the dominant cost of every
+    * tokenize-bound operator. Null text -> null (filter upstream,
+    * same contract as the expression form).
+    */
   val normalizeTokens: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (s: String) =>
       val a = tokenizeJvm(s)
@@ -88,13 +88,7 @@ object Dedup {
     */
   def shingles(text: Column, n: Int): Column = {
     val f = udf { (t: String) =>
-      val sb = new StringBuilder(t.length)
-      t.foreach { c0 =>
-        val c = Character.toLowerCase(c0)
-        if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == ' ')
-          sb.append(c)
-      }
-      val words = sb.toString.trim.split(" +").filter(_.nonEmpty)
+      val words = normalizeJvm(t).trim.split(" +").filter(_.nonEmpty)
       val out = new scala.collection.mutable.LinkedHashSet[String]
       var i = 0
       while (i + n <= words.length) {
@@ -106,6 +100,20 @@ object Dedup {
     f(text)
   }
 
+  /** The character pass of [[normalize]] shared by the shingle and
+    * simhash UDFs: lowercase, then keep only `[a-z0-9 ]` (whitespace
+    * is not collapsed; callers split on " +").
+    */
+  private def normalizeJvm(t: String): String = {
+    val sb = new StringBuilder(t.length)
+    t.foreach { c0 =>
+      val c = Character.toLowerCase(c0)
+      if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == ' ')
+        sb.append(c)
+    }
+    sb.toString
+  }
+
   /** k MinHash values over a shingle array: h_i(S) = min over shingles
     * of mix(murmur3(shingle), seed_i).
     *
@@ -115,23 +123,28 @@ object Dedup {
     * which made this the bench's dominant cost.
     */
   def minhashes(sh: Column, k: Int): Column = {
-    val f = udf { (shingles: Seq[String]) =>
-      val mins = Array.fill(k)(Long.MaxValue)
-      shingles.foreach { s =>
-        val base = scala.util.hashing.MurmurHash3.stringHash(s).toLong
-        var i = 0
-        while (i < k) {
-          var z = base + 0x9e3779b97f4a7c15L * (i + 1)
-          z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-          z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-          z ^= z >>> 31
-          if (z < mins(i)) mins(i) = z
-          i += 1
-        }
-      }
-      mins.toSeq
-    }
+    val f = udf { (shingles: Seq[String]) => minhashArray(shingles, k).toSeq }
     f(sh)
+  }
+
+  /** The [[minhashes]] loop as a plain JVM function, shared with
+    * [[minhashBandHashes]] so both land bit-identical values.
+    */
+  private def minhashArray(shingles: Seq[String], k: Int): Array[Long] = {
+    val mins = Array.fill(k)(Long.MaxValue)
+    shingles.foreach { s =>
+      val base = scala.util.hashing.MurmurHash3.stringHash(s).toLong
+      var i = 0
+      while (i < k) {
+        var z = base + 0x9e3779b97f4a7c15L * (i + 1)
+        z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+        z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+        z ^= z >>> 31
+        if (z < mins(i)) mins(i) = z
+        i += 1
+      }
+    }
+    mins
   }
 
   /** PORTABLE k-minhash signature: shingle hash = the char-code
@@ -208,19 +221,7 @@ object Dedup {
   def minhashBandHashes(sh: Column, bands: Int, rows: Int): Column = {
     val k = bands * rows
     val f = udf { (shingles: Seq[String]) =>
-      val mins = Array.fill(k)(Long.MaxValue)
-      shingles.foreach { s =>
-        val base = scala.util.hashing.MurmurHash3.stringHash(s).toLong
-        var i = 0
-        while (i < k) {
-          var z = base + 0x9e3779b97f4a7c15L * (i + 1)
-          z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-          z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-          z ^= z >>> 31
-          if (z < mins(i)) mins(i) = z
-          i += 1
-        }
-      }
+      val mins = minhashArray(shingles, k)
       Array.tabulate(bands)(b => bandHash(mins, b, rows)).toSeq
     }
     f(sh)
@@ -266,7 +267,15 @@ object Dedup {
   /** LSH candidate pairs: split k minhashes into b bands of r rows
     * (k = b*r); docs colliding on any full band are candidates.
     * Shuffles only (band, bucket-hash, id) tuples — tiny relative to
-    * the corpus — and joins within buckets.
+    * the corpus — and pairs docs within buckets through the
+    * [[graft.ops.PairCensus]] kernel keyed by (band, bucket). A
+    * boilerplate cluster of m identical docs shares every bucket and
+    * would emit ~m²/2 pairs per band, so a bucket of more than
+    * 100000 docs refuses the query before any pair stage runs. The
+    * cap is fixed by design: near-identical documents (a templated
+    * page, or equal shingle sets under different text) fill buckets
+    * too, so such a cluster of more than 100000 docs is refused even
+    * after exact dedup and must be stripped upstream.
     */
   def minhashCandidates(df: DataFrame, id: String, text: String,
       shingleN: Int = 3, bands: Int = 8, rows: Int = 4): DataFrame = {
@@ -276,16 +285,22 @@ object Dedup {
     val sh = df.select(col(id).as("doc"),
         shingles(col(text), shingleN).as("sh"))
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    val banded = sh.select(col("doc"),
+    // pinned: the guard's bucket census and the pair join both read
+    // it, and the minhash UDF must run once for both
+    val banded = graft.Caches.pin(sh.select(col("doc").as("member"),
         posexplode(minhashBandHashes(col("sh"), bands, rows)))
-      .toDF("doc", "band", "bucket")
-    val a = banded.as("a"); val b = banded.as("b")
-    a.join(b, col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-      .distinct()
+      .select(struct(col("pos").as("band"), col("col").as("bucket"))
+        .as("key"), col("member")))
+    graft.ops.PairCensus("minhashCandidates", banded, 1L, maxBucketDocs,
+        remedy = "run Dedup.exact first and strip templated " +
+          "boilerplate (identical or near-identical documents share " +
+          "band buckets)",
+        what = w => s"a band bucket holds $w documents")
+      .select(col("a").as("doc_a"), col("b").as("doc_b"))
   }
+
+  /** [[minhashCandidates]]'s bucket cap: fixed, not a parameter. */
+  private val maxBucketDocs = 100000
 
   /** Exact Jaccard similarity of word n-gram shingle sets for given
     * candidate pairs (the verify stage after LSH).
@@ -425,10 +440,12 @@ object Dedup {
     * inequality inter*den >= num*(|x|+|y|-inter). LOSSLESS: the
     * result set equals brute force (spec-pinned), which is what
     * makes it oracle-checkable at all. Shuffles: token-df census,
-    * prefix-token join (per-token fan-out census-guarded — a token
-    * in half the corpus would be in nobody's prefix anyway since
-    * rarity-first ordering puts common tokens LAST), one verify
-    * join. Returns (id_a, id_b, n_inter, n_a, n_b, jaccard 6dp).
+    * prefix-token pairs through the [[graft.ops.PairCensus]] kernel
+    * (the id order and the length filter prune wedges inside its
+    * join; per-token fan-out guarded — a token in half the corpus
+    * would be in nobody's prefix anyway since rarity-first ordering
+    * puts common tokens LAST), one verify join. Returns (id_a, id_b,
+    * n_inter, n_a, n_b, jaccard 6dp).
     */
   def setSimJoin(df: DataFrame, id: String, text: String, num: Long,
       den: Long, maxPerToken: Int = 100000): DataFrame = {
@@ -456,17 +473,15 @@ object Dedup {
       .withColumn("__r", row_number().over(w))
       .where(col("__r") <= col("__n") -
         expr(s"(${num}L * __n + ${den}L - 1L) div ${den}L") + 1)
-      .select(col("__tok"), col("__id"), col("__n")))
-    graft.ops.Guard(ranked.groupBy(col("__tok")).count(), col("count"),
-      maxPerToken, "setSimJoin", w => s"a prefix token indexes $w records",
-      "threshold too low for this corpus")
-    val cands = ranked.as("a")
-      .join(ranked.as("b"), col("a.__tok") === col("b.__tok") &&
-        col("a.__id") < col("b.__id") &&
-        col("a.__n") * den >= col("b.__n") * num &&
-        col("b.__n") * den >= col("a.__n") * num)
+      .select(col("__tok").as("key"),
+        struct(col("__id"), col("__n")).as("member")))
+    val cands = graft.ops.PairCensus("setSimJoin", ranked, 1L,
+        maxPerToken, remedy = "threshold too low for this corpus",
+        pair = (a, b) => a("__id") < b("__id") &&
+          a("__n") * den >= b("__n") * num &&
+          b("__n") * den >= a("__n") * num,
+        what = w => s"a prefix token indexes $w records")
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-      .distinct()
     val union = col("n_a") + col("n_b") - col("n_inter")
     verifyOverlap(cands, toks,
       col("n_inter") * den >= lit(num) * union, "jaccard",
@@ -640,14 +655,8 @@ object Dedup {
     */
   def simhashUdf: Column => Column = { text =>
     val f = udf { (t: String) =>
-      val sb = new StringBuilder(t.length)
-      t.foreach { c0 =>
-        val c = Character.toLowerCase(c0)
-        if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == ' ')
-          sb.append(c)
-      }
       val votes = new Array[Int](64)
-      sb.toString.trim.split(" +").foreach { tok =>
+      normalizeJvm(t).trim.split(" +").foreach { tok =>
         if (tok.nonEmpty) {
           // splitmix64 of murmur3 — a well-mixed 64-bit token hash
           var z = scala.util.hashing.MurmurHash3.stringHash(tok).toLong
@@ -694,18 +703,24 @@ object Dedup {
     hammingPairs(simhashDf(df, id, text), maxHamming, chunks, bits = 64,
       maxPerBucket = maxPerBucket)
 
-  /** Chunk-bucket candidate join + exact Hamming verify over a
+  /** Chunk-bucket candidate pairs + exact Hamming verify over a
     * fingerprint frame `(doc, fp)` — the banding stage shared by the
-    * 64-bit and portable simhash variants.
+    * 64-bit and portable simhash variants. Docs sharing a (chunk,
+    * value) bucket pair up through the [[graft.ops.PairCensus]]
+    * kernel, each member carrying its fingerprint, so the distance
+    * is computed from the pair itself; pairs are ordered by doc id
+    * alone, so a doc id never pairs with itself. A null fingerprint
+    * has no chunks and pairs with nothing.
     *
     * `maxPerBucket` (0 = unlimited) is the explicit skew guard for
-    * clustered-fingerprint corpora: a (chunk, key) bucket larger than
-    * the cap is EXCLUDED from candidate generation, bounding the
-    * self-join at buckets² <= cap² per key instead of degenerating
-    * quadratically when many documents share chunk values. The
-    * pigeonhole recall guarantee then holds only for pairs sharing at
-    * least one under-cap bucket — a deliberate, visible trade (the
-    * same enrollment cap streaming dedup applies), NOT the default.
+    * clustered-fingerprint corpora (the kernel's "drop" policy): a
+    * (chunk, key) bucket larger than the cap is EXCLUDED from
+    * candidate generation, bounding the self-join at buckets² <= cap²
+    * per key instead of degenerating quadratically when many
+    * documents share chunk values. The pigeonhole recall guarantee
+    * then holds only for pairs sharing at least one under-cap bucket
+    * — a deliberate, visible trade (the same enrollment cap streaming
+    * dedup applies), NOT the default.
     */
   def hammingPairs(fp: DataFrame, maxHamming: Int, chunks: Int = 0,
       bits: Int = 64, maxPerBucket: Int = 0): DataFrame = {
@@ -715,36 +730,19 @@ object Dedup {
     // chunk i covers bits [i*bits/c, (i+1)*bits/c) — widths differ by
     // at most 1, all bits covered, no chunk ever empty
     val bounds = (0 to c).map(i => i * bits / c)
-    val chunked0 = fp.select(col("doc"), col("fp"), posexplode(array(
-      (0 until c).map { i =>
-        val lo = bounds(i); val w = bounds(i + 1) - lo
-        val mask = if (w >= 64) -1L else (1L << w) - 1L
-        shiftright(col("fp"), lo).bitwiseAND(mask)
-      }: _*)))
-      .toDF("doc", "fp", "chunk", "key")
-    val chunked = if (maxPerBucket <= 0) chunked0 else {
-      // one partial-agg census of bucket sizes, anti-join the
-      // oversized tail out before the self-join. No broadcast hint:
-      // on a clustered corpus with a small cap the tail can be a
-      // large fraction of all (chunk,key) buckets, so the strategy is
-      // left to Catalyst/AQE, which sees the post-agg size at runtime
-      // and only broadcasts when the tail is actually small.
-      val over = chunked0.groupBy(col("chunk"), col("key"))
-        .agg(count(lit(1)).as("__n"))
-        .where(col("__n") > maxPerBucket)
-        .select(col("chunk"), col("key"))
-      chunked0.join(over, Seq("chunk", "key"), "left_anti")
-    }
-    val a = chunked.as("a"); val b = chunked.as("b")
-    val hamming = {
-      val x = col("a.fp").bitwiseXOR(col("b.fp"))
-      bit_count(x)
-    }
-    a.join(b, col("a.chunk") === col("b.chunk") &&
-        col("a.key") === col("b.key") && col("a.doc") < col("b.doc"))
+    val chunked = fp.where(col("fp").isNotNull)
+      .select(struct(col("doc"), col("fp")).as("member"), posexplode(array(
+        (0 until c).map { i =>
+          val lo = bounds(i); val w = bounds(i + 1) - lo
+          val mask = if (w >= 64) -1L else (1L << w) - 1L
+          shiftright(col("fp"), lo).bitwiseAND(mask)
+        }: _*)))
+      .select(struct(col("pos").as("chunk"), col("col").as("key"))
+        .as("key"), col("member"))
+    graft.ops.PairCensus("hammingPairs", chunked, 1L, maxPerBucket, "drop",
+        pair = (a, b) => a("doc") < b("doc"))
       .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
-        hamming.as("hamming"))
-      .distinct()
+        bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
   }
 
@@ -759,14 +757,8 @@ object Dedup {
   def simhashPortableDf(df: DataFrame, id: String, text: String)
       : DataFrame = {
     val f = udf { (t: String) =>
-      val sb = new StringBuilder(t.length)
-      t.foreach { c0 =>
-        val c = Character.toLowerCase(c0)
-        if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == ' ')
-          sb.append(c)
-      }
       val votes = new Array[Int](60)
-      sb.toString.trim.split(" +").foreach { tok =>
+      normalizeJvm(t).trim.split(" +").foreach { tok =>
         if (tok.nonEmpty) {
           var h1 = 0L; var h2 = 0L
           var i = 0
@@ -882,27 +874,6 @@ object Dedup {
             s => s("span")), " ").as("kept_text"))
   }
 
-  /** Maximal repeated-substring spans (the exact-substring dedup of
-    * Lee et al. 2022, "Deduplicating Training Data Makes Language
-    * Models Better", re-expressed relationally): a token position is
-    * DUPLICATED when the `l`-token window starting there occurs in >=
-    * `minDocs` distinct documents; overlapping/adjacent duplicated
-    * windows merge into maximal spans. Unlike [[spanDedup]]'s fixed
-    * grid, windows SLIDE — a repeated passage is found at any offset.
-    *
-    * Returns one row per (doc, maximal span): token start/end
-    * (0-based, inclusive) and length.
-    *
-    * Scale shape: the suffix-array the paper builds is replaced by a
-    * sliding-window census — explode (window-hash, doc, pos), one
-    * partial-aggregated count per FIXED-WIDTH 64-bit window hash
-    * ([[windowHashes]] — 8 bytes of key per window, not l tokens of
-    * text), join the >=minDocs set back (broadcast when small, AQE
-    * otherwise), then gaps-and-islands per document (window
-    * partitioned by doc — bounded by document length, never
-    * corpus-wide). Two shuffles on the hash key + one per-doc window;
-    * no pairwise stage at all.
-    */
   /** 64-bit rolling hashes of every l-token window, one tight loop
     * per document: FNV-1a per token, then a wraparound polynomial
     * over the token hashes rolled across windows (remove the leading
@@ -952,6 +923,27 @@ object Dedup {
     }
   }
 
+  /** Maximal repeated-substring spans (the exact-substring dedup of
+    * Lee et al. 2022, "Deduplicating Training Data Makes Language
+    * Models Better", re-expressed relationally): a token position is
+    * DUPLICATED when the `l`-token window starting there occurs in >=
+    * `minDocs` distinct documents; overlapping/adjacent duplicated
+    * windows merge into maximal spans. Unlike [[spanDedup]]'s fixed
+    * grid, windows SLIDE — a repeated passage is found at any offset.
+    *
+    * Returns one row per (doc, maximal span): token start/end
+    * (0-based, inclusive) and length.
+    *
+    * Scale shape: the suffix-array the paper builds is replaced by a
+    * sliding-window census — explode (window-hash, doc, pos), one
+    * partial-aggregated count per FIXED-WIDTH 64-bit window hash
+    * ([[windowHashes]] — 8 bytes of key per window, not l tokens of
+    * text), join the >=minDocs set back (broadcast when small, AQE
+    * otherwise), then gaps-and-islands per document (window
+    * partitioned by doc — bounded by document length, never
+    * corpus-wide). Two shuffles on the hash key + one per-doc window;
+    * no pairwise stage at all.
+    */
   def repeatedSubstringSpans(df: DataFrame, docId: String, text: String,
       l: Int, minDocs: Int = 2): DataFrame = {
     require(l >= 1, s"window length must be >= 1, got $l")

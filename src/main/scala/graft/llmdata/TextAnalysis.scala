@@ -1112,7 +1112,8 @@ object TextAnalysis {
       Some((d: Column) => d * 1000 <= lit(maxDocPermille) * lit(nDocs))
     }
     graft.ops.PairCensus("winnowSimilarity", all, minShared, maxPerFp,
-        remedy = "strip boilerplate (maxDocPermille)", keep = strip)
+        remedy = "strip boilerplate (maxDocPermille) or raise the cap",
+        keep = strip)
       .toDF("doc_a", "doc_b", "n_shared")
   }
 

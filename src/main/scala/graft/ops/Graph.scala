@@ -341,7 +341,7 @@ object Graph {
     val e = adjacency(adj)
     PairCensus("commonNeighbors", e.select(col("nbr").as("key"),
         col("node").as("member")), minCommon, maxDegree, hubPolicy,
-        "prune hubs (hubPolicy drop/sample)")
+        "prune hubs (hubPolicy drop/sample) or raise the cap")
       .toDF("node_a", "node_b", "n_common")
       .join(e.toDF("node_a", "node_b"), Seq("node_a", "node_b"),
         "left_anti")
@@ -380,7 +380,7 @@ object Graph {
     val e = adjacency(adj)
     PairCensus("linkScores", e.select(col("nbr").as("key"),
         col("node").as("member")), minCommon, maxDegree,
-        weights = Seq(
+        remedy = "prune hubs or raise the cap", weights = Seq(
           "aa_q" -> ((d: Column) => floor(lit(aaScale.toDouble) /
             log(d.cast("double"))).cast("long")),
           "ra_q" -> ((d: Column) => call_function("div", lit(raScale), d))))

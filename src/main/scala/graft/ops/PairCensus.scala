@@ -5,14 +5,26 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** PAIR CENSUS: the one kernel behind every "members that share keys"
-  * operator ([[Graph.commonNeighbors]], [[Graph.linkScores]],
-  * [[graft.llmdata.TextAnalysis.winnowSimilarity]]). From DISTINCT,
-  * non-null `(key, member)` rows it returns every member pair a < b
-  * sharing >= `minShared` keys as `(a, b, n, <weight sums>)`: n is the
-  * number of shared keys, and each weight column sums a per-key
-  * function of the key's degree d (its member count) over them. The
-  * wedge self-join on the key is quadratic only in per-key degree
-  * (Σ d² wedges), so a hub key is what can make it explode.
+  * operator. Its six callers: [[Graph.commonNeighbors]] and
+  * [[Graph.linkScores]] (key = neighbor), and in `graft.llmdata`
+  * `TextAnalysis.winnowSimilarity` (key = fingerprint),
+  * `Dedup.minhashCandidates` (key = (band, bucket)),
+  * `Dedup.hammingPairs` (key = (chunk, chunk value), member =
+  * (doc, fp)) and `Dedup.setSimJoin` (key = prefix token, member =
+  * (id, set size)). From DISTINCT, non-null `(key, member)` rows it
+  * returns every member pair (a, b) passing `pair` (default a < b)
+  * that shares >= `minShared` keys as `(a, b, n, <weight sums>)`: n
+  * is the number of shared keys, and each weight column sums a
+  * per-key function of the key's degree d (its member count) over
+  * them. The wedge self-join on the key is quadratic only in per-key
+  * degree (Σ d² wedges), so a hub key is what can make it explode.
+  *
+  * `pair` is the wedge predicate on the two members, applied inside
+  * the join: it must admit at most one order of each pair. A struct
+  * member orders by its fields, so a caller whose member carries a
+  * payload next to its id compares the ids (a repeated id with two
+  * payloads must not pair with itself), and may add filters that
+  * prune wedges before the count (setSimJoin's length filter).
   *
   * ONE degree census `(key, d)`, pinned when two of them read it,
   * serves every use of d:
@@ -25,7 +37,9 @@ import org.apache.spark.sql.functions._
   * Hub policy past `cap` (`cap <= 0`: no policy, exact answer):
   *   - "refuse": a key of degree > cap refuses the query HERE, at
   *     construction, before any pair stage runs: [[Guard]] on the kept
-  *     census, its message naming `site` and `remedy`;
+  *     census, its message `<site>: <what(d)> (> cap) — <remedy>`
+  *     (`remedy` verbatim and required: a caller whose cap is a
+  *     parameter says "or raise the cap" itself);
   *   - "drop": keys of degree > cap are dropped (`keep` gains
   *     d <= cap), the Adamic-Adar hub discount taken to its limit;
   *   - "sample": every key keeps its `cap` members of lowest portable
@@ -41,9 +55,12 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object PairCensus {
   def apply(site: String, km: DataFrame, minShared: Long,
-      cap: Int = 0, policy: String = "refuse",
-      remedy: String = "prune hubs", keep: Option[Column => Column] = None,
-      weights: Seq[(String, Column => Column)] = Nil): DataFrame = {
+      cap: Int = 0, policy: String = "refuse", remedy: String = "",
+      keep: Option[Column => Column] = None,
+      weights: Seq[(String, Column => Column)] = Nil,
+      pair: (Column, Column) => Column = _ < _,
+      what: Long => String = w => s"a key is shared by $w members")
+      : DataFrame = {
     require(minShared >= 1, s"$site: minimum shared keys $minShared")
     require(Set("refuse", "drop", "sample")(policy),
       s"$site: hub policy $policy")
@@ -60,8 +77,7 @@ private[graft] object PairCensus {
       if (uses.count(identity) >= 2) graft.Caches.pin(c) else c
     }
     val kept = keeps.foldLeft(census)((c, p) => c.where(p(col("d"))))
-    if (guard) Guard(kept, col("d"), cap, site,
-      w => s"a key is shared by $w members", s"$remedy or raise the cap")
+    if (guard) Guard(kept, col("d"), cap, site, what, remedy)
     val keptRows = if (keeps.isEmpty) km
       else km.join(kept.select(col("key")), Seq("key"), "left_semi")
     val rows =
@@ -74,7 +90,7 @@ private[graft] object PairCensus {
       } else keptRows
     val wedge0 = rows.select(col("key"), col("member").as("a"))
       .join(rows.select(col("key"), col("member").as("b")), Seq("key"))
-      .where(col("a") < col("b"))
+      .where(pair(col("a"), col("b")))
     val wedge = if (weights.isEmpty) wedge0 else wedge0.join(
       kept.where(col("d") >= 2).select(col("key") +:
         weights.map { case (name, f) => f(col("d")).as(name) }: _*),

@@ -157,6 +157,17 @@ class GuardSpec extends SparkSuite {
       assert(i > 0 && got.substring(i + 3).trim.nonEmpty, got)
     }
 
+  test("skew guard: a boilerplate cluster of 100001 identical docs " +
+      "refuses minhashCandidates at the call, before any pair stage") {
+    val docs = spark.range(100001L).select(col("id").as("doc_id"),
+      lit("accept all cookies to continue reading").as("text"))
+    assert(refusal(() => Dedup.minhashCandidates(docs, "doc_id",
+        "text")) == "requirement failed: minhashCandidates: a band " +
+      "bucket holds 100001 documents (> 100000) — run Dedup.exact " +
+      "first and strip templated boilerplate (identical or " +
+      "near-identical documents share band buckets)")
+  }
+
   test("skew guard: cap 0 skips the check, an empty census passes, " +
       "and a blank remedy is refused") {
     val census = Seq(("k", 1000000L)).toDF("key", "count")

@@ -635,6 +635,27 @@ class LlmDataSpec extends SparkSuite {
     assert(capped.contains((100L, 101L)))
   }
 
+  test("a repeated doc id never pairs with itself: hammingPairs and " +
+      "setSimJoin order pairs by id alone") {
+    import spark.implicits._
+    // doc 5 carries two fingerprints one bit apart; ordering members
+    // by (doc, fp) would pair them
+    val fps = Seq((5L, 0x0f0fL), (5L, 0x0f0eL), (6L, 0x0f0fL))
+      .toDF("doc", "fp")
+    val ham = Dedup.hammingPairs(fps, maxHamming = 3)
+      .select("doc_a", "doc_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(ham == Set((5L, 6L)), s"hammingPairs: $ham")
+    val docs = Seq((1L, "alpha beta gamma delta"),
+      (1L, "alpha beta gamma delta"),
+      (2L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    val sim = Dedup.setSimJoin(docs, "doc_id", "text", 1L, 2L)
+      .select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    graft.Caches.release()
+    assert(sim == Set((1L, 2L)), s"setSimJoin: $sim")
+  }
+
   test("dsirLogWeights: target-like docs outscore off-target docs; " +
       "short docs dropped") {
     import spark.implicits._

@@ -79,6 +79,25 @@ class PairCensusSpec extends SparkSuite {
       exact.get(p).exists(_._1 >= n) }, "a sampled pair broke the subset")
   }
 
+  test("pair census: struct members with a pair predicate give the " +
+      "brute-force pairs that pass it") {
+    import spark.implicits._
+    // the member carries a payload w = id mod 7; the predicate orders
+    // by id and keeps pairs of equal payload parity
+    def keepPair(a: Long, b: Long): Boolean = (a % 7 + b % 7) % 2 == 0
+    val want = brute(_ => true).collect {
+      case ((a, b), (n, _, _)) if keepPair(a, b) => (a, b) -> n }
+    val km = rows.toDF("key", "id").select(col("key"),
+      struct(col("id"), (col("id") % 7).as("w")).as("member"))
+    val got = PairCensus("spec", km, 1L, remedy = "remedy",
+        pair = (a, b) => a("id") < b("id") &&
+          (a("w") + b("w")) % 2 === 0)
+      .select(col("a.id"), col("b.id"), col("n")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(want.nonEmpty && want.size < brute(_ => true).size)
+    assert(got == want)
+  }
+
   test("pair census: refuse throws at the call, before any pair " +
       "stage, naming the site and the remedy; kept keys pass") {
     val ex = intercept[IllegalArgumentException] {
