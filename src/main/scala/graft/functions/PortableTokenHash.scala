@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.functions.{lit, pmod}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -109,7 +110,48 @@ object PortableTokenHash {
     acc
   }
 
+  /** The same fold over a JVM `String`'s code points, continuing from
+    * `acc`: `fold(0, s) == hashUtf8(s)`, and a bigram "a b" hashes as
+    * `fold(fold(fold(0, a), " "), b)` without building the string.
+    */
+  def fold(acc: Long, s: String): Long = {
+    var h = acc
+    var i = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      h = (h * 31L + cp) % 1000000007L
+      i += Character.charCount(cp)
+    }
+    h
+  }
+
   /** Column builder over the native expression. */
   def apply(tok: Column): Column =
     GraftBridge.column(PortableTokenHash(GraftBridge.expression(tok)))
+}
+
+/** The engine's portable id hash — every sample, split, fold, sketch
+  * row, bootstrap resample and permutation sign is a pure function of
+  * (id, seed) through it, so any engine (the DuckDB oracles included)
+  * replays it bit for bit:
+  *
+  *   h_k(x) = (x·(2654435761 + 2k) + seed + k·1000003) mod 1e9+7
+  *
+  * (Knuth's multiplicative step; `k` varies the multiplier per sketch
+  * row / resample / permutation so the k streams decorrelate, and is 0
+  * for a plain sample). `x` and the seed are reduced mod P = 1e9+7
+  * first, which is exact ((x mod P)·c ≡ x·c mod P) and bounds every
+  * intermediate by (P−1)·(2654435761 + 2k) + P + k·1000003 < 2^62 for
+  * k ≤ 9999: no id, however large or negative, overflows a long, so an
+  * ANSI engine never raises where the raw product would.
+  */
+private[graft] object PortableHash {
+  val Mult = 2654435761L
+  private val Mod = 1000000007L
+
+  def apply(x: Column, seed: Long, k: Column = lit(0L)): Column = {
+    val kl = k.cast("long")
+    pmod(pmod(x.cast("long"), lit(Mod)) * (lit(Mult) + lit(2L) * kl) +
+      (lit(Math.floorMod(seed, Mod)) + kl * lit(1000003L)), lit(Mod))
+  }
 }

@@ -164,21 +164,9 @@ object Dedup {
   def portableMinhashes(sh: Column, k: Int): Column = {
     val f = udf { (shingles: Seq[String]) =>
       val P = 1000000007L
-      val n = shingles.length
-      val hs = new Array[Long](n)
-      var j = 0
-      while (j < n) {
-        val s = shingles(j)
-        var h = 0L
-        var i = 0
-        while (i < s.length) {
-          val cp = s.codePointAt(i)
-          h = (h * 31L + cp) % P
-          i += Character.charCount(cp)
-        }
-        hs(j) = h
-        j += 1
-      }
+      val hs = shingles.iterator
+        .map(graft.functions.PortableTokenHash.fold(0L, _)).toArray
+      val n = hs.length
       val out = new Array[Long](k)
       var m = 0
       while (m < k) {

@@ -1,16 +1,15 @@
 package graft.llmdata
 
+import graft.functions.{PortableHash, PortableTokenHash}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Reproducible sampling and splitting for training-data pipelines.
   *
   * Everything keys off a PORTABLE integer hash of the row id —
-  * `(id * 2654435761 + seed) mod 1e9+7` (Knuth multiplicative step;
-  * products stay far under 2^63, so ANSI engines never overflow) —
-  * NOT an RNG: membership is a pure function of (id, seed), so
-  * samples are stable across runs, engines, partitionings, and
-  * re-executions, and any engine (the DuckDB oracle included)
+  * [[graft.functions.PortableHash]] — NOT an RNG: membership is a
+  * pure function of (id, seed), so samples are stable across runs,
+  * engines, partitionings, and re-executions, and any engine (the DuckDB oracle included)
   * reproduces them bit-for-bit. That determinism is what makes a
   * 100 TB pipeline auditable: "which split was this row in" is
   * answerable forever.
@@ -20,13 +19,11 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  private val Mult = 2654435761L
-  private val Mod = 1000000007L
   private val Buckets = 1000000L
 
   /** The sampling bucket in [0, 1e6) for an integer id column. */
   def bucket(id: Column, seed: Long): Column =
-    pmod(id.cast("long") * Mult + seed, lit(Mod)) % Buckets
+    PortableHash(id, seed) % Buckets
 
   /** The sampling bucket for a STRING key — the group-level (domain /
     * source / URL) variant: the key hashes through the portable
@@ -37,8 +34,7 @@ object Sampling {
     * boundary.
     */
   def bucketBy(key: Column, seed: Long): Column =
-    pmod(graft.functions.PortableTokenHash(key) * Mult + seed,
-      lit(Mod)) % Buckets
+    PortableHash(PortableTokenHash(key), seed) % Buckets
 
   /** [[assignSplit]] keyed on a string GROUP column: all rows of one
     * group (site, source, author) take the same split — the
@@ -142,7 +138,7 @@ object Sampling {
       .crossJoin(broadcast(n1))
       .withColumn("slot", explode(sequence(lit(1), lit(k))))
       .withColumn("negative",
-        pmod(col("anchor") * lit(2654435761L) +
+        pmod(col("anchor") * lit(PortableHash.Mult) +
           (lit(seed) + col("slot").cast("long") * lit(1000003L)),
           col("__n")))
       .where(col("negative") =!= col("anchor") &&
@@ -347,8 +343,7 @@ object Sampling {
       out: String = "cum_tokens"): DataFrame = {
     require(budget > 0, s"budget $budget")
     val withTok = df.withColumn("__tok", tokens.cast("long"))
-      .withColumn("__h", pmod(col(id).cast("long") * Mult + seed,
-        lit(Mod)))
+      .withColumn("__h", PortableHash(col(id), seed))
     graft.ops.ScanOps.prefixSums(withTok, "__h",
         Seq(out -> col("__tok")))
       .where(col(out) <= budget)
@@ -451,29 +446,14 @@ object Sampling {
     * recomputes the identical fold over the concatenated pair.
     */
   private val bigramBuckets = udf { (toks: Seq[String], k: Int) =>
-    val P = 1000000007L
     val n = if (toks == null) 0 else toks.length
     if (n < 2) Seq.empty[Int]
     else {
+      import PortableTokenHash.fold
       val out = new Array[Int](n - 1)
       var i = 0
       while (i < n - 1) {
-        var h = 0L
-        val a = toks(i)
-        var j = 0
-        while (j < a.length) {
-          val cp = a.codePointAt(j)
-          h = (h * 31L + cp) % P
-          j += Character.charCount(cp)
-        }
-        h = (h * 31L + 32L) % P
-        val b = toks(i + 1)
-        j = 0
-        while (j < b.length) {
-          val cp = b.codePointAt(j)
-          h = (h * 31L + cp) % P
-          j += Character.charCount(cp)
-        }
+        val h = fold(fold(fold(0L, toks(i)), " "), toks(i + 1))
         out(i) = (h % k).toInt
         i += 1
       }

@@ -1,5 +1,6 @@
 package graft.llmdata
 
+import graft.functions.{PortableHash, PortableTokenHash}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -209,12 +210,12 @@ object Sketches {
   /** Count-Min sketch (Cormode & Muthukrishnan 2005) with PORTABLE
     * hash rows — unlike the usual murmur-seeded CMS, every cell of
     * this sketch is an exact function of the data: row i's index is
-    * `((h * (2654435761 + 2i) + (97 + 1000003i)) mod 1e9+7) mod w`
-    * over the char-code polynomial token hash, so ANY engine rebuilds
-    * the ENTIRE sketch bit-for-bit (the q194 oracle does) — the same
+    * `h_i(t) mod w` — the portable id hash
+    * ([[graft.functions.PortableHash]], seed 97, k = i) over the
+    * char-code polynomial token hash — so ANY engine rebuilds the
+    * ENTIRE sketch bit-for-bit (the q194 oracle does): the same
     * auditability the MG/GK/Bloom families carry, extended to the
-    * sketch's internal state. Products stay under 2^63 (h < 1e9+7,
-    * multiplier < 2^32).
+    * sketch's internal state.
     *
     * Construction is one pass: each token emits its `depth` (row,
     * idx) cells via an inline explode (no repeated scans), and the
@@ -227,12 +228,7 @@ object Sketches {
       width: Int): DataFrame = {
     require(depth >= 1 && depth <= 8, s"countMin: depth $depth")
     require(width >= 2, s"countMin: width $width")
-    val h = graft.functions.PortableTokenHash(col(tokenCol))
-    val cells = explode(array((0 until depth).map { i =>
-      struct(lit(i.toLong).as("row"),
-        pmod(h * lit(2654435761L + 2L * i) + lit(97L + 1000003L * i),
-          lit(1000000007L)).mod(lit(width.toLong)).as("idx"))
-    }: _*)).as("__cell")
+    val cells = cmsCells(col(tokenCol), depth, width)
     tokens.where(col(tokenCol).isNotNull && col(tokenCol) =!= "")
       .select(cells)
       .groupBy(col("__cell.row").as("row"), col("__cell.idx").as("idx"))
@@ -268,35 +264,38 @@ object Sketches {
       .where(col(tokenCol).isNotNull && col(tokenCol) =!= "")
       .groupBy((grpCols :+ tokenCol).map(col): _*)
       .agg(count(lit(1)).as("__f"))
-    val h = graft.functions.PortableTokenHash(col(tokenCol))
-    val cells = explode(array((0 until depth).map { i =>
-      struct(lit(i.toLong).as("row"),
-        pmod(h * lit(2654435761L + 2L * i) + lit(97L + 1000003L * i),
-          lit(1000000007L)).mod(lit(width.toLong)).as("idx"))
-    }: _*)).as("__cell")
+    val cells = cmsCells(col(tokenCol), depth, width)
     census.select(grpCols.map(col) ++ Seq(col("__f"), cells): _*)
       .groupBy(grpCols.map(col) ++ Seq(col("__cell.row").as("row"),
         col("__cell.idx").as("idx")): _*)
       .agg(max(col("__f")).as("c"))
   }
 
-  /** Point estimates from a (possibly grouped) conservative or plain
-    * CMS: min over rows per (group, token); cells absent from the
-    * sketch read 0.
+  /** The `depth` (row, idx) cells of a token: row i's index is the
+    * portable id hash with seed 97 and k = i of the token's char-code
+    * polynomial, mod `width`. Exploded, aliased `__cell`.
     */
-  def countMinEstimateBy(cms: DataFrame, tokens: Seq[String],
+  private def cmsCells(token: Column, depth: Int, width: Int): Column = {
+    val h = PortableTokenHash(token)
+    explode(array((0 until depth).map { i =>
+      struct(lit(i.toLong).as("row"),
+        PortableHash(h, 97L, lit(i.toLong)).mod(lit(width.toLong))
+          .as("idx"))
+    }: _*)).as("__cell")
+  }
+
+  /** Point estimates from a (possibly grouped) conservative or plain
+    * CMS for a literal token set: min over rows per (group, token);
+    * cells absent from the sketch read 0.
+    */
+  def countMinEstimate(cms: DataFrame, tokens: Seq[String],
       depth: Int, width: Int, grpCols: Seq[String] = Nil): DataFrame = {
     val spark = cms.sparkSession
     import spark.implicits._
     val probes0 = tokens.toDF("token")
-      .select(col("token"), explode(array((0 until depth).map { i =>
-        struct(lit(i.toLong).as("row"),
-          pmod(graft.functions.PortableTokenHash(col("token")) *
-            lit(2654435761L + 2L * i) + lit(97L + 1000003L * i),
-            lit(1000000007L)).mod(lit(width.toLong)).as("idx"))
-      }: _*)).as("__p"))
-      .select(col("token"), col("__p.row").as("row"),
-        col("__p.idx").as("idx"))
+      .select(col("token"), cmsCells(col("token"), depth, width))
+      .select(col("token"), col("__cell.row").as("row"),
+        col("__cell.idx").as("idx"))
     val probes = if (grpCols.isEmpty) probes0
       else cms.select(grpCols.map(col): _*).distinct()
         .crossJoin(probes0)
@@ -334,9 +333,9 @@ object Sketches {
     * et al. 2002; Beyer et al. 2007) — the mergeable
     * distinct-counting summary that, unlike HLL, also supports SET
     * OPERATIONS (intersection / Jaccard between segments) because it
-    * retains actual hash samples. Keys map through the portable
-    * multiplicative hash ((id·2654435761 + seed) mod 1e9+7 — the
-    * q70 lattice, replayable on any engine), DISTINCT per segment,
+    * retains actual hash samples. Keys map through the portable id
+    * hash ([[graft.functions.PortableHash]] — the q70 lattice,
+    * replayable on any engine), DISTINCT per segment,
     * and each segment keeps its k smallest hashes via a per-segment
     * rank window (WindowGroupLimit — the top-k never fully sorts).
     * Purely deterministic integer arithmetic: the sketch, and
@@ -353,14 +352,9 @@ object Sketches {
   def kmv(df: DataFrame, segment: String, key: Column, k: Int,
       seed: Long = 42L): DataFrame = {
     require(k >= 16, s"kmv: k $k too small for a stable estimate")
-    // Pre-reduce the key mod 1e9+7 BEFORE the multiply: a raw id
-    // ≥ ~3.4e9 would overflow id·2654435761 as a long under ANSI
-    // (the q314 kFoldOls class) — reduction first keeps the product
-    // < 1e9+7 · 2.7e9 < 2^62 and leaves hashes of small keys
-    // unchanged. Null segments are dropped (documented contract,
-    // matching the streaming build in kmvSketchStream).
-    val h = pmod(pmod(key.cast("long"), lit(1000000007L)) *
-      lit(2654435761L) + lit(seed), lit(1000000007L))
+    // Null segments are dropped (documented contract, matching the
+    // streaming build in kmvSketchStream).
+    val h = PortableHash(key, seed)
     val hashes = df.select(col(segment).as("segment"), h.as("h"))
       .where(col("segment").isNotNull)
       .distinct()
@@ -434,24 +428,5 @@ object Sketches {
         floor(col("est_union").cast("double") *
           col("jaccard_ppm").cast("double") / lit(1000000.0))
           .cast("long"))
-  }
-
-  /** CMS point estimate for a literal token set: min over rows. */
-  def countMinEstimate(cms: DataFrame, tokens: Seq[String], depth: Int,
-      width: Int): DataFrame = {
-    val spark = cms.sparkSession
-    import spark.implicits._
-    val probes = tokens.toDF("token")
-      .select(col("token"), explode(array((0 until depth).map { i =>
-        struct(lit(i.toLong).as("row"),
-          pmod(graft.functions.PortableTokenHash(col("token")) *
-            lit(2654435761L + 2L * i) + lit(97L + 1000003L * i),
-            lit(1000000007L)).mod(lit(width.toLong)).as("idx"))
-      }: _*)).as("__p"))
-      .select(col("token"), col("__p.row").as("row"),
-        col("__p.idx").as("idx"))
-    probes.join(cms, Seq("row", "idx"), "left")
-      .groupBy(col("token"))
-      .agg(min(coalesce(col("c"), lit(0L))).as("estimate"))
   }
 }

@@ -142,13 +142,8 @@ object Eval {
     require(k >= 2, s"kFoldOls: k=$k")
     def isum(c: Column) = sum(c.cast("decimal(38,10)")).cast("double")
     // the engine's portable id hash (the q70 sampling convention) so
-    // fold membership replays on any engine. The id is REDUCED mod
-    // 1e9+7 BEFORE the multiplicative step: a raw id ≥ ~3.4e9 (hit
-    // by sf1's composite lineitem ids) overflows id·2654435761 under
-    // ANSI — caught by the r11 sf1 bench capture
-    val fold = pmod(pmod(pmod(id.cast("long"), lit(1000000007L)) *
-      lit(2654435761L) + lit(42L),
-      lit(1000000007L)), lit(k.toLong))
+    // fold membership replays on any engine
+    val fold = pmod(graft.functions.PortableHash(id, 42L), lit(k.toLong))
     val rows = df.select(fold.as("fold"),
       x.cast("double").as("__x"), y.cast("double").as("__y"))
     // pinned: per-fold moments feed both the totals aggregate and the
@@ -465,8 +460,7 @@ object Eval {
       seqCols: Seq[Column], state: Column): DataFrame = {
     require(seqCols.nonEmpty, "nextEventAccuracy: empty seq order")
     val w = Window.partitionBy(col("__k")).orderBy(seqCols: _*)
-    val hash = pmod(pmod(col("__k") * lit(2654435761L) + lit(42L),
-      lit(1000000007L)), lit(2L))
+    val hash = pmod(graft.functions.PortableHash(col("__k"), 42L), lit(2L))
     val pairs = graft.Caches.pin(df
       .select((key.cast("long").as("__k") +: state.as("__st") +:
         seqCols): _*)
@@ -1228,8 +1222,7 @@ object Eval {
       s"splitConformal: alphaPpm $alphaPpm")
     require(calPpm > 0 && calPpm < 1000000L,
       s"splitConformal: calPpm $calPpm")
-    val h = pmod(pmod(id.cast("long"), lit(1000000007L)) *
-      lit(2654435761L) + lit(seed), lit(1000000007L))
+    val h = graft.functions.PortableHash(id, seed)
     val rows = df.select(residualQ.cast("long").as("__r"),
       (pmod(h, lit(1000000L)) < calPpm).as("__cal"))
     val census = graft.Caches.pin(rows.groupBy(col("__r")).agg(

@@ -927,8 +927,8 @@ object Experiment {
     * terms, and p_ppm = (1 + #{|S_k| >= |S_obs|})·1e6 div (K+1).
     * Signs come from the per-rep MULTIPLIER hash (the
     * [[poissonBootstrapCi]] convention — an additive-only seed
-    * would correlate the K flip patterns): parity of
-    * (id·(2654435761 + 2k) + seed + k·1000003) mod 1e9+7.
+    * would correlate the K flip patterns): parity of the portable id
+    * hash h_k(id) ([[graft.functions.PortableHash]], k = the rep).
     *
     * Shape: one explode of K rep-ids per pair feeds STRAIGHT into a
     * partial aggregation keyed by rep — map-side CPU is K·rows but
@@ -947,16 +947,7 @@ object Experiment {
     val obs = rows.agg(count(lit(1)).cast("long").as("n_pairs"),
       coalesce(sum(dec(col("__d"))), lit(0).cast("decimal(38,0)"))
         .as("__obs"))
-    // The id is pre-reduced mod 1e9+7 BEFORE the multiplier so the
-    // product is bounded by ~2.7e18 < 2^63 for ANY id domain (the
-    // raw product would wrap silently past id ~ 3.5e9, and the
-    // DuckDB replay would raise instead of wrapping — cross-engine
-    // drift). For ids < 1e9+7 the reduction is the identity, so the
-    // hash stream is unchanged.
-    val h = pmod(pmod(col("__id"), lit(1000000007L)) *
-      (lit(2654435761L) + lit(2L) * col("__k").cast("long")) +
-      (lit(seed) + col("__k").cast("long") * lit(1000003L)),
-      lit(1000000007L))
+    val h = graft.functions.PortableHash(col("__id"), seed, col("__k"))
     val perms = rows
       .withColumn("__k", explode(sequence(lit(1), lit(nPerms))))
       .select(col("__k"),
@@ -987,14 +978,8 @@ object Experiment {
     // additive-only seed shifts u by a near-constant per b, leaving
     // the B resamples almost perfectly correlated — the multiplier
     // must vary with b for the memberships to decorrelate
-    // id pre-reduced mod 1e9+7 (the signFlipTest convention): the
-    // reduced id times the largest multiplier stays under 2^62, so
-    // the product can't wrap Long for ids >= ~3.5e9 — where Spark
-    // would silently overflow and a DuckDB replay would raise
-    val u = pmod(pmod(col("__id"), lit(1000000007L)) *
-      (lit(2654435761L) + lit(2L) * col("__b").cast("long")) +
-      (lit(seedBase) + col("__b").cast("long") * lit(1000003L)),
-      lit(1000000007L)) % lit(1000000L)
+    val u = graft.functions.PortableHash(col("__id"), seedBase,
+      col("__b")) % lit(1000000L)
     val m = cuts.zipWithIndex.foldRight(lit(6L)) {
       case ((c, i), acc) => when(u < c, lit(i.toLong)).otherwise(acc)
     }

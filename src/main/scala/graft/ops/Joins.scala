@@ -33,9 +33,8 @@ object Joins {
   }
 
   def join(left: DataFrame, right: DataFrame, on: String, joinType: String,
-      defaults: Map[String, Any] = Map.empty,
-      rejectFloatKey: Boolean = true): DataFrame =
-    joinMulti(left, right, Seq(on), joinType, defaults, rejectFloatKey)
+      defaults: Map[String, Any] = Map.empty): DataFrame =
+    joinMulti(left, right, Seq(on), joinType, defaults)
 
   /** Multi-key generalization of [[join]] (the reference is single-key;
     * SURVEY §2.4 lists multi-key as a Spark-free extension): same
@@ -45,14 +44,13 @@ object Joins {
     * default-fill and duplicate-drop are vacuous for them.
     */
   def joinMulti(left: DataFrame, right: DataFrame, on: Seq[String],
-      joinType: String, defaults: Map[String, Any] = Map.empty,
-      rejectFloatKey: Boolean = true): DataFrame = {
+      joinType: String, defaults: Map[String, Any] = Map.empty)
+      : DataFrame = {
     require(on.nonEmpty, "joinMulti: at least one key")
     on.foreach { k =>
       val keyType = left.schema(k).dataType.typeName
-      if (rejectFloatKey)
-        require(keyType != "double" && keyType != "float",
-          s"join: float key '$k' rejected (gdata.go:1486-1499)")
+      require(keyType != "double" && keyType != "float",
+        s"join: float key '$k' rejected (gdata.go:1486-1499)")
       require(right.schema.fieldNames.contains(k),
         s"join: key '$k' must exist on both sides")
     }

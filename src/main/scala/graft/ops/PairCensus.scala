@@ -82,8 +82,7 @@ private[graft] object PairCensus {
       else km.join(kept.select(col("key")), Seq("key"), "left_semi")
     val rows =
       if (sample) {
-        val h = pmod(pmod(col("member"), lit(1000000007L)) *
-          lit(2654435761L) + lit(42L), lit(1000000007L))
+        val h = graft.functions.PortableHash(col("member"), 42L)
         val w = Window.partitionBy(col("key")).orderBy(h, col("member"))
         keptRows.withColumn("__hr", row_number().over(w))
           .where(col("__hr") <= cap).select(col("key"), col("member"))

@@ -513,11 +513,18 @@ object Streams {
     }.toDF("channel", "p_conv_q", "p_removed_q", "removal_ppm")
   }
 
-  def lastTouchAttribution(events: DataFrame, conversionType: String,
-      touchTypes: Seq[String], maxDelaySec: Long): DataFrame = {
+  /** The prelude every attribution model shares: checks its
+    * arguments, and splits `events` into the conversions and the
+    * touches, both with a non-null `ts`; touches dedupe to one per
+    * (user, ts), the max event_id, so each model's winner is
+    * deterministic.
+    */
+  private def conversionsAndTouches(site: String, events: DataFrame,
+      conversionType: String, touchTypes: Seq[String],
+      maxDelaySec: Long): (DataFrame, DataFrame) = {
     require(touchTypes.nonEmpty && !touchTypes.contains(conversionType),
-      s"lastTouchAttribution: touches $touchTypes vs $conversionType")
-    require(maxDelaySec > 0, s"lastTouchAttribution: $maxDelaySec")
+      s"$site: touches $touchTypes vs $conversionType")
+    require(maxDelaySec > 0, s"$site: $maxDelaySec")
     val conv = events.where(col("event_type") === conversionType &&
       col("ts").isNotNull)
     val w = org.apache.spark.sql.expressions.Window
@@ -528,8 +535,15 @@ object Streams {
         col("ts").isNotNull)
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
-      .select(col("user_id"), col("ts").as("touch_ts"),
-        col("event_type").as("touch_type"))
+    (conv, touches)
+  }
+
+  def lastTouchAttribution(events: DataFrame, conversionType: String,
+      touchTypes: Seq[String], maxDelaySec: Long): DataFrame = {
+    val (conv, deduped) = conversionsAndTouches("lastTouchAttribution",
+      events, conversionType, touchTypes, maxDelaySec)
+    val touches = deduped.select(col("user_id"), col("ts").as("touch_ts"),
+      col("event_type").as("touch_type"))
     val matched = graft.ops.Joins.asofJoin(conv, touches, "user_id",
         leftTime = "ts", rightTime = "touch_ts",
         payload = Seq("touch_type"))
@@ -556,24 +570,13 @@ object Streams {
     */
   def positionAttribution(events: DataFrame, conversionType: String,
       touchTypes: Seq[String], maxDelaySec: Long): DataFrame = {
-    require(touchTypes.nonEmpty && !touchTypes.contains(conversionType),
-      s"positionAttribution: touches $touchTypes vs $conversionType")
-    require(maxDelaySec > 0, s"positionAttribution: $maxDelaySec")
+    val (convs, deduped) = conversionsAndTouches("positionAttribution",
+      events, conversionType, touchTypes, maxDelaySec)
     val W = org.apache.spark.sql.expressions.Window
-    val conv = events.where(col("event_type") === conversionType &&
-        col("ts").isNotNull)
-      .select(col("user_id"), col("event_id").as("conv_id"),
-        col("ts").as("conv_ts"))
-    val wDedup = W.partitionBy(col("user_id"), col("ts"))
-      .orderBy(col("event_id").desc)
-    val touches = events
-      .where(col("event_type").isin(touchTypes: _*) &&
-        col("ts").isNotNull)
-      .withColumn("__rn", row_number().over(wDedup))
-      .where(col("__rn") === 1)
-      .select(col("user_id"), col("ts").as("touch_ts"),
-        col("event_type").as("channel"),
-        col("event_id").as("touch_id"))
+    val conv = convs.select(col("user_id"), col("event_id").as("conv_id"),
+      col("ts").as("conv_ts"))
+    val touches = deduped.select(col("user_id"), col("ts").as("touch_ts"),
+      col("event_type").as("channel"), col("event_id").as("touch_id"))
     val j = conv.join(touches, Seq("user_id"))
       .where(col("touch_ts") <= col("conv_ts") &&
         col("touch_ts") >=
@@ -617,21 +620,10 @@ object Streams {
     */
   def firstTouchAttribution(events: DataFrame, conversionType: String,
       touchTypes: Seq[String], maxDelaySec: Long): DataFrame = {
-    require(touchTypes.nonEmpty && !touchTypes.contains(conversionType),
-      s"firstTouchAttribution: touches $touchTypes vs $conversionType")
-    require(maxDelaySec > 0, s"firstTouchAttribution: $maxDelaySec")
-    val conv = events.where(col("event_type") === conversionType &&
-      col("ts").isNotNull)
-    val dw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"), col("ts"))
-      .orderBy(col("event_id").desc)
-    val touches = events
-      .where(col("event_type").isin(touchTypes: _*) &&
-        col("ts").isNotNull)
-      .withColumn("__rn", row_number().over(dw))
-      .where(col("__rn") === 1)
-      .select(col("user_id"), col("ts"),
-        col("event_type").as("__touch"))
+    val (conv, deduped) = conversionsAndTouches("firstTouchAttribution",
+      events, conversionType, touchTypes, maxDelaySec)
+    val touches = deduped.select(col("user_id"), col("ts"),
+      col("event_type").as("__touch"))
     val uni = conv
       .withColumn("__touch", lit(null).cast("string"))
       .select(col("user_id"), col("ts"), col("__touch"),
@@ -868,9 +860,7 @@ object Streams {
     val ss = rows.sparkSession
     import ss.implicits._
     rows.select(col(segmentCol).cast("string").as("segment"),
-        pmod(pmod(col(keyCol).cast("long"), lit(1000000007L)) *
-          lit(2654435761L) + lit(seed),
-          lit(1000000007L)).as("h"))
+        graft.functions.PortableHash(col(keyCol), seed).as("h"))
       .where(col("segment").isNotNull)
       .as[(String, Long)]
       .groupByKey(_._1)

@@ -253,6 +253,27 @@ class EvalSpec extends SparkSuite {
     assert(got("z") == ((0L, 1L, None, 0L, 0.0)), s"got $got")
   }
 
+  test("nextEventAccuracy: user ids past Long.MaxValue / 2654435761 " +
+      "split by the same portable hash without overflowing") {
+    // exact h(u) = (u·2654435761 + 42) mod 1e9+7; even -> train
+    def parity(u: Long) =
+      ((BigInt(u) * 2654435761L + 42) mod 1000000007L) mod 2
+    assert(parity(4000000002L) == 0 && parity(4000000000L) == 1)
+    val ev = Seq(
+      (4000000002L, 1, "a"), (4000000002L, 2, "b"),
+      (4000000000L, 1, "a"), (4000000000L, 2, "b"), (4000000000L, 3, "c"))
+      .toDF("u", "ord", "et")
+    val got = Eval.nextEventAccuracy(ev, col("u"), Seq(col("ord")),
+        col("et"))
+      .collect().map(r => r.getAs[String]("state") ->
+        ((r.getAs[Long]("n_train_pairs"), r.getAs[Long]("n_test_pairs"),
+          Option(r.getAs[String]("predicted")),
+          r.getAs[Long]("n_correct"))))
+      .toMap
+    assert(got == Map("a" -> ((1L, 1L, Some("b"), 1L)),
+      "b" -> ((0L, 1L, None, 0L))), s"got $got")
+  }
+
   test("invPhiUpper: inside the A&S 4.5e-4 envelope at the standard " +
       "planning quantiles") {
     val r = Seq(0.025, 0.2, 0.05, 0.005).toDF("p")

@@ -186,24 +186,54 @@ class GuardSpec extends SparkSuite {
       maxPerBlock = 0).count() == 3L)
   }
 
+  /** Every main source file, by name, with its text. */
+  private lazy val mainSources: Seq[(String, String)] = {
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    files(new java.io.File("src/main/scala")).map { f =>
+      val s = scala.io.Source.fromFile(f, "UTF-8")
+      try f.getPath -> s.mkString finally s.close()
+    }
+  }
+
+  private def fileName(path: String) = new java.io.File(path).getName
+
   test("no hand-written largest-group guard outside Guard.scala") {
     val idioms = Seq("require(worst", ".agg(coalesce(max(col(\"count\"))")
-    def sources(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val files = sources(new java.io.File("src/main/scala"))
-    assert(files.exists(_.getName == "Guard.scala"),
+    assert(mainSources.exists(s => fileName(s._1) == "Guard.scala"),
       "main sources not found")
     val offenders = for {
-      f <- files if f.getName != "Guard.scala"
-      src = {
-        val s = scala.io.Source.fromFile(f, "UTF-8")
-        try s.mkString finally s.close()
-      }
+      (path, src) <- mainSources if fileName(path) != "Guard.scala"
       idiom <- idioms if src.contains(idiom)
-    } yield s"${f.getPath}: $idiom"
+    } yield s"$path: $idiom"
     assert(offenders.isEmpty,
       s"hand-written skew guards: ${offenders.mkString("; ")} — call " +
         "graft.ops.Guard and add a GuardSpec row")
+  }
+
+  test("the portable id hash's multiplier 2654435761 is written only " +
+      "in the hash module") {
+    // exempt: the hash module itself, and the catalog files, whose
+    // DuckDB oracle SQL spells the formula out as the contract
+    def exempt(name: String) = name == "PortableTokenHash.scala" ||
+      (name.startsWith("Queries") && name.endsWith(".scala"))
+    // the one other site: Dedup.portableMinhashes' per-seed JVM
+    // multiplier A_i = (i·2654435761) mod P, minhash mixing (not h_k)
+    val allowed = Set("Dedup.scala" ->
+      "val a = ((m + 1).toLong * 2654435761L) % P")
+    def code(src: String) = src.replaceAll("(?s)/\\*.*?\\*/", "")
+      .linesIterator.map(_.replaceAll("//.*", "").trim)
+    assert(mainSources.exists(s => fileName(s._1) ==
+      "PortableTokenHash.scala"), "main sources not found")
+    val offenders = (for {
+      (path, src) <- mainSources if !exempt(fileName(path))
+      line <- code(src) if line.contains("2654435761") &&
+        !allowed(fileName(path) -> line)
+    } yield path).distinct.sorted
+    assert(offenders.isEmpty,
+      s"hand-copied portable id hash in ${offenders.size} files: " +
+        s"${offenders.mkString(", ")} — call " +
+        "graft.functions.PortableHash")
   }
 }

@@ -1497,6 +1497,59 @@ class LlmDataSpec extends SparkSuite {
     assert(again == rows.map(_._1).toSet)
   }
 
+  /** h_k(x) = (x·(2654435761 + 2k) + seed + k·1000003) mod 1e9+7 in
+    * exact integers — the portable id hash's definition of record.
+    */
+  private def hashRef(x: Long, seed: Long, k: Long = 0L): Long =
+    ((BigInt(x) * (BigInt(2654435761L) + 2 * k) + seed + k * 1000003L)
+      mod 1000000007L).toLong
+
+  test("PortableHash equals the exact-integer h_k at the edges of the " +
+      "id, k and seed domains (no long overflow anywhere)") {
+    import graft.functions.PortableHash
+    val ids = Seq(Long.MinValue, -4000000000L, -5L, 0L, 5L, 1000000006L,
+      1000000007L, 3474701542L, 3474701543L, 4000000000L, Long.MaxValue)
+    val ks = Seq(0L, 1L, 7L, 9999L)
+    val grid = (for (x <- ids; k <- ks) yield (x, k)).toDF("x", "k")
+    for (seed <- Seq(0L, 42L, 97L, Long.MaxValue)) {
+      val got = grid.select(col("x"), col("k"),
+          PortableHash(col("x"), seed, col("k")).as("h"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(got.length == ids.size * ks.size)
+      got.foreach { case (x, k, h) =>
+        assert(h == hashRef(x, seed, k), s"h_$k($x) seed $seed")
+      }
+    }
+    // k defaults to 0: the plain sampling hash
+    assert(Seq(4000000000L).toDF("x")
+      .select(PortableHash(col("x"), 42L)).head().getLong(0) ==
+      hashRef(4000000000L, 42L))
+  }
+
+  /** Ids past Long.MaxValue / 2654435761, where the raw product
+    * id·2654435761 overflows a long.
+    */
+  private val bigIds = Seq(1L, 2L, 3L, 4L, 3474701543L, 4000000000L,
+    4000000001L, 4000000002L, Long.MaxValue)
+
+  test("hashSample keeps the exact-hash half of ids past " +
+      "Long.MaxValue / 2654435761 without overflowing") {
+    val kept = Sampling.hashSample(bigIds.toDF("id"), "id", 0.5)
+      .collect().map(_.getLong(0)).toSet
+    assert(kept ==
+      bigIds.filter(i => hashRef(i, 42L) % 1000000L < 500000L).toSet)
+  }
+
+  test("sampleToTokenBudget orders ids past Long.MaxValue / " +
+      "2654435761 by the exact hash without overflowing") {
+    val docs = bigIds.map(i => (i, "w w")).toDF("doc_id", "text")
+    val got = Sampling.sampleToTokenBudget(docs, "doc_id",
+        TextAnalysis.tokenCountWs(col("text")), budget = 9L)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    // 2 tokens each: the first 4 ids in hash order fit a budget of 9
+    assert(got == bigIds.sortBy(hashRef(_, 42L)).take(4).toSet)
+  }
+
   /** Adversarial inputs for the UDF-vs-Column parity contracts:
     * unicode lowercase mappings (Kelvin sign -> k), already-lowercase
     * non-ASCII (long s, sharp s), combining marks, supplementary-
@@ -1532,6 +1585,9 @@ class LlmDataSpec extends SparkSuite {
       val viaPlan = df.where(col("s") === s)
         .select(PortableTokenHash(col("s"))).head().getLong(0)
       assert(viaEval == viaPlan, s"interpreted != codegen on '$s'")
+      // the JVM String fold (minhash shingles, hashed bigrams)
+      assert(PortableTokenHash.fold(0L, s) == viaEval,
+        s"String fold != UTF-8 fold on '$s'")
     }
     // null propagates
     val n = Seq((0L, null: String)).toDF("i", "s")

@@ -250,7 +250,7 @@ class SketchesSpec extends SparkSuite {
     val probe = (0 until 30).map(i => s"w$i")
     val pEst = Sketches.countMinEstimate(plain, probe, depth, width)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val cEst = Sketches.countMinEstimateBy(cons, probe, depth, width)
+    val cEst = Sketches.countMinEstimate(cons, probe, depth, width)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val truth = words.groupBy(identity).view.mapValues(_.size.toLong)
     probe.foreach { t =>
@@ -268,7 +268,7 @@ class SketchesSpec extends SparkSuite {
       (words.map(("s1", _)) ++ Seq.fill(9)(("s2", "w0")))
         .toDF("source", "tok"),
       "tok", depth, width, grpCols = Seq("source"))
-    val gEst = Sketches.countMinEstimateBy(grouped, Seq("w0"), depth,
+    val gEst = Sketches.countMinEstimate(grouped, Seq("w0"), depth,
         width, grpCols = Seq("source"))
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         r.getLong(2)).toMap
