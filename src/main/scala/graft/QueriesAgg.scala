@@ -392,7 +392,6 @@ object QueriesAgg {
         col("l_suppkey"), col("l_extendedprice"))
       val w = Window.partitionBy(col("l_orderkey")).orderBy(ord: _*)
       val before = w.rowsBetween(Window.unboundedPreceding, 0)
-      val c = new exprlang.Compiler(read(s, dir, "lineitem"), None)
       val x = lit(1.0) + col("l_discount")
       val idx0 = round(col("l_discount") * 100, 0).cast("int")
       val idx = when(idx0.between(0, 10), idx0).otherwise(raise_error(
@@ -409,7 +408,7 @@ object QueriesAgg {
         pow(lit(1.0 + v / 100.0),
           shiftright(sig, v * 5).bitwiseAND(lit(31L)).cast("double"))
       }.reduce(_ * _)
-      val logSum = c.windowProduct(x, before)
+      val logSum = exprlang.Compiler.windowProduct(x, before)
       val gated = when(k > 31, raise_error(lit(
           "q28: frame exceeds 31 rows — signature packing saturates")))
         .when(

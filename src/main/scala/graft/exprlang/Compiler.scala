@@ -23,45 +23,29 @@ import org.apache.spark.sql.functions._
   * Everything compiles to built-in codegen'd functions — no UDFs in
   * the row path.
   *
-  * Order-dependent scale shape: with `partitionSafe = true` (the
-  * [[Formula.addToPipe]] path), order functions window over a
-  * seq-range BUCKET partition instead of one global unpartitioned
-  * window, and the cross-bucket carry (prefix sums, previous bucket's
-  * last row) comes from a per-bucket aggregate — O(#buckets) rows —
-  * prefix-scanned and broadcast-joined back by [[Formula.addToPipe]].
-  * The compiler records what that aggregate must compute in
-  * [[auxAggColumns]]/[[auxJoinedColumns]]. With `partitionSafe =
-  * false` (the bare [[Formula.column]] path, which cannot stage a
-  * join) the legacy whole-frame window is used — fine for small
-  * frames, a single-partition funnel at scale.
+  * Order-dependent scale shape: order functions window over a
+  * seq-range BUCKET partition (the frame carries [[Compiler.Bucket]]),
+  * never one global unpartitioned window, and the cross-bucket carry
+  * (prefix sums, previous bucket's last row) comes from a per-bucket
+  * aggregate — O(#buckets) rows — prefix-scanned and broadcast-joined
+  * back by [[Formula.addToPipe]]'s staging. The compiler records what
+  * that aggregate must compute in [[auxAggColumns]]/
+  * [[auxJoinedColumns]].
   */
-class Compiler(df: DataFrame, seqCol: Option[String],
-    partitionSafe: Boolean = false) {
+class Compiler(df: DataFrame, seqCol: Option[String]) {
   import Expr._
   import Compiler.Bucket
 
   private def seqName: String = seqCol.getOrElse(
     throw new IllegalStateException(
       "order-dependent function needs an explicit row order (seq column)"))
-  private def w: WindowSpec = {
-    // the bare-Column path has nowhere to stage the bucket aggregate;
-    // surface the single-partition funnel instead of silently
-    // shipping it (use Formula.addToPipe for the partition-safe plan)
-    if (!partitionSafe && !Compiler.warnedGlobalWindow.getAndSet(true))
-      System.err.println("[graft] WARN: order-dependent formula " +
-        "function compiled via Formula.column uses an UNPARTITIONED " +
-        "window (whole frame through one task). Use Formula.addToPipe " +
-        "for the partition-safe bucketed plan.")
-    Window.orderBy(col(seqName).asc)
-  }
-  private def pw: WindowSpec =
+  private def w: WindowSpec =
     Window.partitionBy(col(Bucket)).orderBy(col(seqName).asc)
-  private def ow: WindowSpec = if (partitionSafe) pw else w
-  private def before = ow.rowsBetween(Window.unboundedPreceding, 0)
-  private def after = ow.rowsBetween(0, Window.unboundedFollowing)
+  private def before = w.rowsBetween(Window.unboundedPreceding, 0)
+  private def after = w.rowsBetween(0, Window.unboundedFollowing)
 
   // ---- aux registry: per-bucket aggregates + their cross-bucket scan
-  // columns, materialized by Formula.addToPipe (partition-safe mode)
+  // columns, materialized by Formula.addToPipe's staging
   private val auxAggs =
     scala.collection.mutable.LinkedHashMap[String, Column]()
   private val auxJoined =
@@ -117,7 +101,7 @@ class Compiler(df: DataFrame, seqCol: Option[String],
     * column.
     */
   private def globalRow: Column =
-    row_number().over(pw).cast("double") - 1.0 +
+    row_number().over(w).cast("double") - 1.0 +
       coalesce(prefixAux(lit(1L), "before").cast("double"), lit(0.0))
 
   /** Date literal formats CCYYMMDD and MM/DD/CCYY (parser.go:71). */
@@ -326,39 +310,23 @@ class Compiler(df: DataFrame, seqCol: Option[String],
         val miss =
           if (args.length > 1) castLike(compileExpr(args(1)), x)
           else lit(null)
-        if (partitionSafe)
-          // within-bucket lag; the first row of each bucket takes the
-          // previous bucket's last value; the global first row (both
-          // null) falls through to `missing`
-          coalesce(lag(x, 1).over(pw), prevLastAux(x), miss)
-        else coalesce(lag(x, 1).over(w), miss)
-      case "row" =>
-        if (partitionSafe) globalRow
-        else row_number().over(w).cast("double") - 1.0
-      case "countBefore" =>
-        if (partitionSafe) globalRow + 1.0
-        else count(lit(1)).over(before).cast("double")
+        // within-bucket lag; the first row of each bucket takes the
+        // previous bucket's last value; the global first row (both
+        // null) falls through to `missing`
+        coalesce(lag(x, 1).over(w), prevLastAux(x), miss)
+      case "row" => globalRow
+      case "countBefore" => globalRow + 1.0
       case "countAfter" =>
-        if (partitionSafe)
-          coalesce(prefixAux(lit(1L), "all").cast("double"), lit(0.0)) -
-            globalRow
-        else count(lit(1)).over(after).cast("double")
+        coalesce(prefixAux(lit(1L), "all").cast("double"), lit(0.0)) -
+          globalRow
       case "cumeBefore" =>
-        if (partitionSafe)
-          sum(d(0)).over(before) +
-            coalesce(prefixAux(d(0), "before").cast("double"), lit(0.0))
-        else sum(d(0)).over(before)
+        sum(d(0)).over(before) +
+          coalesce(prefixAux(d(0), "before").cast("double"), lit(0.0))
       case "cumeAfter" =>
-        if (partitionSafe)
-          sum(d(0)).over(after) +
-            coalesce(prefixAux(d(0), "after").cast("double"), lit(0.0))
-        else sum(d(0)).over(after)
-      case "prodBefore" =>
-        if (partitionSafe) windowProductPS(d(0), before, "before")
-        else windowProduct(d(0), before)
-      case "prodAfter" =>
-        if (partitionSafe) windowProductPS(d(0), after, "after")
-        else windowProduct(d(0), after)
+        sum(d(0)).over(after) +
+          coalesce(prefixAux(d(0), "after").cast("double"), lit(0.0))
+      case "prodBefore" => windowProductPS(d(0), before, "before")
+      case "prodAfter" => windowProductPS(d(0), after, "after")
 
       // ---- summary level: whole-frame scalar (parser.go:749-786),
       // batched into one aggregate job per formula via sAgg/scalarAgg
@@ -511,36 +479,20 @@ class Compiler(df: DataFrame, seqCol: Option[String],
     scala.util.Try(df.select(like).schema.head.dataType)
       .map(c.cast).getOrElse(c)
 
-  /** Windowed running product from built-ins only: zero if the frame
-    * contains a zero, else sign via (-1)^negatives times
-    * exp(sum(log|x|)) — handles zeros and negatives that the naive
-    * log-sum trick cannot (SURVEY §4.2).
-    */
-  def windowProduct(x: Column, frame: WindowSpec): Column = {
-    val zeros = sum(when(x === 0.0, 1L).otherwise(0L)).over(frame)
-    val negs = sum(when(x < 0.0, 1L).otherwise(0L)).over(frame)
-    val mag = exp(sum(when(x =!= 0.0, log(abs(x)))).over(frame))
-    when(zeros > 0, 0.0)
-      .otherwise(when(pmod(negs, lit(2L)) === 1L, -mag).otherwise(mag))
-  }
-
-  /** Partition-safe windowProduct: the three running accumulators
-    * (zero count, negative count, sum of log|x|) each get a
-    * within-bucket window plus a cross-bucket offset.
+  /** Bucketed [[Compiler.windowProduct]]: the three running
+    * accumulators (zero count, negative count, sum of log|x|) each get
+    * a within-bucket window plus a cross-bucket offset.
     */
   private def windowProductPS(x: Column, frame: WindowSpec,
       mode: String): Column = {
-    val zeroInd = when(x === 0.0, 1L).otherwise(0L)
-    val negInd = when(x < 0.0, 1L).otherwise(0L)
-    val logm = when(x =!= 0.0, log(abs(x)))
-    val zeros = sum(zeroInd).over(frame) +
-      coalesce(prefixAux(zeroInd, mode).cast("long"), lit(0L))
-    val negs = sum(negInd).over(frame) +
-      coalesce(prefixAux(negInd, mode).cast("long"), lit(0L))
-    val mag = exp(coalesce(sum(logm).over(frame), lit(0.0)) +
-      coalesce(prefixAux(logm, mode).cast("double"), lit(0.0)))
-    when(zeros > 0, 0.0)
-      .otherwise(when(pmod(negs, lit(2L)) === 1L, -mag).otherwise(mag))
+    val (zeroInd, negInd, logm) = Compiler.productTerms(x)
+    Compiler.productClose(
+      sum(zeroInd).over(frame) +
+        coalesce(prefixAux(zeroInd, mode).cast("long"), lit(0L)),
+      sum(negInd).over(frame) +
+        coalesce(prefixAux(negInd, mode).cast("long"), lit(0L)),
+      exp(coalesce(sum(logm).over(frame), lit(0.0)) +
+        coalesce(prefixAux(logm, mode).cast("double"), lit(0.0))))
   }
 
   /** r2 = 1 - sse/((n-1)*var(y)) (parser.go:768-778). Its three
@@ -638,14 +590,36 @@ object Financial {
 }
 
 object Compiler {
-  /** Seq-range bucket column used by the partition-safe window path. */
+  /** Seq-range bucket column every order-function window partitions by. */
   val Bucket = "__fbkt"
 
-  /** Once-per-JVM latch for the bare-Column global-window warning. */
-  private[exprlang] val warnedGlobalWindow =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
+  /** Windowed running product from built-ins only: zero if the frame
+    * contains a zero, else sign via (-1)^negatives times
+    * exp(sum(log|x|)) — handles zeros and negatives that the naive
+    * log-sum trick cannot (SURVEY §4.2).
+    */
+  def windowProduct(x: Column, frame: WindowSpec): Column = {
+    val (zeroInd, negInd, logm) = productTerms(x)
+    productClose(sum(zeroInd).over(frame), sum(negInd).over(frame),
+      exp(sum(logm).over(frame)))
+  }
 
-  /** Rows per bucket for partition-safe order functions: small enough
+  /** The running product's per-row terms: zero indicator, negative
+    * indicator, log|x| (null at zero).
+    */
+  private def productTerms(x: Column): (Column, Column, Column) = (
+    when(x === 0.0, 1L).otherwise(0L), when(x < 0.0, 1L).otherwise(0L),
+    when(x =!= 0.0, log(abs(x))))
+
+  /** Zero if any factor is zero, else the magnitude signed by the
+    * parity of the negative count.
+    */
+  private def productClose(zeros: Column, negs: Column,
+      mag: Column): Column =
+    when(zeros > 0, 0.0)
+      .otherwise(when(pmod(negs, lit(2L)) === 1L, -mag).otherwise(mag))
+
+  /** Rows per bucket for order functions: small enough
     * that one bucket is one task's worth of work, large enough that
     * the per-bucket aggregate (one row per bucket) stays tiny — 1e12
     * rows is ~1e6 bucket rows.
@@ -657,8 +631,7 @@ object Compiler {
 
   /** Functions that compile to a row-order running window. The bare
     * [[Formula.column]] path has nowhere to stage the per-bucket
-    * aggregate the partition-safe plan needs, so it refuses these
-    * unless the caller explicitly opts into the whole-frame window.
+    * aggregate their bucketed plan needs, so it refuses these.
     */
   val OrderFunctions: Set[String] = Set("lag", "row",
     "countBefore", "countAfter", "cumeBefore", "cumeAfter",
@@ -679,41 +652,20 @@ object Compiler {
   */
 object Formula {
   /** Compile to a bare Column. Order-dependent functions (lag/row/
-    * cume/prod/count) are REFUSED here: a bare Column has nowhere to
-    * stage the per-bucket aggregate the partition-safe plan needs, so
-    * the only compilation would be an unpartitioned whole-frame
-    * window — a single-task funnel at scale. Use [[addToPipe]] (the
-    * partition-safe path), or pass `allowGlobalWindow = true` as an
-    * explicit small-frame escape hatch.
+    * cume/prod/count) are REFUSED here: their bucketed window needs a
+    * per-bucket aggregate joined back onto the frame, and a bare
+    * Column has nowhere to stage that join. Use [[addToPipe]].
     */
   def column(df: DataFrame, formula: String,
-      seqCol: Option[String] = None,
-      allowGlobalWindow: Boolean = false): Column = {
+      seqCol: Option[String] = None): Column = {
     val ast = Parser.parse(formula)
-    if (!allowGlobalWindow && Compiler.usesOrderFunction(ast))
+    if (Compiler.usesOrderFunction(ast))
       throw new IllegalArgumentException(
         "Formula.column: order-dependent function in \"" + formula +
-          "\" would compile to an UNPARTITIONED whole-frame window " +
-          "(single-task funnel at scale). Use Formula.addToPipe for " +
-          "the partition-safe bucketed plan, or pass " +
-          "allowGlobalWindow = true for a small frame.")
+          "\" needs the bucketed staging of Formula.addToPipe.")
     new Compiler(df, seqCol).compile(ast)
   }
 
-  /** addToPipe: materialize the formula as a new column.
-    *
-    * Order-dependent functions (lag/row/cume/prod/count) are compiled
-    * partition-safe: rows are bucketed by seq range (`bucketWidth`
-    * rows per bucket), windows partition by bucket, and the
-    * cross-bucket carry comes from a per-bucket aggregate — one row
-    * per bucket — prefix-scanned and broadcast-joined back. No step
-    * moves more than O(#buckets) rows through a single partition.
-    *
-    * Numeric note: double-typed running sums associate as
-    * (within-bucket) + (bucket totals); results can differ from a
-    * strictly sequential scan in the last ulp once a frame spans
-    * multiple buckets. Integer accumulators are exact.
-    */
   /** Constant-fold an integer scalar argument (range bounds are almost
     * always literals); None when the expression needs frame data.
     */
@@ -729,18 +681,33 @@ object Formula {
     case _ => None
   }
 
-  /** A range bound: constant-folded, else evaluated on the frame's
-    * first row (the reference takes element 0 of the evaluated vector,
-    * parser.go:1377-1378 via ranger's Any2Int32).
+  /** Add compiled columns to the frame — the one plan every formula
+    * output takes. With a row order: add the seq-range bucket column
+    * (`bucketWidth` rows per bucket), compile every output with ONE
+    * [[Compiler]], aggregate its per-bucket aux columns once,
+    * broadcast-join their prefix scan back, add the outputs, and drop
+    * the helper columns. Without one there is no bucket, and an order
+    * function fails for want of a seq column.
     */
-  private def scalarLong(df: DataFrame, seqCol: Option[String],
-      e: Expr): Long = constLong(e).getOrElse {
-    val c = new Compiler(df, seqCol).compile(e).cast("long")
-    val first = seqCol match {
-      case Some(s) => df.where(col(s) === 0).select(c)
-      case None => df.select(c).limit(1)
-    }
-    first.head().getLong(0)
+  private def staged(df: DataFrame, seqCol: Option[String],
+      bucketWidth: Long, outs: (String, Compiler => Column)*): DataFrame = {
+    val df1 = seqCol.fold(df)(s => df.withColumn(Compiler.Bucket,
+      floor(col(s).cast("double") / lit(bucketWidth.toDouble))
+        .cast("long")))
+    val cmp = new Compiler(df1, seqCol)
+    val cols = outs.map { case (n, build) => n -> build(cmp) }
+    val joined =
+      if (cmp.needsAux) {
+        val aggs = cmp.auxAggColumns
+        val aggDf = df1.groupBy(col(Compiler.Bucket))
+          .agg(aggs.head, aggs.tail: _*)
+        val scanned = aggDf.select(
+          col(Compiler.Bucket) +: cmp.auxJoinedColumns: _*)
+        df1.join(broadcast(scanned), Seq(Compiler.Bucket), "left")
+      } else df1
+    val out = cols.foldLeft(joined) { case (d, (n, c)) => d.withColumn(n, c) }
+    seqCol.fold(out)(_ =>
+      out.drop(Compiler.Bucket +: cmp.auxJoinedNames: _*))
   }
 
   /** Direction-aware bounds of range(a, b): (start, delta, length).
@@ -751,9 +718,31 @@ object Formula {
     if (b > a) (a, 1L, b - a) else (a, -1L, a - b)
   }
 
+  /** addToPipe: materialize the formula as a new column.
+    *
+    * Order-dependent functions (lag/row/cume/prod/count) compile to
+    * the bucketed plan: rows are bucketed by seq range (`bucketWidth`
+    * rows per bucket), windows partition by bucket, and the
+    * cross-bucket carry comes from a per-bucket aggregate — one row
+    * per bucket — prefix-scanned and broadcast-joined back. No step
+    * moves more than O(#buckets) rows through a single partition.
+    *
+    * Numeric note: double-typed running sums associate as
+    * (within-bucket) + (bucket totals); results can differ from a
+    * strictly sequential scan in the last ulp once a frame spans
+    * multiple buckets. Integer accumulators are exact.
+    */
   def addToPipe(df: DataFrame, name: String, formula: String,
       seqCol: Option[String] = None,
-      bucketWidth: Long = Compiler.DefaultBucketWidth): DataFrame =
+      bucketWidth: Long = Compiler.DefaultBucketWidth): DataFrame = {
+    // a range bound: constant-folded, else evaluated on the frame's
+    // first row (the reference takes element 0 of the evaluated
+    // vector, parser.go:1377-1378 via ranger's Any2Int32)
+    def bound(e: Expr): Long = constLong(e).getOrElse {
+      val v = staged(df, seqCol, bucketWidth, "__bound" -> (_.compile(e)))
+      seqCol.fold(v.limit(1))(s => v.where(col(s) === 0))
+        .select(col("__bound").cast("long")).head().getLong(0)
+    }
     (seqCol, Parser.parse(formula)) match {
       // root-level range: name = range(a, b) (reference ranger,
       // parser.go:682-723). The sequence is closed-form in the row
@@ -764,8 +753,7 @@ object Formula {
       // REPLACED by the range (parser_test.go:836-858, where a 1-row
       // pipe becomes the 10-row range(0,10) pipe).
       case (optS, Expr.Call("range", List(ae, be))) =>
-        val (a, delta, len) = rangeSpec(
-          scalarLong(df, optS, ae), scalarLong(df, optS, be))
+        val (a, delta, len) = rangeSpec(bound(ae), bound(be))
         if (len == 1) df.withColumn(name, lit(a))
         else {
           val s = optS.getOrElse(throw new IllegalStateException(
@@ -781,60 +769,38 @@ object Formula {
             s"range: length $len does not match pipe rows $n " +
               "(and the pipe is not a 1-row pipe to replace)")
         }
-      // index(x, range(a, b)) with a full-length range: the gather
-      // positions are closed-form in seq, so the slab never exists as
-      // data — e.g. range(n-1, -1) reverses the column. Lengths must
-      // match (the reference's Index output is indices-length,
-      // data.go:640-659; AddToPipe cannot hold a mismatched field).
-      case (Some(s), Expr.Call("index",
-          List(xe, Expr.Call("range", List(ae, be))))) =>
-        val (a, delta, len) = rangeSpec(
-          scalarLong(df, seqCol, ae), scalarLong(df, seqCol, be))
-        val n = df.count()
-        require(n == len,
-          s"index(x, range): range length $len != pipe rows $n")
-        val cmp = new Compiler(df, seqCol)
-        val staged = df.withColumn("__gather_x", cmp.compile(xe))
-          .withColumn("__gather_i", lit(a) + lit(delta) * col(s).cast("long"))
-        val frame = graft.frame.SeaFrame(staged,
-          graft.types.FeatureSchema.empty, Some(s),
-          knownCount = Some(n))
-        graft.ops.Gather.index(frame, "__gather_x", "__gather_i")
-          .withColumnRenamed("__gather_x_at___gather_i", name)
-          .drop("__gather_x", "__gather_i")
       // root-level gather: name = x[idx] (reference Index,
       // parser.go:1379, data.go:641-660) — a join of the positions
       // against the frame's sequence, not a Column expression; both
-      // argument expressions may themselves be formulas
+      // argument expressions may themselves be formulas. With a
+      // full-length range as the positions, index(x, range(a, b)),
+      // they are closed-form in seq, so the slab never exists as data
+      // — e.g. range(n-1, -1) reverses the column. Lengths must match
+      // (the reference's Index output is indices-length,
+      // data.go:640-659; AddToPipe cannot hold a mismatched field).
       case (Some(s), Expr.Call("index", List(xe, ie))) =>
-        val cmp = new Compiler(df, seqCol)
-        val staged = df.withColumn("__gather_x", cmp.compile(xe))
-          .withColumn("__gather_i", cmp.compile(ie))
-        val frame = graft.frame.SeaFrame(staged,
-          graft.types.FeatureSchema.empty, Some(s))
+        val (positions, knownCount) = ie match {
+          case Expr.Call("range", List(ae, be)) =>
+            val (a, delta, len) = rangeSpec(bound(ae), bound(be))
+            val n = df.count()
+            require(n == len,
+              s"index(x, range): range length $len != pipe rows $n")
+            ((_: Compiler) => lit(a) + lit(delta) * col(s).cast("long"),
+              Some(n))
+          case _ => ((c: Compiler) => c.compile(ie), None)
+        }
+        val frame = graft.frame.SeaFrame(
+          staged(df, seqCol, bucketWidth,
+            "__gather_x" -> (_.compile(xe)), "__gather_i" -> positions),
+          graft.types.FeatureSchema.empty, Some(s),
+          knownCount = knownCount)
         graft.ops.Gather.index(frame, "__gather_x", "__gather_i")
           .withColumnRenamed("__gather_x_at___gather_i", name)
           .drop("__gather_x", "__gather_i")
-      case (None, _) =>
-        df.withColumn(name, column(df, formula, None))
-      case (Some(s), _) =>
-        val df1 = df.withColumn(Compiler.Bucket,
-          floor(col(s).cast("double") / lit(bucketWidth.toDouble))
-            .cast("long"))
-        val cmp = new Compiler(df1, seqCol, partitionSafe = true)
-        val outCol = cmp.compile(Parser.parse(formula))
-        val staged =
-          if (cmp.needsAux) {
-            val aggs = cmp.auxAggColumns
-            val aggDf = df1.groupBy(col(Compiler.Bucket))
-              .agg(aggs.head, aggs.tail: _*)
-            val scanned = aggDf.select(
-              col(Compiler.Bucket) +: cmp.auxJoinedColumns: _*)
-            df1.join(broadcast(scanned), Seq(Compiler.Bucket), "left")
-          } else df1
-        staged.withColumn(name, outCol)
-          .drop(Compiler.Bucket +: cmp.auxJoinedNames: _*)
+      case (_, ast) =>
+        staged(df, seqCol, bucketWidth, name -> (_.compile(ast)))
     }
+  }
 
   /** Loop(var, start, end): iterative re-evaluation with an integer
     * loop variable substituted each pass, results assigned back into

@@ -137,10 +137,13 @@ object Sampling {
     df.select(col(id).as("anchor"), positive.as("positive"))
       .crossJoin(broadcast(n1))
       .withColumn("slot", explode(sequence(lit(1), lit(k))))
+      // exact in decimal(38,0): the long product overflows for
+      // anchors >= 3474701543, and pre-reducing mod n changes nothing
+      // (n > every anchor)
       .withColumn("negative",
-        pmod(col("anchor") * lit(PortableHash.Mult) +
+        pmod(col("anchor").cast("decimal(38,0)") * lit(PortableHash.Mult) +
           (lit(seed) + col("slot").cast("long") * lit(1000003L)),
-          col("__n")))
+          col("__n")).cast("long"))
       .where(col("negative") =!= col("anchor") &&
         col("negative") =!= col("positive"))
       .select(col("anchor"), col("positive"), col("slot"),

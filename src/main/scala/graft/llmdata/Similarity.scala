@@ -477,6 +477,21 @@ object Similarity {
     if (n == 0.0) v else v.map(_ / n)
   }
 
+  /** The `p` cells nearest `v` by cosine, nearest first: dot of the
+    * normalized `v` with each normalized centroid in `cn` over the
+    * shorter length, ranked by (-score, cell).
+    */
+  private def nearestCells(cn: Array[Array[Double]], v: Array[Double],
+      p: Int): Array[Int] = {
+    val x = normalizeD(v)
+    cn.zipWithIndex.map { case (c, i) =>
+      var s = 0.0; var j = 0
+      val n = math.min(x.length, c.length)
+      while (j < n) { s += x(j) * c(j); j += 1 }
+      (-s, i)
+    }.sorted.take(p).map(_._2)
+  }
+
   /** `assign` > 1 indexes every corpus vector under its `assign`
     * nearest cells (multi-assignment): the index grows `assign`-fold
     * but recall at a fixed probe count rises sharply — the standard
@@ -502,13 +517,7 @@ object Similarity {
       else {
         val cn = centers.map(normalizeD)
         val topCells = udf { (v: Seq[Float]) =>
-          val x = normalizeD(v.toArray.map(_.toDouble))
-          cn.zipWithIndex.map { case (c, i) =>
-            var s = 0.0; var j = 0
-            val n = math.min(x.length, c.length)
-            while (j < n) { s += x(j) * c(j); j += 1 }
-            (-s, i)
-          }.sorted.take(assign).map(_._2)
+          nearestCells(cn, v.toArray.map(_.toDouble), assign)
         }
         df.select(col(id), col(vec),
           explode(topCells(col(vec).cast("array<float>"))).as("__cell"))
@@ -516,17 +525,6 @@ object Similarity {
     feat.unpersist(blocking = false)
     IvfIndex(centers, assigned)
   }
-
-  /** IVF ANN top-k with multi-probe: rank the LEARNED cells by cosine
-    * to the query (driver-side — O(nCells * dim)), scan only the top
-    * `probes` cells, exact-rescore inside them. Recall grows with
-    * `probes`; probes = nCells degrades gracefully to brute force.
-    */
-  def ivfTopK(df: DataFrame, id: String, vec: String, nCells: Int,
-      query: Array[Float], k: Int, probes: Int = 4,
-      maxIter: Int = 20, seed: Long = 42L): DataFrame =
-    ivfProbe(ivfFit(df, id, vec, nCells, maxIter, seed),
-      id, vec, query, k, probes)
 
   /** Serve a query SET in one job (the batch serving path): rank
     * cells per query with the broadcast centroid matrix (a tight UDF
@@ -543,13 +541,7 @@ object Similarity {
     val cn = index.centroids.map(normalizeD)
     val p = math.max(1, probes)
     val topCells = udf { (v: Seq[Float]) =>
-      val x = normalizeD(v.toArray.map(_.toDouble))
-      cn.zipWithIndex.map { case (c, i) =>
-        var s = 0.0; var j = 0
-        val n = math.min(x.length, c.length)
-        while (j < n) { s += x(j) * c(j); j += 1 }
-        (-s, i)
-      }.sorted.take(p).map(_._2)
+      nearestCells(cn, v.toArray.map(_.toDouble), p)
     }
     val qcells = queries.select(col(qid).as("__qid"),
       col(qvec).as("__qv"),
@@ -637,16 +629,8 @@ object Similarity {
     */
   def ivfProbe(index: IvfIndex, id: String, vec: String,
       query: Array[Float], k: Int, probes: Int): DataFrame = {
-    val qn = normalizeD(query.map(_.toDouble))
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    val probeCells = index.centroids.zipWithIndex
-      .sortBy { case (c, i) => (-dot(qn, normalizeD(c)), i) }
-      .take(math.max(1, probes)).map(_._2.asInstanceOf[Any]).toSeq
+    val probeCells = nearestCells(index.centroids.map(normalizeD),
+      query.map(_.toDouble), math.max(1, probes)).toSeq
     val q = array(query.toIndexedSeq.map(v => lit(v.toDouble)): _*)
     index.assigned
       .where(col("__cell").isin(probeCells: _*))
@@ -997,16 +981,8 @@ object Similarity {
   def ivfPqTopK(index: IvfPqIndex, df: DataFrame, id: String,
       vec: String, query: Array[Float], k: Int, probes: Int,
       shortlist: Int = 0): DataFrame = {
-    val qn = normalizeD(query.map(_.toDouble))
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    val probeCells = index.centroids.zipWithIndex
-      .sortBy { case (c, i) => (-dot(qn, normalizeD(c)), i) }
-      .take(math.max(1, probes)).map(_._2.asInstanceOf[Any]).toSeq
+    val probeCells = nearestCells(index.centroids.map(normalizeD),
+      query.map(_.toDouble), math.max(1, probes)).toSeq
     val sl = if (shortlist > 0) shortlist else 5 * k
     val cand = pqTopK(
       index.encoded.where(col("__cell").isin(probeCells: _*)),

@@ -393,6 +393,25 @@ class LlmDataSpec extends SparkSuite {
     assert(a.sorted.sameElements(b.sorted))
   }
 
+  test("negativeSamples: anchors past the long product's range hash " +
+      "exactly (BigInt reference)") {
+    import graft.llmdata.Sampling
+    val ids = Seq(1L, 4000000000L, 4000000000000000000L)
+    val n = BigInt(ids.max) + 1
+    val df = ids.map(i => (i, ((BigInt(i) + 1) % n).toLong))
+      .toDF("id", "pos")
+    val got = Sampling.negativeSamples(df, "id", col("pos"), k = 3)
+      .collect().map(r => (r.getLong(0), r.getInt(2), r.getLong(3)))
+      .sorted.toSeq
+    val want = (for {
+      (a, p) <- ids.map(i => (i, ((BigInt(i) + 1) % n).toLong))
+      s <- 1 to 3
+      neg = ((BigInt(a) * 2654435761L + 97 + s * 1000003L) % n).toLong
+      if neg != a && neg != p
+    } yield (a, s, neg)).sorted
+    assert(got == want)
+  }
+
   test("ipfWeights: DataFrame half-steps equal an independent " +
       "sequential integer fold; margins approach both targets") {
     import graft.llmdata.Sampling

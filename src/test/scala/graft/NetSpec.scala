@@ -327,6 +327,28 @@ class NetSpec extends SparkSuite {
     assert(p.size == 2 && math.abs(p.toArray.sum - 1.0) < 1e-9)
   }
 
+  test("saveNative -> loadNative round trip: the loaded model scores " +
+      "a frame to the same predictions") {
+    import spark.implicits._
+    val df = (1 to 90).map(i =>
+      (i.toLong, i / 45.0 - 1.0, Seq("a", "b", "c")(i % 3), i % 2))
+      .toDF("id", "x1", "cat", "y")
+    val layers = ModSpec.parse(Seq("Input(x1 + catoh)",
+      "FC(size:6, activation:relu)", "FC(size:2, activation:SoftMax)",
+      "Target(y)"))
+    val m = ModSpec.fitNative(layers, df, classification = true,
+      nClasses = 2, cfg = Net.Config(batchSize = 30, epochs = 20))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_native").toString + "/model"
+    ModSpec.saveNative(m, dir)
+    val loaded = ModSpec.loadNative(dir)
+    assert(loaded.targetCol == "y")
+    def scores(n: ModSpec.NativeModel) = n.transform(df)
+      .orderBy("id").select("__prediction", "__predicted_class")
+      .collect().toSeq
+    assert(scores(loaded) == scores(m))
+  }
+
   private def featFrame(x: Array[Array[Double]], y: Array[Double]) = {
     import spark.implicits._
     val toVec = udf { a: Seq[Double] =>

@@ -2,6 +2,7 @@ package graft
 
 import graft.exprlang.Formula
 import graft.ops.ScanOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,8 +44,8 @@ class PartitionSafeSpec extends SparkSuite {
     }
   }
 
-  test("bare Formula.column REFUSES order functions (no silent " +
-      "unpartitioned window); escape hatch compiles the legacy plan") {
+  test("bare Formula.column REFUSES order functions (no whole-frame " +
+      "window)") {
     val f = frame
     val ex = intercept[IllegalArgumentException] {
       Formula.column(f, "cumeBefore(x)", Some("__seq"))
@@ -57,29 +58,53 @@ class PartitionSafeSpec extends SparkSuite {
     // order-free formulas still compile bare
     val ok = f.select(Formula.column(f, "x + y", Some("__seq")).as("s"))
     assert(ok.count() == 10)
-    // the explicit escape hatch still produces correct values
-    val esc = f.select(Formula.column(f, "cumeBefore(x)", Some("__seq"),
-      allowGlobalWindow = true).as("c"), col("__seq")).orderBy("__seq")
-    val got = esc.select("c").collect().map(_.getDouble(0))
-    val want = (0 until 10).map(i => (i % 5 + 1).toDouble)
-      .scanLeft(0.0)(_ + _).tail
-    assert(got.toSeq == want)
   }
 
-  test("addToPipe plans no single-partition window over the data " +
-      "(every seq-ordered WindowExec is partitioned)") {
-    val big = (0 until 1000).map(i => (i.toLong, i.toDouble))
-      .toDF("__seq", "x")
-    val out = Formula.addToPipe(big, "out",
-      "cumeBefore(x) + lag(x, 0) + row(x)", Some("__seq"), bucketWidth = 100L)
-    val plan = out.queryExecution.executedPlan
-    val offenders = plan.collect {
+  /** Seq-ordered windows with no partition spec in `out`'s final
+    * adaptive plan (executed first, query stages walked).
+    */
+  private def unpartitionedSeqWindows(out: DataFrame): Seq[WindowExec] = {
+    out.collect()
+    planNodes(out.queryExecution.executedPlan).collect {
       case w: WindowExec
           if w.orderSpec.exists(_.child.toString.contains("__seq")) &&
             w.partitionSpec.isEmpty => w
     }
+  }
+
+  private def big = (0 until 1000).map(i => (i.toLong, i.toDouble))
+    .toDF("__seq", "x")
+
+  test("addToPipe plans no single-partition window over the data " +
+      "(every seq-ordered WindowExec is partitioned)") {
+    val out = Formula.addToPipe(big, "out",
+      "cumeBefore(x) + lag(x, 0) + row(x)", Some("__seq"), bucketWidth = 100L)
+    val offenders = unpartitionedSeqWindows(out)
     assert(offenders.isEmpty,
       s"unpartitioned seq-ordered windows:\n${offenders.mkString("\n")}")
+  }
+
+  test("index(x, ...) operands compile to the bucketed window: " +
+      "gathered running sums and lags are exact, no unpartitioned " +
+      "seq-ordered window") {
+    val n = 1000
+    // x = seq, so cumeBefore(x)[k] = k(k+1)/2 and lag(x, 0)[k] = k-1
+    // (0 at k = 0); positions i = 7·seq + 3 mod n scatter every read
+    val withPos = big.withColumn("i", (col("__seq") * 7 + 3) % n)
+    val pos = (0 until n).map(r => (r * 7 + 3) % n)
+    val run = (0 until n).map(k => k.toDouble * (k + 1) / 2)
+    val lagged = (0 until n).map(k => if (k == 0) 0.0 else k - 1.0)
+    Seq(("index(cumeBefore(x), i)", pos.map(run)),
+      ("index(lag(x, 0), i)", pos.map(lagged)),
+      ("index(cumeBefore(x), range(999, -1))", run.reverse)).foreach {
+      case (f, want) =>
+        val out = Formula.addToPipe(withPos, "out", f, Some("__seq"),
+          bucketWidth = 100L)
+        val offenders = unpartitionedSeqWindows(out)
+        assert(offenders.isEmpty, s"$f: unpartitioned seq-ordered " +
+          s"windows:\n${offenders.mkString("\n")}")
+        assert(col1(out, "out") == want, f)
+    }
   }
 
   test("lag crosses bucket boundaries with the previous bucket's last " +

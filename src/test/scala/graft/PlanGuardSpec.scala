@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
-  AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+  ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 
 /** Plan-shape regression guards: the optimizations the engine's scale
@@ -491,17 +491,12 @@ class PlanGuardSpec extends SparkSuite {
       keys.foreach(conf.set(_, "true"))
       val df = graft.ops.Graph.commonNeighbors(adj, minCommon = 1L)
       df.queryExecution.toRdd.count() // finalize the adaptive plan
-      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-        case s: QueryStageExec => nodes(s.plan)
-        case _ => p.children.flatMap(nodes)
-      })
       def feed(p: SparkPlan): SparkPlan = p match {
         case _: ShuffleQueryStageExec | _: AQEShuffleReadExec => p
         case _ => feed(p.children.head)
       }
       val root = df.queryExecution.executedPlan
-      val counts = nodes(root).collect {
+      val counts = planNodes(root).collect {
         case a: BaseAggregateExec
             if a.groupingExpressions.map(_.name) == Seq("a", "b") => a
       }

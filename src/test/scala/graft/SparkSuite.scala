@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for every suite (sbt runs suites in
@@ -29,4 +32,15 @@ abstract class SparkSuite extends AnyFunSuite {
 
   def col1(df: DataFrame, c: String): Seq[Any] =
     df.orderBy("__seq").select(c).collect().map(_.get(0)).toSeq
+
+  /** Every node of a physical plan, walking into the adaptive plan's
+    * current plan and each query stage's plan — a plain
+    * `executedPlan.collect` sees only the `AdaptiveSparkPlanExec`
+    * leaf. Execute the frame first so the adaptive plan is final.
+    */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec => planNodes(s.plan)
+    case _ => p.children.flatMap(planNodes)
+  })
 }
